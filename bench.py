@@ -88,28 +88,16 @@ def main() -> None:
     except Exception:
         pass
 
-    # r9 (additions-only measurement fix, flagged in OPTIMIZATION_r09.md):
-    # stage the stream-source directories BEFORE the timed region.  The
-    # staging is input-layout setup for simulating a file stream (a
-    # /tmp dir with a _STAGED sentinel, reused across runs); a cold
-    # machine used to pay it inside the first stream query's wall while
-    # a warm one did not, adding /tmp-state-dependent noise to exactly
-    # the queries that dominate the suite tail.  Query semantics and
-    # the timed work per trigger are unchanged.
+    # Stage every stream-source input (the events symlink dir and each
+    # multi-batch replay layout: /tmp dirs with a _STAGED sentinel,
+    # reused across runs) BEFORE the timed region.  A cold machine would
+    # otherwise pay the staging inside the first stream query's wall
+    # while a warm one does not.  Query semantics and the timed work per
+    # trigger are unchanged.
     try:
-        from skdist_spark.streaming.ops import (
-            _stage_all_doc_batches,
-            _stage_doc_batches,
-            _stage_embedding_batches,
-            _stage_ordered_stream,
-            _stage_stream_dir,
-        )
+        from skdist_spark.streaming.ops import stage_stream_inputs
 
-        _stage_stream_dir(sf_dir)
-        _stage_ordered_stream(spark, sf_dir)
-        _stage_doc_batches(spark, sf_dir)
-        _stage_all_doc_batches(spark, sf_dir)
-        _stage_embedding_batches(spark, sf_dir)
+        stage_stream_inputs(spark, sf_dir)
     except Exception as exc:  # pragma: no cover
         print(f"# stream staging warmup skipped: {exc}", file=sys.stderr)
 

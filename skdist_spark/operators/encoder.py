@@ -100,12 +100,10 @@ _DEFAULT_ENCODERS = {
 
 
 def _fit_transformer_task(task, shared):
-    from pyspark import cloudpickle
-
     name, trans = shared["transformers"][task["idx"]]
     trans = clone(trans)
     trans.fit(shared["X"], shared["y"])
-    return cloudpickle.dumps((name, trans))
+    return name, trans
 
 
 class Encoderizer(BaseEstimator, TransformerMixin):
@@ -183,8 +181,6 @@ class Encoderizer(BaseEstimator, TransformerMixin):
 
     # -- fit/transform -------------------------------------------------
     def fit(self, X, y=None):
-        import pickle
-
         Xp = self._process_input(X, fit=True)
         transformers = (
             list(self.transformer_list)
@@ -193,8 +189,9 @@ class Encoderizer(BaseEstimator, TransformerMixin):
         )
         tasks = [{"idx": i} for i in range(len(transformers))]
         shared = {"transformers": transformers, "X": Xp, "y": y}
-        payloads = run_tasks(self.sc, tasks, _fit_transformer_task, shared, self.partitions)
-        self.transformer_list = [pickle.loads(p) for p in payloads]
+        self.transformer_list = run_tasks(
+            self.sc, tasks, _fit_transformer_task, shared, self.partitions
+        )
         self.transformer_lengths = [
             np.asarray(t.transform(Xp.head(2))).shape[1] for _, t in self.transformer_list
         ]

@@ -76,9 +76,7 @@ def get_oof(clf, X, y, n_splits=5, sc=None, partitions="auto"):
     return model, oof
 
 
-def _fit_tree_task(task: dict, shared: dict) -> bytes:
-    from pyspark import cloudpickle as pickle
-
+def _fit_tree_task(task: dict, shared: dict):
     X = np.asarray(shared["X"], dtype=np.float64)
     y = np.asarray(shared["y"])
     seed = task["seed"]
@@ -92,7 +90,7 @@ def _fit_tree_task(task: dict, shared: dict) -> bytes:
         est.fit(X, y, sample_weight=sw)
     else:
         est.fit(X, y)
-    return pickle.dumps(est)
+    return est
 
 
 class _DistBaseForest(BaseEstimator):
@@ -131,8 +129,6 @@ class _DistBaseForest(BaseEstimator):
         )
 
     def _fit_forest(self, X, y):
-        import pickle
-
         ss = np.random.SeedSequence(self.random_state)
         seeds = [int(s) % (2**31 - 1) for s in ss.generate_state(self.n_estimators)]
         tasks = [{"seed": s} for s in seeds]
@@ -142,8 +138,7 @@ class _DistBaseForest(BaseEstimator):
             "base_tree": self._base_tree(),
             "bootstrap": self.bootstrap,
         }
-        payloads = run_tasks(self.sc, tasks, _fit_tree_task, shared, self.partitions)
-        self.estimators_ = [pickle.loads(p) for p in payloads]
+        self.estimators_ = run_tasks(self.sc, tasks, _fit_tree_task, shared, self.partitions)
         strip_spark(self)
         return self
 
@@ -210,9 +205,7 @@ class DistExtraTreesRegressor(DistRandomForestRegressor):
         )
 
 
-def _fit_embed_tree_task(task: dict, shared: dict) -> bytes:
-    from pyspark import cloudpickle as pickle
-
+def _fit_embed_tree_task(task: dict, shared: dict):
     X = np.asarray(shared["X"], dtype=np.float64)
     seed = task["seed"]
     rng = np.random.RandomState(seed)
@@ -224,7 +217,7 @@ def _fit_embed_tree_task(task: dict, shared: dict) -> bytes:
         min_samples_leaf=shared["min_samples_leaf"],
     )
     est.fit(X, y_rand)
-    return pickle.dumps(est)
+    return est
 
 
 class DistRandomTreesEmbedding(BaseEstimator):
@@ -240,8 +233,6 @@ class DistRandomTreesEmbedding(BaseEstimator):
         self.random_state = random_state
 
     def fit(self, X, y=None, sample_weight=None):
-        import pickle
-
         ss = np.random.SeedSequence(self.random_state)
         seeds = [int(s) % (2**31 - 1) for s in ss.generate_state(self.n_estimators)]
         tasks = [{"seed": s} for s in seeds]
@@ -250,8 +241,9 @@ class DistRandomTreesEmbedding(BaseEstimator):
             "max_depth": self.max_depth,
             "min_samples_leaf": self.min_samples_leaf,
         }
-        payloads = run_tasks(self.sc, tasks, _fit_embed_tree_task, shared, self.partitions)
-        self.estimators_ = [pickle.loads(p) for p in payloads]
+        self.estimators_ = run_tasks(
+            self.sc, tasks, _fit_embed_tree_task, shared, self.partitions
+        )
         # map each tree's leaf node-ids to embedding columns
         self._leaf_maps = []
         offset = 0

@@ -22,9 +22,7 @@ def _unwrap_best(est):
     return getattr(est, "best_estimator_", est)
 
 
-def _fit_ovr_task(task: dict, shared: dict) -> bytes:
-    from pyspark import cloudpickle as pickle
-
+def _fit_ovr_task(task: dict, shared: dict):
     X, y = shared["X"], shared["y"]
     cls = task["cls"]
     y_bin = (np.asarray(y) == cls).astype(np.int64)
@@ -43,12 +41,10 @@ def _fit_ovr_task(task: dict, shared: dict) -> bytes:
         idx = np.sort(np.concatenate([pos, neg]))
     est = clone(shared["estimator"])
     est.fit(safe_indexing(X, idx), y_bin[idx], **shared["fit_params"])
-    return pickle.dumps(_unwrap_best(est))
+    return _unwrap_best(est)
 
 
-def _fit_ovo_task(task: dict, shared: bytes) -> bytes:
-    from pyspark import cloudpickle as pickle
-
+def _fit_ovo_task(task: dict, shared: dict):
     X, y = shared["X"], shared["y"]
     a, b = task["pair"]
     y_arr = np.asarray(y)
@@ -57,7 +53,7 @@ def _fit_ovo_task(task: dict, shared: bytes) -> bytes:
     y_bin = (y_arr[idx] == b).astype(np.int64)
     est = clone(shared["estimator"])
     est.fit(safe_indexing(X, idx), y_bin, **shared["fit_params"])
-    return pickle.dumps(_unwrap_best(est))
+    return _unwrap_best(est)
 
 
 class DistOneVsRestClassifier(BaseEstimator, ClassifierMixin):
@@ -90,8 +86,6 @@ class DistOneVsRestClassifier(BaseEstimator, ClassifierMixin):
         self.verbose = verbose
 
     def fit(self, X, y, **fit_params):
-        import pickle
-
         self.classes_ = np.unique(np.asarray(y))
         tasks = [{"cls": c} for c in self.classes_]
         shared = {
@@ -103,8 +97,7 @@ class DistOneVsRestClassifier(BaseEstimator, ClassifierMixin):
             "mn_method": self.method,
             "random_state": self.random_state,
         }
-        payloads = run_tasks(self.sc, tasks, _fit_ovr_task, shared, self.partitions)
-        self.estimators_ = [pickle.loads(p) for p in payloads]
+        self.estimators_ = run_tasks(self.sc, tasks, _fit_ovr_task, shared, self.partitions)
         strip_spark(self)
         return self
 
@@ -152,7 +145,6 @@ class DistOneVsOneClassifier(BaseEstimator, ClassifierMixin):
         self.verbose = verbose
 
     def fit(self, X, y, **fit_params):
-        import pickle
         from itertools import combinations
 
         self.classes_ = np.unique(np.asarray(y))
@@ -164,8 +156,7 @@ class DistOneVsOneClassifier(BaseEstimator, ClassifierMixin):
             "estimator": clone(self.estimator),
             "fit_params": fit_params,
         }
-        payloads = run_tasks(self.sc, tasks, _fit_ovo_task, shared, self.partitions)
-        self.estimators_ = [pickle.loads(p) for p in payloads]
+        self.estimators_ = run_tasks(self.sc, tasks, _fit_ovo_task, shared, self.partitions)
         strip_spark(self)
         return self
 

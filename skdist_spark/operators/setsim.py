@@ -338,8 +338,10 @@ def setsim_join(
                 F.col("db").alias("doc_b"),
                 F.expr(inter).alias("inter"),
                 F.expr(f"la + lb - {inter}").alias("uni"),
+                # BIGINT before the multiply: in INT, inter >= 2148
+                # overflows (an error under ANSI mode)
                 F.expr(
-                    f"CAST(({inter}) * 1000000 div (la + lb - {inter}) AS BIGINT)"
+                    f"CAST({inter} AS BIGINT) * 1000000 div (la + lb - {inter})"
                 ).alias("jaccard_ppm"),
             )
             .orderBy("doc_a", "doc_b")
@@ -398,7 +400,7 @@ def setsim_join(
             F.col("db").alias("doc_b"),
             "inter",
             "uni",
-            F.expr("CAST(inter * 1000000 div uni AS BIGINT)").alias("jaccard_ppm"),
+            F.expr("CAST(inter AS BIGINT) * 1000000 div uni").alias("jaccard_ppm"),
         )
         .orderBy("doc_a", "doc_b")
     )

@@ -20,6 +20,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -116,34 +117,118 @@ def rocksdb_state(spark: SparkSession, changelog_checkpointing: bool = True):
                 spark.conf.set(key, prev)
 
 
-def run_stream_to_df(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
-    """Drain a streaming DataFrame through a memory sink and return the
-    materialized result. Trigger.AvailableNow = process everything
-    currently available, then stop (deterministic for static input).
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Start ``writer`` with Trigger.AvailableNow (process everything
+    currently available, then stop) and block until it has drained.
 
     Stateful operators get a reduced shuffle-partition count for the
     query's lifetime: each state partition pays a state-store +
     Python-worker startup per microbatch, so 32 partitions of tiny
     per-partition state is all fixed cost. (On a real cluster this is
     sized to executor count; state partitioning is fixed at first run
-    by checkpoint anyway.)
+    by checkpoint anyway.)  foreachBatch sinks inherit the count in
+    their per-batch jobs.
     """
-    spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer.trigger(availableNow=True).start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_stream_to_df(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drain a streaming DataFrame through a memory sink and return the
+    materialized result (deterministic for static input)."""
+    spark = stream_df.sparkSession
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    _drain(
+        spark,
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+    )
     return spark.table(name)
+
+
+# Multi-batch replay layouts: a table staged as range-ordered parquet
+# files with ascending mtimes, replayed one file per micro-batch.
+# name -> (stage prefix, cache tag, table, row filter, range keys,
+# file count).  The cache tag is part of the stage path's hash, so a
+# layout change invalidates previously staged dirs.
+_REPLAY_LAYOUTS = {
+    # part i holds the i-th time slice; the event_id tiebreak makes the
+    # replay order TOTAL, so order-sensitive stateful consumers
+    # (stream_user_ewma) fold identically to a batch sort
+    "events": ("seq", "ts-eid", "events", None, ("ts", "event_id"), 4),
+    # incoming half of the ingest funnel (the even half is the corpus)
+    "docs_odd": ("docs_odd", "v1", "documents", "doc_id % 2 = 1", ("doc_id",), 2),
+    # every document in id order: the budget gate's batch ordering
+    "docs_all": ("docs_all", "v1", "documents", None, ("doc_id",), 3),
+    # query half of the ANN enrichment (the even half is the corpus)
+    "emb_odd": ("emb_odd", "v1", "embeddings", "vec_id % 2 = 1", ("vec_id",), 2),
+}
+
+
+def _stage_replay(spark: SparkSession, sf_dir: str, layout: str) -> str:
+    """Stage one ``_REPLAY_LAYOUTS`` entry as range-ordered parquet
+    files with ascending modification times, so a file-source stream
+    with maxFilesPerTrigger=1 replays them as successive micro-batches
+    in key order — on the events layout the watermark then genuinely
+    advances between batches (a single-file replay collapses to one
+    batch, where a watermark can never close anything).  A ``_STAGED``
+    sentinel marks a complete stage, which later calls reuse."""
+    import hashlib
+    import os
+    import shutil
+
+    from ..sources.catalog import load_table
+
+    prefix, tag, table, where, keys, n_files = _REPLAY_LAYOUTS[layout]
+    digest = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:8]
+    stage = f"/tmp/skdist_stream_{prefix}_{digest}"
+    done = os.path.join(stage, "_STAGED")
+    if os.path.exists(done):
+        return stage
+    shutil.rmtree(stage, ignore_errors=True)
+    tmp = stage + "_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    df = load_table(spark, table, sf_dir)
+    if where is not None:
+        df = df.where(where)
+    df.repartitionByRange(n_files, *keys).write.parquet(tmp)
+    os.makedirs(stage, exist_ok=True)
+    parts = sorted(
+        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
+    )
+    base = 1_000_000_000  # deterministic ascending mtimes for source ordering
+    for i, name in enumerate(parts):
+        dst = os.path.join(stage, f"batch_{i:04d}.parquet")
+        shutil.move(os.path.join(tmp, name), dst)
+        os.utime(dst, (base + i, base + i))
+    shutil.rmtree(tmp, ignore_errors=True)
+    open(done, "w").close()
+    return stage
+
+
+def _read_replay(spark: SparkSession, sf_dir: str, layout: str) -> DataFrame:
+    """File-source stream over a staged replay layout, one file per
+    micro-batch.  The staged files come from load_table, so ts is
+    already a normalized session-tz timestamp — the staged footer
+    schema is authoritative."""
+    stage = _stage_replay(spark, sf_dir, layout)
+    return (
+        spark.readStream.schema(spark.read.parquet(stage).schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(stage)
+    )
+
+
+def stage_stream_inputs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """Stage every file-stream input of ``sf_dir`` ahead of the stream
+    queries: the events symlink directory plus each replay layout.
+    Idempotent (staged layouts are reused).  Returns {layout: stage}."""
+    _stage_stream_dir(sf_dir)
+    return {layout: _stage_replay(spark, sf_dir, layout) for layout in _REPLAY_LAYOUTS}
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,48 +770,6 @@ def stream_rollup_maintenance(
     )
 
 
-def _stage_ordered_stream(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Stage the events table as ``n_files`` time-ordered parquet files
-    with ascending modification times, so a file-source stream with
-    maxFilesPerTrigger=1 replays them as successive micro-batches in
-    event-time order — the watermark then genuinely advances between
-    batches (a single-file replay collapses to one batch, where a
-    watermark can never close anything)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources.catalog import load_table
-
-    # cache key includes the staging layout version so a layout change
-    # invalidates previously staged dirs
-    stage = f"/tmp/skdist_stream_seq_{hashlib.md5(f'{sf_dir}:ts-eid'.encode()).hexdigest()[:8]}"
-    done = os.path.join(stage, "_STAGED")
-    if os.path.exists(done):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    tmp = stage + "_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    ev = load_table(spark, "events", sf_dir)
-    # range-partition by (ts, event_id): part-0000i holds the i-th time
-    # slice; the event_id tiebreak makes the replay order TOTAL, so
-    # order-sensitive stateful consumers (stream_user_ewma) fold
-    # identically to a batch sort
-    ev.repartitionByRange(n_files, "ts", "event_id").write.parquet(tmp)
-    os.makedirs(stage, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_000_000_000  # deterministic ascending mtimes for source ordering
-    for i, name in enumerate(parts):
-        dst = os.path.join(stage, f"batch_{i:04d}.parquet")
-        shutil.move(os.path.join(tmp, name), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-    open(done, "w").close()
-    return stage
-
-
 def stream_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode watermarked tumbling windows — the UNBOUNDED-stream
     production pattern, with the watermark doing real work.
@@ -744,13 +787,7 @@ def stream_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # staged files come from load_table, so ts is already a normalized
     # session-tz timestamp — the staged footer schema is authoritative
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     agg = (
         raw.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -827,13 +864,7 @@ def stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user EWMA over the 4-batch time-ordered replay;
     returns each user's FINAL running state (the row with the highest
     event count drained from the update-mode sink)."""
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     out = run_stream_to_df(ewma_stream(raw), output_mode="update")
     from pyspark.sql import Window
 
@@ -919,13 +950,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     are intentionally absent (rows-only; the emitted set is verified
     against batch sessionization in the test).
     """
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     sess = (
         raw.withWatermark("ts", f"{SESSION_GAP_MIN} minutes")
         .groupBy(
@@ -1013,13 +1038,7 @@ def stream_value_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay: final exact moments + total anomalies flagged across the
     replay (rows-only; the final moments equal the batch aggregation
     exactly and the anomaly counts equal a pandas replay — tested)."""
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     out = run_stream_to_df(anomaly_stream(raw), output_mode="update")
     return (
         out.groupBy("event_type")
@@ -1071,13 +1090,7 @@ def stream_dq_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-batch DQ violation counts over the 4-batch replay, summed to
     per-check totals (rows-only; the batch-equivalence test asserts the
     totals equal one batch pass over the whole table)."""
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     out = run_stream_to_df(
         dq_monitor_stream(raw, DQ_STREAM_CHECKS), output_mode="complete"
     )
@@ -1112,13 +1125,18 @@ def topk_maintenance(
     design: a lifetime leaderboard needs lifetime counts — bound the
     window instead if the product wants "top-k this week").
     """
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
+    return (
+        _topk_writer(spark, sf_dir, path, checkpoint, k)
+        .trigger(availableNow=True)
+        .start()
     )
+
+
+def _topk_writer(
+    spark: SparkSession, sf_dir: str, path: str, checkpoint: str, k: int
+) -> DataStreamWriter:
+    """topk_maintenance's stream and sink, not yet started."""
+    raw = _read_replay(spark, sf_dir, "events")
     counts = raw.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1161,8 +1179,6 @@ def topk_maintenance(
         counts.writeStream.foreachBatch(_merge)
         .outputMode("update")
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -1174,17 +1190,7 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = tempfile.mkdtemp(prefix="skdist_topk_")
     ckpt = tempfile.mkdtemp(prefix="skdist_topk_ckpt_")
-    # same reduced state-partition count run_stream_to_df applies: the
-    # per-user count state is tiny, so 32 state stores per micro-batch
-    # (and 32-partition shuffles inside every foreachBatch merge job)
-    # would be pure fixed cost
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = topk_maintenance(spark, sf_dir, path, ckpt, k=20)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, _topk_writer(spark, sf_dir, path, ckpt, k=20))
     return (
         spark.read.parquet(path)
         .orderBy(F.desc("n_events"), F.asc("user_id"))
@@ -1214,8 +1220,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission — the semantics inner joins can't express: "every
     purchase, with its preceding clicks OR proof there were none".
 
-    Both sides replay the 4-file time-ordered staging
-    (_stage_ordered_stream), so the watermark genuinely advances and
+    Both sides replay the 4-file time-ordered staging (the "events"
+    replay layout), so the watermark genuinely advances and
     unmatched purchases are EVICTED-and-emitted with a null click as
     the watermark passes their last possible match instant
     (purchase_ts, since clicks must precede the purchase).  Matched
@@ -1230,26 +1236,14 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     still-open tail depends on the final watermark (the
     batch-equivalence test accounts for the boundary exactly).
     """
-    stage = _stage_ordered_stream(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-
-    def _side():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(stage)
-        )
-
+    events = _read_replay(spark, sf_dir, "events")
     clicks = (
-        _side()
-        .where(F.col("event_type") == "click")
+        events.where(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
         .withWatermark("click_ts", "30 minutes")
     )
     purchases = (
-        _side()
-        .where(F.col("event_type") == "purchase")
+        events.where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id"),
@@ -1346,13 +1340,7 @@ def stream_user_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming clamped balance over the 4-batch time-ordered replay;
     returns each user's FINAL state (highest move count drained from
     the update-mode sink) — bit-identical to batch user_balance_resets."""
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     out = run_stream_to_df(balance_stream(raw), output_mode="update")
     from pyspark.sql import Window
 
@@ -1423,17 +1411,7 @@ def psi_stream_monitor(
             psi += (p - q) * math.log(p / q)
         rows.append((int(batch_id), int(n), round(psi, 6)))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_binned.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, stream_binned.writeStream.foreachBatch(on_batch))
     return spark.createDataFrame(
         rows, "batch_id int, n_rows long, psi double"
     ).withColumn("drifted", F.col("psi") > F.lit(0.25))
@@ -1459,13 +1437,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     ref = [int(ref_rows.get(b, 0)) for b in range(PSI_BINS)]
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     binned = raw.select(F.expr(bin_expr).alias("bin"))
     return psi_stream_monitor(binned, ref).orderBy("batch_id")
 
@@ -1549,52 +1521,10 @@ def funnel_stream_monitor(
             dropped += int(r["n_dropped"])
         rows.append((int(batch_id), "accepted", int(n_batch - dropped), int(n_batch)))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_docs.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, stream_docs.writeStream.foreachBatch(on_batch))
     return stream_docs.sparkSession.createDataFrame(
         rows, "batch_id int, rule string, n_dropped long, n_batch long"
     )
-
-
-def _stage_doc_batches(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
-    """Stage the ODD-doc_id half of documents as ``n_files`` id-ordered
-    parquet files (ascending mtimes) for maxFilesPerTrigger=1 replay."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources.catalog import load_table
-
-    stage = f"/tmp/skdist_stream_docs_odd_{hashlib.md5(f'{sf_dir}:v1'.encode()).hexdigest()[:8]}"
-    done = os.path.join(stage, "_STAGED")
-    if os.path.exists(done):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    tmp = stage + "_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    docs = load_table(spark, "documents", sf_dir).where(F.col("doc_id") % 2 == 1)
-    docs.repartitionByRange(n_files, "doc_id").write.parquet(tmp)
-    os.makedirs(stage, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_000_000_000
-    for i, name in enumerate(parts):
-        dst = os.path.join(stage, f"batch_{i:04d}.parquet")
-        shutil.move(os.path.join(tmp, name), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-    open(done, "w").close()
-    return stage
 
 
 def stream_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,13 +1541,7 @@ def stream_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.md5("text").alias("text_hash"))
         .distinct()
     )
-    stage = _stage_doc_batches(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "docs_odd")
     out = funnel_stream_monitor(raw, corpus_hashes)
     return out.orderBy("batch_id", "rule")
 
@@ -1663,17 +1587,7 @@ def quantile_stream_monitor(
             (int(batch_id), int(got["n"]), float(qs[0]), float(qs[1]), float(qs[2]))
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_values.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, stream_values.writeStream.foreachBatch(on_batch))
     return spark.createDataFrame(
         rows, "batch_id int, n_rows long, p50 double, p90 double, p99 double"
     ).withColumn("breached", F.col("p99") > F.lit(p99_alert))
@@ -1683,13 +1597,7 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: 4-batch time-ordered replay of events through the
     per-batch KLL quantile monitor (rows-only: per-batch sketch reads
     are a streaming-side effect; pytest bounds rank error vs exact)."""
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     return quantile_stream_monitor(raw.select("value")).orderBy("batch_id")
 
 
@@ -1747,13 +1655,7 @@ def stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.stats import bootstrap_ci_from_units
 
-    stage = _stage_ordered_stream(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "events")
     totals = raw.groupBy("event_type", "user_id").agg(
         F.sum(F.expr("CAST(floor(value * 1000000) AS BIGINT)")).alias("y"),
         F.count(F.lit(1)).alias("n_events"),
@@ -1911,17 +1813,7 @@ def budget_gate_stream_monitor(
             t[2] += int(r["tok"])
             t[3] += int(r["tok_acc"])
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_docs.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, stream_docs.writeStream.foreachBatch(on_batch))
     return spark.createDataFrame(
         [
             (g, t[0], t[1], t[2], t[3])
@@ -1932,42 +1824,6 @@ def budget_gate_stream_monitor(
     )
 
 
-def _stage_all_doc_batches(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
-    """Stage ALL documents as ``n_files`` doc_id-range parquet files with
-    ascending mtimes, so maxFilesPerTrigger=1 replays them in id order
-    (the ordering the budget gate's batch face uses)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources.catalog import load_table
-
-    stage = (
-        "/tmp/skdist_stream_docs_all_"
-        + hashlib.md5(f"{sf_dir}:v1".encode()).hexdigest()[:8]
-    )
-    done = os.path.join(stage, "_STAGED")
-    if os.path.exists(done):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    tmp = stage + "_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    docs = load_table(spark, "documents", sf_dir)
-    docs.repartitionByRange(n_files, "doc_id").write.parquet(tmp)
-    os.makedirs(stage, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_000_000_000
-    for i, name in enumerate(parts):
-        dst = os.path.join(stage, f"batch_{i:04d}.parquet")
-        shutil.move(os.path.join(tmp, name), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-    open(done, "w").close()
-    return stage
-
-
 def stream_token_budget_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: documents replayed as 3 id-ordered micro-batches
     through the streaming token-budget gate (rows-only: carried-offset
@@ -1975,13 +1831,7 @@ def stream_token_budget_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is BIT-EQUAL to the one-shot batch gate)."""
     from ..operators.text import GATE_BUDGET_TOKENS
 
-    stage = _stage_all_doc_batches(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
+    raw = _read_replay(spark, sf_dir, "docs_all")
     return budget_gate_stream_monitor(raw, GATE_BUDGET_TOKENS).orderBy("source")
 
 
@@ -2027,57 +1877,10 @@ def ann_stream_enrich(
                 (int(batch_id), r["query_id"], r["neighbor_id"], float(r["cosine"]))
             )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_vecs.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, stream_vecs.writeStream.foreachBatch(on_batch))
     return spark.createDataFrame(
         rows, "batch_id int, query_id long, neighbor_id long, cosine double"
     )
-
-
-def _stage_embedding_batches(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
-) -> str:
-    """Stage the ODD-vec_id embeddings as id-ordered parquet files for
-    maxFilesPerTrigger=1 replay."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources.catalog import load_table
-
-    stage = (
-        "/tmp/skdist_stream_emb_odd_"
-        + hashlib.md5(f"{sf_dir}:v1".encode()).hexdigest()[:8]
-    )
-    done = os.path.join(stage, "_STAGED")
-    if os.path.exists(done):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    tmp = stage + "_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    emb = load_table(spark, "embeddings", sf_dir).where(F.col("vec_id") % 2 == 1)
-    emb.repartitionByRange(n_files, "vec_id").write.parquet(tmp)
-    os.makedirs(stage, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_000_000_000
-    for i, name in enumerate(parts):
-        dst = os.path.join(stage, f"batch_{i:04d}.parquet")
-        shutil.move(os.path.join(tmp, name), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(tmp, ignore_errors=True)
-    open(done, "w").close()
-    return stage
 
 
 def _ann_stream_frames(spark: SparkSession, sf_dir: str):
@@ -2096,13 +1899,8 @@ def stream_ann_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     each IVF-joined against the even-id static corpus (rows-only;
     pytest asserts exact equality with the one-shot batch ivf_join)."""
     corpus, cents = _ann_stream_frames(spark, sf_dir)
-    stage = _stage_embedding_batches(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    raw = _read_replay(spark, sf_dir, "emb_odd").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     out = ann_stream_enrich(raw, corpus, cents)
     return out.orderBy("query_id", F.desc("cosine"), "neighbor_id")

@@ -57,7 +57,15 @@ def ratings(spark):
     return spark.createDataFrame(rows, ["u", "i", "rating"]), rows
 
 
-def test_als_matches_serial_replay(spark, ratings):
+@pytest.mark.parametrize("factor_join", ["broadcast", "shuffled"])
+def test_als_matches_serial_replay(spark, ratings, monkeypatch, factor_join):
+    """Both factor-join strategies reproduce the serial replay; a zero
+    broadcast bound forces the shuffled-hash join path (fixed-key
+    ratings layout, solve_parts gather repartition)."""
+    if factor_join == "shuffled":
+        from skdist_spark.operators import recommend
+
+        monkeypatch.setattr(recommend, "ALS_BROADCAST_MAX_ROWS", 0)
     df, rows = ratings
     uf, itf = als_train(df, "u", "i", "rating")
     uf_d = {r["id"]: np.array(r["factors"]) for r in uf.collect()}

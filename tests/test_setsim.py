@@ -2,6 +2,9 @@
 brute force on crafted corpora — exercises arbitrary column names,
 a non-default threshold, and the no-pairs edge."""
 
+import pytest
+
+import skdist_spark.operators.setsim as S
 from skdist_spark.operators.setsim import setsim_join
 
 DOCS = [
@@ -56,8 +59,6 @@ def test_setsim_cogroup_path_equals_direct(spark, monkeypatch):
     two strategies must be indistinguishable on the same corpus)."""
     import random
 
-    import skdist_spark.operators.setsim as S
-
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(15)]
     docs = [
@@ -109,11 +110,19 @@ def test_setsim_small_vocab_candidate_storm(spark):
     assert (100, 101) in {(a, b) for a, b, _, _ in got}
 
 
-def test_setsim_ppm_integer_exact(spark):
-    docs = [(1, "a b c d e"), (2, "a b c d e")]  # identical: J = 1
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    rows = setsim_join(df).collect()
-    assert len(rows) == 1 and rows[0]["jaccard_ppm"] == 1000000
+@pytest.mark.parametrize("gate", ["direct", "cogroup"])
+def test_setsim_ppm_integer_exact(spark, monkeypatch, gate):
+    """Identical docs score exactly 1000000 ppm on both verify paths,
+    also past 2147 shared shingles, where inter * 1000000 no longer
+    fits in INT (ANSI mode raises ARITHMETIC_OVERFLOW there)."""
+    if gate == "cogroup":
+        monkeypatch.setattr(S, "SETSIM_DIRECT_VERIFY_MAX_PAIRS", -1)
+    long_text = " ".join(f"w{i}" for i in range(2200))
+    for text in ("a b c d e", long_text):
+        docs = [(1, text), (2, text)]  # identical: J = 1
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        rows = setsim_join(df).collect()
+        assert len(rows) == 1 and rows[0]["jaccard_ppm"] == 1000000
 
 
 def test_setsim_blocked_verify_equals_set_reference():

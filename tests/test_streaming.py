@@ -482,7 +482,7 @@ def test_stream_value_anomaly_moments_exact_and_counts_match_replay(spark, sf_di
 
     import pandas as pd
 
-    stage = ops._stage_ordered_stream(spark, sf_dir)
+    stage = ops._stage_replay(spark, sf_dir, "events")
     files = sorted(
         os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")
     )
@@ -830,3 +830,32 @@ def test_stream_hll_registers_equals_batch(spark, sf_dir):
         .collect()
     ]
     assert got == want and len(got) > 0
+
+
+def test_stage_stream_inputs_layout_and_reuse(spark, sf_dir):
+    """The staging entry point bench.py calls before its timed region:
+    every replay layout dir holds batch_0000... files with strictly
+    ascending mtimes (the file source's replay order) and a _STAGED
+    sentinel, and a second call reuses the stage without rewriting."""
+    import os
+
+    from skdist_spark.streaming.ops import stage_stream_inputs
+
+    def snapshot(stages):
+        return {
+            stage: {f: os.stat(os.path.join(stage, f)).st_mtime_ns for f in os.listdir(stage)}
+            for stage in stages.values()
+        }
+
+    stages = stage_stream_inputs(spark, sf_dir)
+    assert stages
+    first = snapshot(stages)
+    for stage, files in first.items():
+        assert "_STAGED" in files, stage
+        batches = sorted(f for f in files if f.endswith(".parquet"))
+        assert batches, stage
+        assert batches == [f"batch_{i:04d}.parquet" for i in range(len(batches))]
+        mtimes = [files[f] for f in batches]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), stage
+    assert stage_stream_inputs(spark, sf_dir) == stages
+    assert snapshot(stages) == first
