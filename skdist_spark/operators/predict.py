@@ -16,6 +16,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from ._engine import gate_zip_rereads
+
 
 def _get_vals(*cols, feature_type="numpy", names=None):
     if feature_type == "numpy":
@@ -56,6 +58,7 @@ def get_prediction_udf(model, method="predict", feature_type="numpy", names=None
     if method == "predict":
 
         def predict_func(*cols):
+            gate_zip_rereads()
             vals = _get_vals(*cols, feature_type=feature_type, names=names)
             return pd.Series(np.asarray(model.predict(vals)))
 
@@ -71,6 +74,7 @@ def get_prediction_udf(model, method="predict", feature_type="numpy", names=None
     if method == "predict_proba":
 
         def predict_proba_func(*cols):
+            gate_zip_rereads()
             vals = _get_vals(*cols, feature_type=feature_type, names=names)
             proba = np.asarray(model.predict_proba(vals), dtype=np.float64)
             return pd.Series(list(proba))

@@ -1185,16 +1185,24 @@ def _topk_writer(
 def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous top-20 leaderboard over the 4-batch ordered replay;
     returns the final maintained snapshot (rows-only — the batch
-    equivalence vs the exact heavy-hitters shape is tested)."""
+    equivalence vs the exact heavy-hitters shape is tested).  The k-row
+    snapshot, written in rank order, is read back into a local frame so
+    both scratch directories can be removed before returning."""
+    import os
+    import shutil
     import tempfile
+
+    import pyarrow.parquet as pq
 
     path = tempfile.mkdtemp(prefix="skdist_topk_")
     ckpt = tempfile.mkdtemp(prefix="skdist_topk_ckpt_")
-    _drain(spark, _topk_writer(spark, sf_dir, path, ckpt, k=20))
-    return (
-        spark.read.parquet(path)
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
-    )
+    try:
+        _drain(spark, _topk_writer(spark, sf_dir, path, ckpt, k=20))
+        top = pq.read_table(os.path.join(path, "part-00000.parquet")).to_pandas()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.createDataFrame(top, schema="user_id bigint, n_events bigint")
 
 
 QUERIES = {

@@ -2461,3 +2461,131 @@ def test_embedding_covariance_matches_numpy(spark, sf_dir):
     assert len(got) == x.shape[1] * (x.shape[1] + 1) // 2
     for (i, j), v in got.items():
         assert abs(v - c[i, j]) < 2e-4, (i, j, v, c[i, j])
+
+
+def test_run_tasks_none_results_match_serial(spark):
+    """A work function may legitimately return None: the distributed
+    path must return it like the serial path, not report lost tasks."""
+    from skdist_spark.operators._engine import run_tasks
+
+    def work(t, s):
+        return None
+
+    assert run_tasks(spark, range(3), work) == run_tasks(None, range(3), work)
+
+
+def _write_zip_module(path, name, version):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{name}.py", f"V = {version}\nPAD = {'x' * version!r}\n")
+
+
+@pytest.fixture
+def ungated_zipimport(monkeypatch):
+    """The process's zipimporter without the re-read gate; the original
+    method and flag are restored when the test ends."""
+    import zipimport
+
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    monkeypatch.setattr(zipimport.zipimporter, "_skdist_reread_gate", False, raising=False)
+    return zipimport
+
+
+def test_zip_reread_gate_skips_unchanged_archive(tmp_path, monkeypatch, ungated_zipimport):
+    """With the gate installed, invalidate_caches re-reads an archive
+    only when its stat key changed, and a changed archive is still
+    picked up by a reload."""
+    import importlib
+    import sys
+
+    from skdist_spark.operators._engine import gate_zip_rereads
+
+    zipimport = ungated_zipimport
+    name = "skdist_gate_probe_mod"
+    archive = str(tmp_path / "mods.zip")
+    _write_zip_module(archive, name, 1)
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.delitem(sys.modules, name, raising=False)
+    mod = importlib.import_module(name)
+    assert mod.V == 1
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting_read(path):
+        if path == archive:
+            reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    gate_zip_rereads()
+    wrapped = zipimport.zipimporter.invalidate_caches
+    gate_zip_rereads()  # idempotent: one wrap per process
+    assert zipimport.zipimporter.invalidate_caches is wrapped
+    assert zipimport.zipimporter._skdist_reread_gate is True
+
+    importlib.invalidate_caches()  # no saved key yet: reads once
+    assert len(reads) == 1
+    reads.clear()
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert reads == []
+
+    _write_zip_module(archive, name, 2)  # new size
+    importlib.invalidate_caches()
+    assert len(reads) == 1
+    assert importlib.reload(mod).V == 2
+
+    reads.clear()
+    (tmp_path / "mods.zip").unlink()  # failed stat: always re-read
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert len(reads) == 2
+    sys.modules.pop(name, None)
+
+
+@pytest.mark.parametrize("method", ["predict", "predict_proba"])
+def test_prediction_udfs_install_zip_reread_gate(ungated_zipimport, method):
+    """Calling a prediction UDF's function installs the gate."""
+    import pandas as pd
+
+    model = LogisticRegression().fit(*_blobs(n=60, d=2, k=2))
+    udf = get_prediction_udf(model, method=method)
+    udf.func(pd.Series([0.0, 1.0]), pd.Series([1.0, 0.0]))
+    assert ungated_zipimport.zipimporter._skdist_reread_gate is True
+
+
+def _gate_flag(*_):
+    import zipimport
+
+    return bool(getattr(zipimport.zipimporter, "_skdist_reread_gate", False))
+
+
+def test_spark_workers_install_zip_reread_gate(spark):
+    """Engine tasks and prediction UDFs run with the gate installed in
+    their Python worker (a flag check, not a timing test)."""
+    from pyspark.sql import functions as F
+
+    from skdist_spark.operators._engine import run_tasks
+
+    assert run_tasks(spark, range(6), _gate_flag) == [True] * 6
+
+    class FlagModel:
+        classes_ = np.array([0, 1])
+
+        def predict(self, X):
+            return np.full(len(X), int(_gate_flag()), dtype=np.int64)
+
+    predict = get_prediction_udf(FlagModel(), method="predict")
+    rows = (
+        spark.range(0, 64, 1, 8)
+        .select(F.spark_partition_id().alias("part"), predict(F.col("id")).alias("flag"))
+        .groupBy("part")
+        .agg(F.min("flag").alias("flag"))
+        .collect()
+    )
+    assert len(rows) == 8
+    assert all(r.flag == 1 for r in rows)

@@ -417,19 +417,23 @@ def test_stream_dq_monitor_matches_batch_audit(spark, sf_dir):
     assert got == want
 
 
-def test_stream_topk_users_matches_batch_topk(spark, sf_dir):
+def test_stream_topk_users_matches_batch_topk(spark, sf_dir, tmp_path, monkeypatch):
     """The continuously maintained k-row leaderboard, after the 4-batch
     replay, must equal the exact batch top-k (the eviction rule is
-    provably lossless for monotone counts)."""
+    provably lossless for monotone counts), and the call must leave no
+    snapshot or checkpoint directory behind."""
+    import tempfile
+
     from pyspark.sql import functions as F
 
     from skdist_spark.sources.catalog import load_table
     from skdist_spark.streaming import ops
 
-    got = [
-        (r.user_id, r.n_events)
-        for r in ops.stream_topk_users(spark, sf_dir).collect()
-    ]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    top = ops.stream_topk_users(spark, sf_dir)
+    assert list(tmp_path.iterdir()) == []
+    assert top.schema.simpleString() == "struct<user_id:bigint,n_events:bigint>"
+    got = [(r.user_id, r.n_events) for r in top.collect()]
     want = [
         (r.user_id, r.n_events)
         for r in load_table(spark, "events", sf_dir)
