@@ -3,13 +3,18 @@
 LogisticRegression: multinomial softmax, full-batch gradient descent
 with fixed iteration count and L2 penalty — deterministic for a given
 (data, params), which the oracle/driver checks rely on.
+
+Exactness contract: a change here must keep every fitted bit (check
+with ``tools/ml_fingerprint.py`` before and after). Both matmuls keep
+their operands and operation order (``X @ W``, then ``X.T @ ...``
+divided by ``n``): BLAS result bits depend on them.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .base import BaseEstimator, ClassifierMixin, RegressorMixin, check_is_fitted
+from .base import BaseEstimator, ClassifierMixin, RegressorMixin, check_is_fitted, row_sum
 
 
 def _as_2d(X) -> np.ndarray:
@@ -19,10 +24,20 @@ def _as_2d(X) -> np.ndarray:
     return X
 
 
+def _row_max(z: np.ndarray) -> np.ndarray:
+    """``z.max(axis=1)`` by columns (a max is exact in any order)."""
+    out = z[:, 0].copy()
+    for j in range(1, z.shape[1]):
+        np.maximum(out, z[:, j], out=out)
+    return out
+
+
 def _softmax(z: np.ndarray) -> np.ndarray:
-    z = z - z.max(axis=1, keepdims=True)
-    e = np.exp(z)
-    return e / e.sum(axis=1, keepdims=True)
+    """Row softmax of ``z``, computed in place: ``z`` is overwritten."""
+    z -= _row_max(z)[:, None]
+    np.exp(z, out=z)
+    z /= row_sum(z)[:, None]
+    return z
 
 
 class LogisticRegression(BaseEstimator, ClassifierMixin):
@@ -51,13 +66,20 @@ class LogisticRegression(BaseEstimator, ClassifierMixin):
         sw = sw / sw.sum() * n
         lam = 1.0 / (self.C * n)
         prev_loss = np.inf
+        rows, sw_col, XT = np.arange(n), sw[:, None], X.T
         for _ in range(int(self.max_iter)):
             P = _softmax(X @ W)
-            G = X.T @ ((P - Y) * sw[:, None]) / n + lam * W
+            logp = P[rows, y_idx]
+            P -= Y
+            P *= sw_col
+            G = XT @ P / n + lam * W
             if self.fit_intercept:
                 G[-1, :] -= lam * W[-1, :]  # don't penalize intercept
             W -= self.lr * G
-            loss = -np.sum(sw * np.log(P[np.arange(n), y_idx] + 1e-12)) / n
+            logp += 1e-12
+            np.log(logp, out=logp)
+            logp *= sw
+            loss = -np.sum(logp) / n
             if abs(prev_loss - loss) < self.tol:
                 break
             prev_loss = loss

@@ -3,15 +3,27 @@
 Exact splits via per-feature sort + cumulative class counts — O(d · n
 log n) per node, adequate for the task-parallel training model where
 each Spark task fits one small tree on broadcast data.
+
+A node's split search runs in blocks of at most ``_SPLIT_BLOCK_ELEMS``
+(features x rows x outputs) elements. The choice between features stays
+a scalar loop in ``feats`` order: its strict ``>`` compares
+``gain / total_w * total_w``, and a vectorized choice could round
+differently.
+
+Exactness contract: a change here must keep every fitted bit (check
+with ``tools/ml_fingerprint.py`` before and after).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .base import BaseEstimator, ClassifierMixin, RegressorMixin, check_is_fitted
+from .base import BaseEstimator, ClassifierMixin, RegressorMixin, check_is_fitted, row_sum
 
 _LEAF = -1
+# float64 elements in one split-search block: 512 KiB per array keeps a
+# fit's peak near its input size; larger blocks measured no faster
+_SPLIT_BLOCK_ELEMS = 1 << 16
 
 
 class _Tree:
@@ -133,22 +145,28 @@ class _BaseDecisionTree(BaseEstimator):
         return self
 
     def _best_split(self, X, y, sw, feats, n_out):
+        n = len(y)
+        if n < 2:
+            return None
         best_gain, best = 1e-12, None
         parent_imp = self._impurity_total(y, sw, n_out)
         total_w = sw.sum()
-        for f in feats:
-            order = np.argsort(X[:, f], kind="mergesort")
-            xs, ys, ws = X[order, f], y[order], sw[order]
-            cut = xs[:-1] != xs[1:]  # valid split positions (distinct values)
-            if not cut.any():
-                continue
-            left_imp, right_imp, wl = self._prefix_impurities(ys, ws, n_out)
+        step = max(1, _SPLIT_BLOCK_ELEMS // (n * n_out))
+        for lo in range(0, len(feats), step):
+            chunk = feats[lo : lo + step]
+            xt = X.T[chunk]  # (features, rows)
+            order = np.argsort(xt, axis=1, kind="mergesort")
+            xs = np.take_along_axis(xt, order, axis=1)
+            cut = xs[:, :-1] != xs[:, 1:]  # valid split positions (distinct values)
+            left_imp, right_imp = self._prefix_impurities(y[order], sw[order], n_out)
             gain = parent_imp - (left_imp + right_imp)
             gain[~cut] = -np.inf
-            i = int(np.argmax(gain))
-            if gain[i] > best_gain * total_w:
-                best_gain = gain[i] / total_w
-                best = (f, (xs[i] + xs[i + 1]) / 2.0, best_gain)
+            top = np.argmax(gain, axis=1)
+            for j in np.flatnonzero(cut.any(axis=1)):
+                i = top[j]
+                if gain[j, i] > best_gain * total_w:
+                    best_gain = gain[j, i] / total_w
+                    best = (chunk[j], (xs[j, i] + xs[j, i + 1]) / 2.0, best_gain)
         return best
 
     def apply(self, X):
@@ -186,24 +204,24 @@ class DecisionTreeClassifier(_BaseDecisionTree, ClassifierMixin):
 
     @staticmethod
     def _prefix_impurities(ys, ws, n_out):
-        """For each split position i (left = [:i+1]), weighted gini sums."""
-        n = len(ys)
-        onehot = np.zeros((n, n_out))
-        onehot[np.arange(n), ys] = ws
-        cum = np.cumsum(onehot, axis=0)[:-1]  # class-weight prefix, per split
-        wl = np.cumsum(ws)[:-1]
-        total_c = np.bincount(ys, weights=ws, minlength=n_out)
-        wr = ws.sum() - wl
+        """For each split position i (left = [..., :i+1]), weighted gini sums."""
+        onehot = np.zeros(ys.shape + (n_out,))
+        np.put_along_axis(onehot, ys[..., None], ws[..., None], axis=-1)
+        cum = np.cumsum(onehot, axis=-2)  # class-weight prefix, per split
+        total_c = cum[..., -1:, :]  # == bincount(ys, ws): it only adds +0.0
+        cum = cum[..., :-1, :]
+        wl = np.cumsum(ws, axis=-1)[..., :-1]
+        wr = ws.sum(axis=-1, keepdims=True) - wl
         with np.errstate(divide="ignore", invalid="ignore"):
-            gini_l = wl - np.sum(cum**2, axis=1) / np.where(wl > 0, wl, 1)
+            gini_l = wl - row_sum(cum**2) / np.where(wl > 0, wl, 1)
             right = total_c - cum
-            gini_r = wr - np.sum(right**2, axis=1) / np.where(wr > 0, wr, 1)
-        return gini_l, gini_r, wl
+            right **= 2
+            gini_r = wr - row_sum(right) / np.where(wr > 0, wr, 1)
+        return gini_l, gini_r
 
     def predict_proba(self, X):
         nodes = self.apply(X)
-        vals = self.tree_.value
-        return np.array([vals[i] for i in nodes], dtype=np.float64)
+        return np.asarray(self.tree_.value, dtype=np.float64)[nodes]
 
     def predict(self, X):
         return self.classes_[np.argmax(self.predict_proba(X), axis=1)]
@@ -234,17 +252,14 @@ class DecisionTreeRegressor(_BaseDecisionTree, RegressorMixin):
     def _prefix_impurities(ys, ws, n_out):
         wy = ws * ys
         wy2 = ws * ys**2
-        cw = np.cumsum(ws)[:-1]
-        cy = np.cumsum(wy)[:-1]
-        cy2 = np.cumsum(wy2)[:-1]
-        tw, ty, ty2 = ws.sum(), wy.sum(), wy2.sum()
+        cw, cy, cy2 = (np.cumsum(a, axis=-1)[..., :-1] for a in (ws, wy, wy2))
+        tw, ty, ty2 = (a.sum(axis=-1, keepdims=True) for a in (ws, wy, wy2))
         with np.errstate(divide="ignore", invalid="ignore"):
             sse_l = cy2 - cy**2 / np.where(cw > 0, cw, 1)
             rw = tw - cw
             sse_r = (ty2 - cy2) - (ty - cy) ** 2 / np.where(rw > 0, rw, 1)
-        return sse_l, sse_r, cw
+        return sse_l, sse_r
 
     def predict(self, X):
         nodes = self.apply(X)
-        vals = self.tree_.value
-        return np.array([vals[i][0] for i in nodes])
+        return np.asarray(self.tree_.value, dtype=np.float64)[nodes, 0]

@@ -181,6 +181,27 @@ def safe_indexing(X, indices):
     return X[indices]
 
 
+def _n_rows(v) -> int | None:
+    shape = getattr(v, "shape", None)
+    if shape is not None:
+        return shape[0] if len(shape) else None
+    return len(v) if isinstance(v, (list, tuple)) else None
+
+
+def fold_fit_params(X, fit_params: dict, indices) -> dict:
+    """``fit_params`` for a fit on rows ``indices`` of ``X``.
+
+    Every param with one entry per row of ``X`` (``sample_weight`` and
+    the like) is row-subset like ``X``; the rest pass through unchanged
+    (scikit-learn's ``_check_method_params`` rule).
+    """
+    n = _n_rows(X)
+    return {
+        k: safe_indexing(v, indices) if n is not None and _n_rows(v) == n else v
+        for k, v in fit_params.items()
+    }
+
+
 def strip_spark(obj) -> None:
     """Remove spark handles so the fitted estimator pickles cleanly
     (reference behavior: `del self.sc` at end of every fit)."""

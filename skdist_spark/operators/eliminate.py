@@ -14,7 +14,7 @@ import numpy as np
 from ..ml.base import BaseEstimator, ClassifierMixin, clone, is_classifier
 from ..ml.metrics import get_scorer
 from ..ml.model_selection import check_cv
-from ._engine import run_tasks, safe_indexing, strip_spark
+from ._engine import fold_fit_params, run_tasks, safe_indexing, strip_spark
 
 
 def _fit_subset_task(task: dict, shared: dict) -> dict:
@@ -23,7 +23,8 @@ def _fit_subset_task(task: dict, shared: dict) -> dict:
     keep = shared["keep_sets"][task["set_idx"]]
     est = clone(shared["estimator"])
     Xk = np.asarray(X, dtype=np.float64)[:, keep]
-    est.fit(safe_indexing(Xk, train), safe_indexing(y, train), **shared["fit_params"])
+    fit_params = fold_fit_params(Xk, shared["fit_params"], train)
+    est.fit(safe_indexing(Xk, train), safe_indexing(y, train), **fit_params)
     scorer = get_scorer(shared["scoring"])
     return {
         "set_idx": task["set_idx"],

@@ -13,7 +13,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..ml.base import BaseEstimator, ClassifierMixin, clone
-from ._engine import run_tasks, safe_indexing, strip_spark
+from ._engine import fold_fit_params, run_tasks, safe_indexing, strip_spark
 
 
 def _unwrap_best(est):
@@ -40,7 +40,8 @@ def _fit_ovr_task(task: dict, shared: dict):
             neg = rng.choice(neg, size=max(n_keep, 1), replace=False)
         idx = np.sort(np.concatenate([pos, neg]))
     est = clone(shared["estimator"])
-    est.fit(safe_indexing(X, idx), y_bin[idx], **shared["fit_params"])
+    fit_params = fold_fit_params(X, shared["fit_params"], idx)
+    est.fit(safe_indexing(X, idx), y_bin[idx], **fit_params)
     return _unwrap_best(est)
 
 
@@ -52,7 +53,8 @@ def _fit_ovo_task(task: dict, shared: dict):
     idx = np.where(mask)[0]
     y_bin = (y_arr[idx] == b).astype(np.int64)
     est = clone(shared["estimator"])
-    est.fit(safe_indexing(X, idx), y_bin, **shared["fit_params"])
+    fit_params = fold_fit_params(X, shared["fit_params"], idx)
+    est.fit(safe_indexing(X, idx), y_bin, **fit_params)
     return _unwrap_best(est)
 
 

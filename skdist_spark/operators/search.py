@@ -20,7 +20,38 @@ import numpy as np
 from ..ml.base import BaseEstimator, clone, is_classifier
 from ..ml.metrics import check_multimetric_scoring, get_scorer
 from ..ml.model_selection import ParameterGrid, ParameterSampler, check_cv
-from ._engine import rankdata_min, run_tasks, safe_indexing, strip_spark
+from ._engine import fold_fit_params, rankdata_min, run_tasks, safe_indexing, strip_spark
+
+
+def _fold_estimator(task: dict, shared: dict):
+    """Unfitted clone of ``shared["estimator"]`` with ``task["params"]``."""
+    est = clone(shared["estimator"])
+    if task["params"]:
+        est.set_params(**task["params"])
+    return est
+
+
+def _fit_fold(est, shared: dict, train) -> None:
+    """Fit ``est`` on the ``train`` rows, per-row fit params sliced to them."""
+    X, y = shared["X"], shared["y"]
+    fit_params = fold_fit_params(X, shared["fit_params"], train)
+    if y is None:
+        est.fit(safe_indexing(X, train), **fit_params)
+    else:
+        est.fit(safe_indexing(X, train), safe_indexing(y, train), **fit_params)
+
+
+def _fold_preds_task(task: dict, shared: dict) -> np.ndarray:
+    """Fit one candidate on a fold's train rows; predict its test rows
+    (``predict_proba``, else ``predict`` as one column)."""
+    train, test = shared["folds"][task["fold_idx"]]
+    est = _fold_estimator(task, shared)
+    _fit_fold(est, shared, train)
+    X_test = safe_indexing(shared["X"], test)
+    try:
+        return est.predict_proba(X_test)
+    except Exception:
+        return np.asarray(est.predict(X_test)).reshape(-1, 1)
 
 
 def _fit_score_task(task: dict, shared: dict) -> dict:
@@ -32,11 +63,8 @@ def _fit_score_task(task: dict, shared: dict) -> dict:
     use the one-entry ``{"score": ...}`` dict, same as the reference.
     """
     X, y = shared["X"], shared["y"]
-    folds = shared["folds"]
-    train, test = folds[task["fold_idx"]]
-    est = clone(shared["estimator"])
-    if task["params"]:
-        est.set_params(**task["params"])
+    train, test = shared["folds"][task["fold_idx"]]
+    est = _fold_estimator(task, shared)
     scorers = shared.get("scorers") or {"score": get_scorer(shared.get("scoring"))}
 
     def _score_all(Xs, ys):
@@ -45,10 +73,7 @@ def _fit_score_task(task: dict, shared: dict) -> dict:
     out = dict(task)
     t0 = time.perf_counter()
     try:
-        if y is None:
-            est.fit(safe_indexing(X, train), **shared["fit_params"])
-        else:
-            est.fit(safe_indexing(X, train), safe_indexing(y, train), **shared["fit_params"])
+        _fit_fold(est, shared, train)
         out["fit_time"] = time.perf_counter() - t0
         t1 = time.perf_counter()
         out["test_scores"] = _score_all(safe_indexing(X, test), safe_indexing(y, test))
@@ -181,14 +206,11 @@ class DistBaseSearchCV(BaseEstimator):
                 best.fit(X, y, **fit_params)
             self.best_estimator_ = best
             if self.preds:
-                preds = []
-                for train_idx, test_idx in folds:
-                    est = clone(self.estimator).set_params(**self.best_params_)
-                    est.fit(safe_indexing(X, train_idx), safe_indexing(y, train_idx))
-                    try:
-                        preds.append(est.predict_proba(safe_indexing(X, test_idx)))
-                    except Exception:
-                        preds.append(np.asarray(est.predict(safe_indexing(X, test_idx))).reshape(-1, 1))
+                # the best candidate's fold fits, serially on the driver
+                fold_tasks = [
+                    {"fold_idx": fi, "params": self.best_params_} for fi in range(n_splits)
+                ]
+                preds = run_tasks(None, fold_tasks, _fold_preds_task, shared)
                 self.preds_ = np.vstack(preds)
 
         strip_spark(self)

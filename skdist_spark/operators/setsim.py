@@ -305,7 +305,15 @@ def setsim_join(
     straight onto the pairs (JVM array_intersect, bounded pair-side
     bytes, no corpus replication); above the gate the blocked cogroup
     runs unchanged.  Both paths compute the identical integer
-    arithmetic — pinned by tests on the same inputs."""
+    arithmetic — pinned by tests on the same inputs.
+
+    Eager at construction: calling this function runs Spark jobs. The
+    candidate pipeline executes (``localCheckpoint(eager=True)`` plus
+    a ``count()``) before the DataFrame is returned, even when the
+    caller only wants a plan (EXPLAIN, plan capture). The returned
+    plan depends on the data, because the count picks the verify path.
+    The checkpointed pairs have no lineage: losing an executor that
+    holds them fails the query instead of recomputing it."""
     import math
 
     cand, ordered = _setsim_candidates(df, id_col, text_col, t_num, t_den)

@@ -333,3 +333,154 @@ def test_learning_curve_rises(spark):
     assert max(accs) > 600_000  # learnable target: better than chance
     again = ml_learning_curve(spark, "/root/testdata/sf0.001").collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in rows]
+
+
+# ---- exactness contract of the vectorized learner kernels -------------------
+
+
+@pytest.mark.parametrize("k", range(1, 21))
+def test_row_sum_bit_equal_to_numpy_sum(k):
+    """Column adds below 8 columns, numpy's pairwise sum from 8 up: both
+    sides of the branch give ``a.sum(axis=1)`` bit for bit."""
+    from skdist_spark.ml.base import row_sum
+
+    rng = np.random.RandomState(k)
+    a = rng.standard_normal((2000, k)) * rng.lognormal(0, 6, (2000, k))
+    a[0] = -0.0  # numpy sums a row of -0.0 to +0.0
+    expected = a.sum(axis=1)
+    got = row_sum(a)
+    assert got.dtype == expected.dtype and got.shape == expected.shape
+    assert got.tobytes() == expected.tobytes()
+    # and along the last axis of a 3-D block, as the split search uses it
+    b = a.reshape(4, 500, k)
+    assert row_sum(b).tobytes() == b.sum(axis=-1).tobytes()
+
+
+def _reference_best_split(est, X, y, sw, feats, n_out):
+    """One feature at a time: sort, 1-D prefix impurities, argmax."""
+    is_clf = isinstance(est, DecisionTreeClassifier)
+
+    def prefix(ys, ws):
+        if is_clf:
+            n = len(ys)
+            onehot = np.zeros((n, n_out))
+            onehot[np.arange(n), ys] = ws
+            cum = np.cumsum(onehot, axis=0)[:-1]
+            wl = np.cumsum(ws)[:-1]
+            total_c = np.bincount(ys, weights=ws, minlength=n_out)
+            wr = ws.sum() - wl
+            with np.errstate(divide="ignore", invalid="ignore"):
+                gini_l = wl - np.sum(cum**2, axis=1) / np.where(wl > 0, wl, 1)
+                gini_r = wr - np.sum((total_c - cum) ** 2, axis=1) / np.where(wr > 0, wr, 1)
+            return gini_l, gini_r
+        wy, wy2 = ws * ys, ws * ys**2
+        cw, cy, cy2 = np.cumsum(ws)[:-1], np.cumsum(wy)[:-1], np.cumsum(wy2)[:-1]
+        tw, ty, ty2 = ws.sum(), wy.sum(), wy2.sum()
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sse_l = cy2 - cy**2 / np.where(cw > 0, cw, 1)
+            rw = tw - cw
+            sse_r = (ty2 - cy2) - (ty - cy) ** 2 / np.where(rw > 0, rw, 1)
+        return sse_l, sse_r
+
+    best_gain, best = 1e-12, None
+    parent_imp = est._impurity_total(y, sw, n_out)
+    total_w = sw.sum()
+    for f in feats:
+        order = np.argsort(X[:, f], kind="mergesort")
+        xs, ys, ws = X[order, f], y[order], sw[order]
+        cut = xs[:-1] != xs[1:]
+        if not cut.any():
+            continue
+        left_imp, right_imp = prefix(ys, ws)
+        gain = parent_imp - (left_imp + right_imp)
+        gain[~cut] = -np.inf
+        i = int(np.argmax(gain))
+        if gain[i] > best_gain * total_w:
+            best_gain = gain[i] / total_w
+            best = (f, (xs[i] + xs[i + 1]) / 2.0, best_gain)
+    return best
+
+
+def _split_case(kind, n, d, k, weights, seed):
+    rng = np.random.RandomState(seed)
+    X = rng.standard_normal((n, d)) * 2
+    if kind == "ints":
+        X = np.round(X)  # a few levels per feature: many ties
+    y = rng.randint(0, k, n) if k else X @ rng.standard_normal(d) + rng.standard_normal(n)
+    if weights == "float":
+        sw = rng.uniform(0.1, 3.0, n)
+    elif weights == "bootstrap":
+        sw = np.bincount(rng.randint(0, n, n), minlength=n).astype(np.float64)
+    else:
+        sw = np.ones(n)
+    return X, y, sw
+
+
+@pytest.mark.parametrize("k", [2, 4, 9, 0])  # 0: the regressor
+@pytest.mark.parametrize("kind", ["float", "ints"])
+@pytest.mark.parametrize("weights", ["ones", "float", "bootstrap"])
+def test_best_split_matches_per_feature_reference(k, kind, weights):
+    est = DecisionTreeClassifier() if k else DecisionTreeRegressor()
+    n_out = k or 1
+    for seed, n in enumerate((2, 3, 17, 240)):
+        X, y, sw = _split_case(kind, n, 7, k, weights, seed)
+        for feats in (np.arange(7), np.array([5, 0, 3]), np.array([2])):
+            got = est._best_split(X, y, sw, feats, n_out)
+            want = _reference_best_split(est, X, y, sw, feats, n_out)
+            assert (got is None) == (want is None), (seed, feats)
+            if want is not None:
+                assert got[0] == want[0]
+                assert np.float64(got[1]).tobytes() == np.float64(want[1]).tobytes()
+                assert np.float64(got[2]).tobytes() == np.float64(want[2]).tobytes()
+
+
+def _tree_arrays(est):
+    t = est.tree_
+    return (np.asarray(t.feature).tobytes(), np.asarray(t.threshold).tobytes(),
+            np.asarray(t.left).tobytes(), np.asarray(t.right).tobytes(),
+            np.asarray(t.value).tobytes(), est.feature_importances_.tobytes())
+
+
+@pytest.mark.parametrize("k", [4, 9, 0])
+def test_split_search_feature_chunks_give_same_tree(monkeypatch, k):
+    """A block budget far below one node's size splits every node's
+    feature set into chunks of one or two features; the tree is the same."""
+    from skdist_spark.ml import tree as tree_mod
+
+    X, y, sw = _split_case("ints", 400, 6, k, "bootstrap", 7)
+    make = (lambda: DecisionTreeClassifier(max_depth=6, max_features=0.5, random_state=2)) if k \
+        else (lambda: DecisionTreeRegressor(max_depth=6, random_state=2))
+    whole = make().fit(X, y, sample_weight=sw)
+    n_out = k or 1
+    monkeypatch.setattr(tree_mod, "_SPLIT_BLOCK_ELEMS", 2 * 400 * n_out)
+    chunked = make().fit(X, y, sample_weight=sw)
+    monkeypatch.setattr(tree_mod, "_SPLIT_BLOCK_ELEMS", 1)
+    single = make().fit(X, y, sample_weight=sw)
+    assert len(whole.tree_.feature) > 7
+    assert _tree_arrays(chunked) == _tree_arrays(whole)
+    assert _tree_arrays(single) == _tree_arrays(whole)
+
+
+def test_tree_predict_matches_per_row_lookup():
+    X, y, sw = _split_case("float", 500, 5, 4, "float", 3)
+    clf = DecisionTreeClassifier(max_depth=5).fit(X, y, sample_weight=sw)
+    nodes = clf.apply(X)
+    per_row = np.array([clf.tree_.value[i] for i in nodes], dtype=np.float64)
+    assert clf.predict_proba(X).tobytes() == per_row.tobytes()
+    X, y_reg, _ = _split_case("float", 500, 5, 0, "ones", 3)
+    reg = DecisionTreeRegressor(max_depth=5).fit(X, y_reg)
+    nodes = reg.apply(X)
+    per_row = np.array([reg.tree_.value[i][0] for i in nodes])
+    assert reg.predict(X).tobytes() == per_row.tobytes()
+
+
+@pytest.mark.parametrize("k", [2, 4, 9])
+def test_softmax_bit_equal_to_axis_reductions(k):
+    from skdist_spark.ml.linear import _softmax
+
+    rng = np.random.RandomState(k)
+    z = rng.standard_normal((1000, k)) * 30
+    shifted = z - z.max(axis=1, keepdims=True)
+    e = np.exp(shifted)
+    expected = e / e.sum(axis=1, keepdims=True)
+    assert _softmax(z.copy()).tobytes() == expected.tobytes()

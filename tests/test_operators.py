@@ -7,7 +7,7 @@ import pickle
 import numpy as np
 import pytest
 
-from skdist_spark.ml import DecisionTreeClassifier, LogisticRegression, Ridge
+from skdist_spark.ml import DecisionTreeClassifier, LogisticRegression, Ridge, log_loss
 from skdist_spark.operators import (
     DistFeatureEliminator,
     DistGridSearchCV,
@@ -108,14 +108,94 @@ def test_grid_search_multimetric(spark, data):
         ).fit(X, y)
 
 
+def _noisy(n=240, d=5, k=3, seed=6):
+    """Overlapping classes, so fold scores vary and weights change them."""
+    rng = np.random.RandomState(seed)
+    X = rng.randn(n, d)
+    y = np.argmax(X[:, :k] + rng.randn(n, k) * 0.8, axis=1)
+    return X, y, rng.uniform(0.2, 3.0, n)
+
+
+def _cv_folds(X, y, cv=3):
+    from skdist_spark.ml.model_selection import check_cv
+
+    return list(check_cv(cv, y, classifier=True).split(X, y))
+
+
 def test_grid_search_preds(spark, data):
     X, y = data
     m = DistGridSearchCV(
         LogisticRegression(), {"C": [1.0]}, sc=spark, cv=3, preds=True
     ).fit(X, y)
     assert m.get_preds().shape == (len(y), 3)
+    local = DistGridSearchCV(
+        LogisticRegression(), {"C": [1.0]}, sc=None, cv=3, preds=True
+    ).fit(X, y)
+    assert m.get_preds().tobytes() == local.get_preds().tobytes()
     m.drop_preds()
     assert m.get_preds() is None
+
+    # the fold fits take the search's fit params, sliced to the fold
+    X, y, sw = _noisy()
+    grid = {"C": [0.05, 1.0]}
+    kw = dict(cv=3, preds=True, scoring="neg_log_loss")
+    dist = DistGridSearchCV(LogisticRegression(max_iter=80), grid, sc=spark, **kw)
+    dist.fit(X, y, sample_weight=sw)
+    serial = DistGridSearchCV(LogisticRegression(max_iter=80), grid, sc=None, **kw)
+    serial.fit(X, y, sample_weight=sw)
+    by_hand = np.vstack([
+        LogisticRegression(max_iter=80, **dist.best_params_)
+        .fit(X[tr], y[tr], sample_weight=sw[tr]).predict_proba(X[te])
+        for tr, te in _cv_folds(X, y)
+    ])
+    assert dist.preds_.shape == (len(y), 3)
+    assert dist.preds_.tobytes() == serial.preds_.tobytes()
+    assert dist.preds_.tobytes() == by_hand.tobytes()
+
+
+def test_search_slices_sample_weight_to_fold(spark):
+    """A per-row fit param is cut to each fold's train rows (scikit-learn's
+    rule); the full-data refit gets all of it, other params pass through."""
+    X, y, sw = _noisy()
+    grid = {"C": [0.05, 1.0]}
+    m = DistGridSearchCV(
+        LogisticRegression(max_iter=80), grid, sc=spark, cv=3, scoring="neg_log_loss"
+    ).fit(X, y, sample_weight=sw)
+    folds = _cv_folds(X, y)
+    for ci, C in enumerate(grid["C"]):
+        for fi, (tr, te) in enumerate(folds):
+            est = LogisticRegression(max_iter=80, C=C).fit(X[tr], y[tr], sample_weight=sw[tr])
+            want = -log_loss(y[te], est.predict_proba(X[te]), labels=est.classes_)
+            got = m.cv_results_[f"split{fi}_test_score"][ci]
+            assert np.isfinite(got)
+            np.testing.assert_allclose(got, want, rtol=1e-12)
+    best = LogisticRegression(max_iter=80, **m.best_params_).fit(X, y, sample_weight=sw)
+    assert m.best_estimator_.coef_.tobytes() == best.coef_.tobytes()
+
+    # the feature eliminator's subset fits take the same slice
+    e = DistFeatureEliminator(
+        LogisticRegression(max_iter=80), sc=spark, min_features_to_select=3, step=2, cv=3
+    ).fit(X, y, sample_weight=sw)
+    keep = e.best_features_
+    want = np.mean([
+        LogisticRegression(max_iter=80).fit(X[tr][:, keep], y[tr], sample_weight=sw[tr])
+        .score(X[te][:, keep], y[te])
+        for tr, te in folds
+    ])
+    np.testing.assert_allclose(e.best_score_, want, rtol=1e-12)
+
+
+def test_fold_fit_params_slices_per_row_params_only():
+    from skdist_spark.operators._engine import fold_fit_params
+
+    X = np.zeros((5, 2))
+    idx = np.array([0, 3])
+    out = fold_fit_params(
+        X, {"sample_weight": np.arange(5.0), "groups": list("abcde"), "n": 5, "tag": "x"}, idx
+    )
+    assert out["sample_weight"].tolist() == [0.0, 3.0]
+    assert list(out["groups"]) == ["a", "d"]
+    assert out["n"] == 5 and out["tag"] == "x"
 
 
 def test_randomized_search(spark, data):
@@ -166,12 +246,37 @@ def test_ovr_max_negatives(spark, data):
     ).fit(X, y)
     assert np.mean(m.predict(X) == y) > 0.7
 
+    # a per-row fit param is cut to the down-sampled rows of each class
+    X, y, sw = _noisy()
+    m = DistOneVsRestClassifier(
+        LogisticRegression(max_iter=80), sc=spark, max_negatives=1.0, random_state=0
+    ).fit(X, y, sample_weight=sw)
+    for cls, est in zip(m.classes_, m.estimators_):
+        y_bin = (y == cls).astype(np.int64)
+        pos, neg = np.flatnonzero(y_bin == 1), np.flatnonzero(y_bin == 0)
+        assert len(pos) < len(neg)  # the down-sampling path runs
+        neg = np.random.RandomState(0).choice(neg, size=len(pos), replace=False)
+        idx = np.sort(np.concatenate([pos, neg]))
+        want = LogisticRegression(max_iter=80).fit(X[idx], y_bin[idx], sample_weight=sw[idx])
+        assert est.coef_.tobytes() == want.coef_.tobytes()
+
 
 def test_ovo(spark, data):
     X, y = data
     m = DistOneVsOneClassifier(LogisticRegression(), sc=spark).fit(X, y)
     assert len(m.estimators_) == 3  # C(3,2)
     assert np.mean(m.predict(X) == y) > 0.85
+
+    # a per-row fit param is cut to each class pair's rows
+    X, y, sw = _noisy()
+    m = DistOneVsOneClassifier(LogisticRegression(max_iter=80), sc=spark)
+    m.fit(X, y, sample_weight=sw)
+    for (a, b), est in zip(m.pairs_, m.estimators_):
+        idx = np.flatnonzero((y == a) | (y == b))
+        want = LogisticRegression(max_iter=80).fit(
+            X[idx], (y[idx] == b).astype(np.int64), sample_weight=sw[idx]
+        )
+        assert est.coef_.tobytes() == want.coef_.tobytes()
 
 
 def test_forest_classifier(spark, data):
