@@ -131,6 +131,7 @@ class _BaseDecisionTree(BaseEstimator):
                 continue
             f, thr, gain = best
             mask = X[idx, f] <= thr
+            # a midpoint that rounds onto the upper value moves its rows left
             if mask.sum() < self.min_samples_leaf or (~mask).sum() < self.min_samples_leaf:
                 continue
             importances[f] += gain
@@ -157,7 +158,10 @@ class _BaseDecisionTree(BaseEstimator):
             xt = X.T[chunk]  # (features, rows)
             order = np.argsort(xt, axis=1, kind="mergesort")
             xs = np.take_along_axis(xt, order, axis=1)
-            cut = xs[:, :-1] != xs[:, 1:]  # valid split positions (distinct values)
+            # valid split positions: distinct values, min_samples_leaf rows a side
+            cut = xs[:, :-1] != xs[:, 1:]
+            cut[:, : self.min_samples_leaf - 1] = False
+            cut[:, n - self.min_samples_leaf :] = False
             left_imp, right_imp = self._prefix_impurities(y[order], sw[order], n_out)
             gain = parent_imp - (left_imp + right_imp)
             gain[~cut] = -np.inf

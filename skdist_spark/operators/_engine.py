@@ -202,6 +202,24 @@ def fold_fit_params(X, fit_params: dict, indices) -> dict:
     }
 
 
+def fit_fold(est, X, y, fit_params: dict, rows=None):
+    """Fit ``est`` on rows ``rows`` of ``X`` and ``y`` (all rows if
+    None), per-row fit params sliced to them; returns ``est``.
+
+    The one fit step of every task grid: search and eliminator folds,
+    OvR/OvO binary problems, out-of-fold predictions and the refits.
+    ``y=None`` fits unsupervised.
+    """
+    if rows is not None:
+        fit_params = fold_fit_params(X, fit_params, rows)
+        X, y = safe_indexing(X, rows), safe_indexing(y, rows)
+    if y is None:
+        est.fit(X, **fit_params)
+    else:
+        est.fit(X, y, **fit_params)
+    return est
+
+
 def strip_spark(obj) -> None:
     """Remove spark handles so the fitted estimator pickles cleanly
     (reference behavior: `del self.sc` at end of every fit)."""

@@ -4,7 +4,8 @@ Reference parity: DistFeatureEliminator (skdist/distribute/
 eliminate.py:47-240): rank features by an initial fit's
 coef_/feature_importances_, build stepped removal sets, CV-score every
 (feature_subset × fold) as its own Spark task, keep the best subset
-and refit on it.
+and refit on it. The scoring is ``search.cv_wave`` with one candidate
+per feature subset, the same task wave as the searches.
 """
 
 from __future__ import annotations
@@ -14,23 +15,8 @@ import numpy as np
 from ..ml.base import BaseEstimator, ClassifierMixin, clone, is_classifier
 from ..ml.metrics import get_scorer
 from ..ml.model_selection import check_cv
-from ._engine import fold_fit_params, run_tasks, safe_indexing, strip_spark
-
-
-def _fit_subset_task(task: dict, shared: dict) -> dict:
-    X, y = shared["X"], shared["y"]
-    train, test = shared["folds"][task["fold_idx"]]
-    keep = shared["keep_sets"][task["set_idx"]]
-    est = clone(shared["estimator"])
-    Xk = np.asarray(X, dtype=np.float64)[:, keep]
-    fit_params = fold_fit_params(Xk, shared["fit_params"], train)
-    est.fit(safe_indexing(Xk, train), safe_indexing(y, train), **fit_params)
-    scorer = get_scorer(shared["scoring"])
-    return {
-        "set_idx": task["set_idx"],
-        "fold_idx": task["fold_idx"],
-        "score": float(scorer(est, safe_indexing(Xk, test), safe_indexing(y, test))),
-    }
+from ._engine import fit_fold, strip_spark
+from .search import cv_wave
 
 
 class DistFeatureEliminator(BaseEstimator, ClassifierMixin):
@@ -70,8 +56,7 @@ class DistFeatureEliminator(BaseEstimator, ClassifierMixin):
         if step <= 0:
             raise ValueError("step must be > 0")
 
-        initial = clone(self.estimator)
-        initial.fit(X, y, **fit_params)
+        initial = fit_fold(clone(self.estimator), X, y, fit_params)
         coefs = getattr(initial, "coef_", None)
         if coefs is None:
             coefs = getattr(initial, "feature_importances_", None)
@@ -94,32 +79,19 @@ class DistFeatureEliminator(BaseEstimator, ClassifierMixin):
 
         cv = check_cv(self.cv, y, is_classifier(self.estimator))
         folds = list(cv.split(X, y, groups))
-        tasks = [
-            {"set_idx": si, "fold_idx": fi}
-            for si in range(len(keep_sets))
-            for fi in range(len(folds))
-        ]
-        shared = {
-            "X": X,
-            "y": y,
-            "folds": folds,
-            "keep_sets": keep_sets,
-            "estimator": clone(self.estimator),
-            "scoring": self.scoring,
-            "fit_params": fit_params,
-        }
-        results = run_tasks(self.sc, tasks, _fit_subset_task, shared, self.partitions)
-
-        scores = np.zeros((len(keep_sets), len(folds)))
-        for r in results:
-            scores[r["set_idx"], r["fold_idx"]] = r["score"]
-        self.scores_ = scores.mean(axis=1).tolist()
+        test, *_ = cv_wave(
+            self.sc, self.partitions, X, y, folds, [self.estimator],
+            [(0, {}, keep) for keep in keep_sets], {"score": get_scorer(self.scoring)},
+            fit_params, error_score="raise",
+        )
+        self.scores_ = test["score"].mean(axis=1).tolist()
         best = int(np.argmax(self.scores_))
         self.best_score_ = float(self.scores_[best])
         self.best_features_ = keep_sets[best]
         self.n_features_ = len(self.best_features_)
-        self.best_estimator_ = clone(self.estimator)
-        self.best_estimator_.fit(X[:, self.best_features_], y, **fit_params)
+        self.best_estimator_ = fit_fold(
+            clone(self.estimator), X[:, self.best_features_], y, fit_params
+        )
         strip_spark(self)
         return self
 

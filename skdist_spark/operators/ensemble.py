@@ -1,11 +1,19 @@
-"""Distributed tree ensembles — one Spark task per tree.
+"""Distributed tree ensembles — one Spark task per tree — and
+out-of-fold predictions.
 
 Reference parity: DistRandomForestClassifier/Regressor,
 DistExtraTreesClassifier/Regressor, DistRandomTreesEmbedding
 (skdist/distribute/ensemble.py:365-716). Each tree trains on broadcast
-data in its own Spark task (bootstrap resample for forests, full
-sample + random splits for extra-trees), then ships back pickled; the
-ensemble aggregates probabilities/means on the driver at predict time.
+data in its own Spark task, then ships back pickled; the ensemble
+aggregates probabilities/means on the driver at predict time. A
+forest tree fits with its bootstrap counts times ``sample_weight`` as
+row weights; extra-trees default to no bootstrap (the full sample,
+weighted by ``sample_weight``) and use the same CART splitter.
+
+``get_single_oof`` is the one fold-prediction step: ``get_oof`` runs
+it per fold as Spark tasks, and the searches' ``preds_`` run it per
+fold on the driver. Its fit, like every task-grid fit, is
+``_engine.fit_fold``.
 """
 
 from __future__ import annotations
@@ -14,30 +22,32 @@ import numpy as np
 
 from ..ml.base import BaseEstimator, ClassifierMixin, RegressorMixin, clone
 from ..ml.tree import DecisionTreeClassifier, DecisionTreeRegressor
-from ._engine import run_tasks, safe_indexing, strip_spark
+from ._engine import fit_fold, run_tasks, safe_indexing, strip_spark
 
 
-def get_single_oof(clf, X, y, train_index, test_index):
-    """Fit ``clf`` on the train rows and ``predict_proba`` the test rows.
+def get_single_oof(clf, X, y, train_index, test_index, **fit_params):
+    """Fit ``clf`` on the train rows and predict the test rows.
 
     Reference parity: skdist/distribute/ensemble.py:112-127 — same
     in-place fit, same (test_index, proba) return; the building block
-    of out-of-fold stacking features.
+    of out-of-fold stacking features and of the searches' ``preds_``.
+    Per-row ``fit_params`` are sliced to the train rows. An estimator
+    without ``predict_proba`` returns ``predict`` as one column.
     """
-    y = np.asarray(y)
-    clf.fit(safe_indexing(X, train_index), y[train_index])
-    return test_index, clf.predict_proba(safe_indexing(X, test_index))
+    fit_fold(clf, X, y, fit_params, train_index)
+    X_test = safe_indexing(X, test_index)
+    try:
+        return test_index, clf.predict_proba(X_test)
+    except AttributeError:
+        return test_index, np.asarray(clf.predict(X_test)).reshape(-1, 1)
 
 
-def _oof_task(task: dict, shared: dict):
+def _oof_task(task, shared: dict):
+    """One fold's ``get_single_oof``, or (``task`` None) the full fit."""
     clf = clone(shared["clf"])
-    if task["kind"] == "full":
-        clf.fit(shared["X"], shared["y"])
-        return ("full", clf)
-    test_index, proba = get_single_oof(
-        clf, shared["X"], shared["y"], task["train"], task["test"]
-    )
-    return ("fold", (test_index, proba))
+    if task is None:
+        return fit_fold(clf, shared["X"], shared["y"], {})
+    return get_single_oof(clf, shared["X"], shared["y"], *task)
 
 
 def get_oof(clf, X, y, n_splits=5, sc=None, partitions="auto"):
@@ -60,18 +70,10 @@ def get_oof(clf, X, y, n_splits=5, sc=None, partitions="auto"):
     X = X if hasattr(X, "iloc") else np.asarray(X)
     y = np.asarray(y)
     oof = np.zeros((y.shape[0], len(np.unique(y))))
-    folds = list(KFold(n_splits=n_splits).split(X))
-    tasks = [
-        {"kind": "fold", "train": tr, "test": te} for tr, te in folds
-    ] + [{"kind": "full"}]
-    results = run_tasks(sc, tasks, _oof_task, {"clf": clf, "X": X, "y": y}, partitions)
-    model = None
-    for kind, payload in results:
-        if kind == "full":
-            model = payload
-        else:
-            test_index, proba = payload
-            oof[test_index] = proba
+    tasks = list(KFold(n_splits=n_splits).split(X)) + [None]
+    *fold_preds, model = run_tasks(sc, tasks, _oof_task, {"clf": clf, "X": X, "y": y}, partitions)
+    for test_index, proba in fold_preds:
+        oof[test_index] = proba
     strip_spark(model)
     return model, oof
 
@@ -84,12 +86,11 @@ def _fit_tree_task(task: dict, shared: dict):
     est = clone(shared["base_tree"])
     est.set_params(random_state=seed)
     n = len(X)
+    sw = shared["sample_weight"]
     if shared["bootstrap"]:
-        idx = rng.randint(0, n, n)
-        sw = np.bincount(idx, minlength=n).astype(np.float64)
-        est.fit(X, y, sample_weight=sw)
-    else:
-        est.fit(X, y)
+        counts = np.bincount(rng.randint(0, n, n), minlength=n).astype(np.float64)
+        sw = counts if sw is None else counts * sw
+    est.fit(X, y, sample_weight=sw)
     return est
 
 
@@ -128,13 +129,16 @@ class _DistBaseForest(BaseEstimator):
             max_features=self.max_features,
         )
 
-    def _fit_forest(self, X, y):
+    def _fit_forest(self, X, y, sample_weight):
         ss = np.random.SeedSequence(self.random_state)
         seeds = [int(s) % (2**31 - 1) for s in ss.generate_state(self.n_estimators)]
         tasks = [{"seed": s} for s in seeds]
         shared = {
             "X": np.asarray(X, dtype=np.float64),
             "y": np.asarray(y),
+            "sample_weight": (
+                None if sample_weight is None else np.asarray(sample_weight, dtype=np.float64)
+            ),
             "base_tree": self._base_tree(),
             "bootstrap": self.bootstrap,
         }
@@ -148,7 +152,7 @@ class DistRandomForestClassifier(_DistBaseForest, ClassifierMixin):
 
     def fit(self, X, y, sample_weight=None):
         self.classes_ = np.unique(np.asarray(y))
-        return self._fit_forest(X, y)
+        return self._fit_forest(X, y, sample_weight)
 
     def predict_proba(self, X):
         # trees were fit on the full class set (classes_ from full y),
@@ -170,7 +174,7 @@ class DistRandomForestRegressor(_DistBaseForest, RegressorMixin):
     _tree_cls = DecisionTreeRegressor
 
     def fit(self, X, y, sample_weight=None):
-        return self._fit_forest(X, y)
+        return self._fit_forest(X, y, sample_weight)
 
     def predict(self, X):
         preds = np.zeros(len(np.asarray(X)))

@@ -13,7 +13,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..ml.base import BaseEstimator, ClassifierMixin, clone
-from ._engine import fold_fit_params, run_tasks, safe_indexing, strip_spark
+from ._engine import fit_fold, run_tasks, strip_spark
 
 
 def _unwrap_best(est):
@@ -39,22 +39,16 @@ def _fit_ovr_task(task: dict, shared: dict):
             rng = np.random.RandomState(shared["random_state"])
             neg = rng.choice(neg, size=max(n_keep, 1), replace=False)
         idx = np.sort(np.concatenate([pos, neg]))
-    est = clone(shared["estimator"])
-    fit_params = fold_fit_params(X, shared["fit_params"], idx)
-    est.fit(safe_indexing(X, idx), y_bin[idx], **fit_params)
+    est = fit_fold(clone(shared["estimator"]), X, y_bin, shared["fit_params"], idx)
     return _unwrap_best(est)
 
 
 def _fit_ovo_task(task: dict, shared: dict):
-    X, y = shared["X"], shared["y"]
     a, b = task["pair"]
-    y_arr = np.asarray(y)
-    mask = (y_arr == a) | (y_arr == b)
-    idx = np.where(mask)[0]
-    y_bin = (y_arr[idx] == b).astype(np.int64)
-    est = clone(shared["estimator"])
-    fit_params = fold_fit_params(X, shared["fit_params"], idx)
-    est.fit(safe_indexing(X, idx), y_bin, **fit_params)
+    y_arr = np.asarray(shared["y"])
+    idx = np.flatnonzero((y_arr == a) | (y_arr == b))
+    y_bin = (y_arr == b).astype(np.int64)
+    est = fit_fold(clone(shared["estimator"]), shared["X"], y_bin, shared["fit_params"], idx)
     return _unwrap_best(est)
 
 

@@ -1,10 +1,20 @@
-"""Distributed hyperparameter search meta-estimators.
+"""Distributed hyperparameter search meta-estimators, and the one
+cross-validation wave every Dist* CV estimator runs.
 
 Reference parity: DistGridSearchCV / DistRandomizedSearchCV /
 DistMultiModelSearch (skdist/distribute/search.py:584,648,717) — same
 constructor surface and fitted attributes (cv_results_, best_params_,
 best_score_, best_estimator_, ...), re-expressed on the task-grid
 engine (one Spark task per candidate×fold, data broadcast once).
+
+``cv_wave`` is that (candidate × fold) grid: a candidate is (index into
+a shipped estimator list, params, feature subset or None), and every
+task is one ``_fit_score_task``. The searches use it with one
+estimator, DistMultiModelSearch with its model list, and
+DistFeatureEliminator (``eliminate.py``) with one candidate per
+feature subset. Every fit, here and in the other task grids, goes
+through ``_engine.fit_fold``; the ``preds=True`` fold predictions are
+``ensemble.get_single_oof``, as in ``get_oof``.
 
 Works with any estimator speaking the sklearn protocol — the bundled
 ``skdist_spark.ml`` estimators or real scikit-learn objects.
@@ -20,81 +30,100 @@ import numpy as np
 from ..ml.base import BaseEstimator, clone, is_classifier
 from ..ml.metrics import check_multimetric_scoring, get_scorer
 from ..ml.model_selection import ParameterGrid, ParameterSampler, check_cv
-from ._engine import fold_fit_params, rankdata_min, run_tasks, safe_indexing, strip_spark
+from ._engine import fit_fold, rankdata_min, run_tasks, safe_indexing, strip_spark
+from .ensemble import get_single_oof
 
 
-def _fold_estimator(task: dict, shared: dict):
-    """Unfitted clone of ``shared["estimator"]`` with ``task["params"]``."""
-    est = clone(shared["estimator"])
-    if task["params"]:
-        est.set_params(**task["params"])
-    return est
-
-
-def _fit_fold(est, shared: dict, train) -> None:
-    """Fit ``est`` on the ``train`` rows, per-row fit params sliced to them."""
-    X, y = shared["X"], shared["y"]
-    fit_params = fold_fit_params(X, shared["fit_params"], train)
-    if y is None:
-        est.fit(safe_indexing(X, train), **fit_params)
-    else:
-        est.fit(safe_indexing(X, train), safe_indexing(y, train), **fit_params)
-
-
-def _fold_preds_task(task: dict, shared: dict) -> np.ndarray:
-    """Fit one candidate on a fold's train rows; predict its test rows
-    (``predict_proba``, else ``predict`` as one column)."""
-    train, test = shared["folds"][task["fold_idx"]]
-    est = _fold_estimator(task, shared)
-    _fit_fold(est, shared, train)
-    X_test = safe_indexing(shared["X"], test)
-    try:
-        return est.predict_proba(X_test)
-    except Exception:
-        return np.asarray(est.predict(X_test)).reshape(-1, 1)
-
-
-def _fit_score_task(task: dict, shared: dict) -> dict:
-    """One (candidate, fold) fit+score — runs inside a Spark task.
+def _fit_score_task(task: tuple[int, int], shared: dict) -> dict:
+    """One (candidate, fold) fit and score — runs inside a Spark task.
 
     Scores every scorer in ``shared["scorers"]`` (reference
-    _multimetric_score, utils.py:18-42): ``test_scores`` /
-    ``train_scores`` map metric name -> float. Single-metric callers
-    use the one-entry ``{"score": ...}`` dict, same as the reference.
+    _multimetric_score, utils.py:18-42): ``test`` / ``train`` map
+    metric name -> float. A failed fit scores ``error_score`` unless
+    that is ``"raise"``.
     """
+    cand_idx, fold_idx = task
+    est_idx, params, features = shared["candidates"][cand_idx]
     X, y = shared["X"], shared["y"]
-    train, test = shared["folds"][task["fold_idx"]]
-    est = _fold_estimator(task, shared)
-    scorers = shared.get("scorers") or {"score": get_scorer(shared.get("scoring"))}
+    if features is not None:
+        X = X[:, features]
+    train, test = shared["folds"][fold_idx]
+    est = clone(shared["estimators"][est_idx])
+    if params:
+        est.set_params(**params)
+    scorers = shared["scorers"]
 
-    def _score_all(Xs, ys):
+    def _score_all(rows):
+        Xs, ys = safe_indexing(X, rows), safe_indexing(y, rows)
         return {name: float(s(est, Xs, ys)) for name, s in scorers.items()}
 
-    out = dict(task)
+    out = {}
     t0 = time.perf_counter()
     try:
-        _fit_fold(est, shared, train)
+        fit_fold(est, X, y, shared["fit_params"], train)
         out["fit_time"] = time.perf_counter() - t0
         t1 = time.perf_counter()
-        out["test_scores"] = _score_all(safe_indexing(X, test), safe_indexing(y, test))
+        out["test"] = _score_all(test)
         out["score_time"] = time.perf_counter() - t1
         if shared["return_train_score"]:
-            out["train_scores"] = _score_all(
-                safe_indexing(X, train), safe_indexing(y, train)
-            )
-    except Exception as exc:
+            out["train"] = _score_all(train)
+    except Exception:
         if shared["error_score"] == "raise":
             raise
         out["fit_time"] = time.perf_counter() - t0
         out["score_time"] = 0.0
-        out["test_scores"] = {name: float(shared["error_score"]) for name in scorers}
+        out["test"] = {name: float(shared["error_score"]) for name in scorers}
         if shared["return_train_score"]:
-            out["train_scores"] = dict(out["test_scores"])
-        out["fit_error"] = repr(exc)
-    # single-metric alias kept for callers that read a scalar
-    out["test_score"] = next(iter(out["test_scores"].values()))
-    out["n_test"] = len(test)
+            out["train"] = dict(out["test"])
     return out
+
+
+def cv_wave(
+    sc,
+    partitions,
+    X,
+    y,
+    folds: list,
+    estimators: list,
+    candidates: list[tuple[int, dict, Any]],
+    scorers: dict,
+    fit_params: dict,
+    return_train_score: bool = False,
+    error_score=np.nan,
+) -> tuple[dict, dict, np.ndarray, np.ndarray]:
+    """Fit and score every (candidate, fold) pair in one task wave.
+
+    ``candidates`` holds ``(index into estimators, params, feature
+    columns or None)``; tasks run candidate-major, one per pair.
+    Returns ``(test, train, fit_time, score_time)``: ``test``/``train``
+    map each scorer name to an (n_candidates, n_splits) score array
+    (``train`` is empty unless ``return_train_score``), the times are
+    (n_candidates, n_splits) seconds.
+    """
+    shape = (len(candidates), len(folds))
+    tasks = [(ci, fi) for ci in range(shape[0]) for fi in range(shape[1])]
+    shared = {
+        "X": X,
+        "y": y,
+        "folds": folds,
+        "estimators": [clone(e) for e in estimators],
+        "candidates": candidates,
+        "scorers": scorers,
+        "fit_params": fit_params,
+        "return_train_score": bool(return_train_score),
+        "error_score": error_score,
+    }
+    results = run_tasks(sc, tasks, _fit_score_task, shared, partitions)
+
+    def grid(values) -> np.ndarray:
+        return np.array(values, dtype=np.float64).reshape(shape)
+
+    test = {m: grid([r["test"][m] for r in results]) for m in scorers}
+    train = {}
+    if return_train_score:
+        train = {m: grid([r["train"][m] for r in results]) for m in scorers}
+    return (test, train, grid([r["fit_time"] for r in results]),
+            grid([r["score_time"] for r in results]))
 
 
 class DistBaseSearchCV(BaseEstimator):
@@ -130,42 +159,17 @@ class DistBaseSearchCV(BaseEstimator):
                 f" totalling {n_candidates * n_splits} fits"
             )
 
-        tasks = [
-            {"cand_idx": ci, "fold_idx": fi, "params": params}
-            for ci, params in enumerate(candidates)
-            for fi in range(n_splits)
-        ]
-        shared = {
-            "X": X,
-            "y": y,
-            "folds": folds,
-            "estimator": clone(estimator),
-            "scorers": scorers,
-            "fit_params": fit_params,
-            "return_train_score": bool(self.return_train_score),
-            "error_score": self.error_score,
-        }
-        results = run_tasks(self.sc, tasks, _fit_score_task, shared, self.partitions)
-
-        names = list(scorers)
-        test = {m: np.full((n_candidates, n_splits), np.nan) for m in names}
-        train = {m: np.full((n_candidates, n_splits), np.nan) for m in names}
-        fit_t = np.zeros((n_candidates, n_splits))
-        score_t = np.zeros((n_candidates, n_splits))
-        for r in results:
-            ci, fi = r["cand_idx"], r["fold_idx"]
-            fit_t[ci, fi] = r["fit_time"]
-            score_t[ci, fi] = r["score_time"]
-            for m in names:
-                test[m][ci, fi] = r["test_scores"][m]
-                if "train_scores" in r:
-                    train[m][ci, fi] = r["train_scores"][m]
+        test, train, fit_t, score_t = cv_wave(
+            self.sc, self.partitions, X, y, folds, [estimator],
+            [(0, params, None) for params in candidates], scorers, fit_params,
+            self.return_train_score, self.error_score,
+        )
 
         # per-metric result columns; the single-metric scorer dict is
         # {"score": ...} so the classic *_score names fall out unchanged
         out: dict[str, Any] = {}
-        mean_test = {m: test[m].mean(axis=1) for m in names}
-        for m in names:
+        mean_test = {m: test[m].mean(axis=1) for m in scorers}
+        for m in scorers:
             out[f"mean_test_{m}"] = mean_test[m]
             out[f"std_test_{m}"] = test[m].std(axis=1)
             for fi in range(n_splits):
@@ -176,7 +180,7 @@ class DistBaseSearchCV(BaseEstimator):
         out["mean_score_time"] = score_t.mean(axis=1)
         out["std_score_time"] = score_t.std(axis=1)
         if self.return_train_score:
-            for m in names:
+            for m in scorers:
                 out[f"mean_train_{m}"] = train[m].mean(axis=1)
                 out[f"std_train_{m}"] = train[m].std(axis=1)
                 for fi in range(n_splits):
@@ -199,19 +203,15 @@ class DistBaseSearchCV(BaseEstimator):
             self.best_score_ = float(mean_test[refit_metric][self.best_index_])
 
         if self.refit:
-            best = clone(self.estimator).set_params(**self.best_params_)
-            if y is None:
-                best.fit(X, **fit_params)
-            else:
-                best.fit(X, y, **fit_params)
-            self.best_estimator_ = best
+            def best():
+                return clone(self.estimator).set_params(**self.best_params_)
+
+            self.best_estimator_ = fit_fold(best(), X, y, fit_params)
             if self.preds:
                 # the best candidate's fold fits, serially on the driver
-                fold_tasks = [
-                    {"fold_idx": fi, "params": self.best_params_} for fi in range(n_splits)
-                ]
-                preds = run_tasks(None, fold_tasks, _fold_preds_task, shared)
-                self.preds_ = np.vstack(preds)
+                self.preds_ = np.vstack([
+                    get_single_oof(best(), X, y, tr, te, **fit_params)[1] for tr, te in folds
+                ])
 
         strip_spark(self)
         return self
@@ -318,10 +318,11 @@ class DistRandomizedSearchCV(DistBaseSearchCV):
         )
 
 
-class DistMultiModelSearch(BaseEstimator):
+class DistMultiModelSearch(DistBaseSearchCV):
     """Random search across multiple (name, estimator, param_space)
     models at once; all candidates of all models fan out in one Spark
-    task wave (reference: search.py:717).
+    task wave (reference: search.py:717). Prediction delegates to the
+    refit best model as in the other searches.
     """
 
     def __init__(
@@ -351,7 +352,7 @@ class DistMultiModelSearch(BaseEstimator):
         cv = check_cv(self.cv, y, classifier=is_classifier(models[0][1]))
         folds = list(cv.split(X, y, groups))
 
-        candidates: list[tuple[int, dict]] = []
+        candidates: list[tuple[int, dict, None]] = []
         for mi, (_, _, space) in enumerate(models):
             n_iter = min(self.n, len(ParameterGrid(space))) if all(
                 not hasattr(v, "rvs") for v in space.values()
@@ -361,74 +362,37 @@ class DistMultiModelSearch(BaseEstimator):
                 n_iter,
                 random_state=None if self.random_state is None else self.random_state + mi,
             )
-            candidates.extend((mi, params) for params in sampler)
+            candidates.extend((mi, params, None) for params in sampler)
 
-        tasks = [
-            {"cand_idx": ci, "fold_idx": fi, "params": params, "model_idx": mi}
-            for ci, (mi, params) in enumerate(candidates)
-            for fi in range(len(folds))
-        ]
-
-        # the estimator differs per task -> ship the estimator list once
-        def _work(task, shared):
-            inner = dict(shared)
-            inner["estimator"] = shared["estimators"][task["model_idx"]]
-            return _fit_score_task(task, inner)
-
-        shared = {
-            "X": X,
-            "y": y,
-            "folds": folds,
-            "estimators": [clone(m[1]) for m in models],
-            "scoring": self.scoring,
-            "fit_params": fit_params,
-            "return_train_score": False,
-            "error_score": np.nan,
-        }
-        results = run_tasks(self.sc, tasks, _work, shared, self.partitions)
-
-        n_cand = len(candidates)
-        scores = np.full((n_cand, len(folds)), np.nan)
-        for r in results:
-            scores[r["cand_idx"], r["fold_idx"]] = r["test_score"]
-        mean_scores = scores.mean(axis=1)
+        self.scorer_ = get_scorer(self.scoring)
+        test, *_ = cv_wave(
+            self.sc, self.partitions, X, y, folds, [m[1] for m in models], candidates,
+            {"score": self.scorer_}, fit_params,
+        )
+        mean_scores = test["score"].mean(axis=1)
 
         self.best_index_ = int(np.argmax(mean_scores))
-        best_mi, best_params = candidates[self.best_index_]
+        best_mi, best_params, _ = candidates[self.best_index_]
         self.best_model_index_ = best_mi
         self.best_model_name_ = models[best_mi][0]
         self.best_params_ = best_params
         self.best_score_ = float(mean_scores[self.best_index_])
         self.cv_results_ = {
-            "model_index": [mi for mi, _ in candidates],
-            "model_name": [models[mi][0] for mi, _ in candidates],
-            "params": [p for _, p in candidates],
+            "model_index": [c[0] for c in candidates],
+            "model_name": [models[c[0]][0] for c in candidates],
+            "params": [c[1] for c in candidates],
             "mean_test_score": mean_scores.tolist(),
             "rank_test_score": rankdata_min(-mean_scores).tolist(),
         }
         if self.verbose:
             by_model = {}
-            for (mi, _), s in zip(candidates, mean_scores):
+            for (mi, _, _), s in zip(candidates, mean_scores):
                 by_model[models[mi][0]] = max(by_model.get(models[mi][0], -np.inf), s)
             print(by_model)
 
         if self.refit:
             best = clone(models[best_mi][1]).set_params(**best_params)
-            best.fit(X, y, **fit_params)
-            self.best_estimator_ = best
+            self.best_estimator_ = fit_fold(best, X, y, fit_params)
 
         strip_spark(self)
         return self
-
-    def predict(self, X):
-        return self.best_estimator_.predict(X)
-
-    def predict_proba(self, X):
-        return self.best_estimator_.predict_proba(X)
-
-    def decision_function(self, X):
-        return self.best_estimator_.decision_function(X)
-
-    @property
-    def classes_(self):
-        return self.best_estimator_.classes_

@@ -434,6 +434,55 @@ def test_best_split_matches_per_feature_reference(k, kind, weights):
                 assert np.float64(got[2]).tobytes() == np.float64(want[2]).tobytes()
 
 
+def test_min_samples_leaf_scores_only_valid_positions():
+    """The best split among positions leaving min_samples_leaf rows a
+    side is taken, not refused because a better invalid one exists."""
+    X = np.arange(42, dtype=np.float64).reshape(-1, 1)
+    y = np.isin(np.arange(42), [0, 2, 40, 41]).astype(int)
+    one = DecisionTreeClassifier(max_depth=1, min_samples_leaf=1).fit(X, y)
+    assert one.tree_.feature[0] == 0 and one.tree_.threshold[0] == 39.5
+    three = DecisionTreeClassifier(max_depth=1, min_samples_leaf=3).fit(X, y)
+    assert three.tree_.feature[0] == 0 and three.tree_.threshold[0] == 2.5
+    assert sorted(np.bincount(three.apply(X))[1:]) == [3, 39]
+
+
+@pytest.mark.parametrize("leaf", [3, 5, 13])
+@pytest.mark.parametrize("k", [3, 0])
+def test_min_samples_leaf_root_split_matches_brute_force(leaf, k):
+    """Root split against every threshold scored from scratch; every
+    leaf of the grown tree keeps at least ``leaf`` rows. The two rows
+    lowest on feature 0 get a heavy label of their own, so the best
+    split overall isolates them and is too small."""
+    X, y, sw = _split_case("float", 120, 4, k, "float", leaf)
+    low = np.argsort(X[:, 0])[:2]
+    y[low] = k if k else y.max() + 40
+    sw[low] = 30.0
+    k = k and k + 1
+    est = DecisionTreeClassifier if k else DecisionTreeRegressor
+
+    def impurity(rows):
+        w = sw[rows]
+        if k:
+            p = np.bincount(y[rows], weights=w, minlength=k) / w.sum()
+            return w.sum() * (1 - np.sum(p**2))
+        return np.sum(w * (y[rows] - np.average(y[rows], weights=w)) ** 2)
+
+    best = None
+    for f in range(4):
+        xs = np.unique(X[:, f])
+        for thr in (xs[:-1] + xs[1:]) / 2:
+            left = X[:, f] <= thr
+            if min(left.sum(), (~left).sum()) < leaf:
+                continue
+            child = impurity(np.flatnonzero(left)) + impurity(np.flatnonzero(~left))
+            if best is None or child < best[0] - 1e-9:
+                best = (child, f, thr)
+    root = est(max_depth=1, min_samples_leaf=leaf).fit(X, y, sample_weight=sw)
+    assert (root.tree_.feature[0], root.tree_.threshold[0]) == best[1:]
+    sizes = np.bincount(est(min_samples_leaf=leaf).fit(X, y, sample_weight=sw).apply(X))
+    assert sizes[sizes > 0].min() >= leaf
+
+
 def _tree_arrays(est):
     t = est.tree_
     return (np.asarray(t.feature).tobytes(), np.asarray(t.threshold).tobytes(),

@@ -7,8 +7,17 @@ import pickle
 import numpy as np
 import pytest
 
-from skdist_spark.ml import DecisionTreeClassifier, LogisticRegression, Ridge, log_loss
+from skdist_spark.ml import (
+    DecisionTreeClassifier,
+    DecisionTreeRegressor,
+    LogisticRegression,
+    Ridge,
+    log_loss,
+)
+from skdist_spark.ml.base import clone
 from skdist_spark.operators import (
+    DistExtraTreesClassifier,
+    DistExtraTreesRegressor,
     DistFeatureEliminator,
     DistGridSearchCV,
     DistMultiModelSearch,
@@ -225,6 +234,52 @@ def test_multi_model_search(spark, data):
     assert m.predict(X).shape == y.shape
 
 
+@pytest.mark.parametrize("weighted", [False, True])
+def test_multi_model_search_exact(spark, weighted):
+    """Spark and serial fits agree bit for bit, and every candidate's
+    mean score is the mean of hand-made fold fits (weights sliced)."""
+    X, y, sw = _noisy()
+    fit_params = {"sample_weight": sw} if weighted else {}
+    models = [
+        ("lr", LogisticRegression(max_iter=80), {"C": [0.05, 1.0]}),
+        ("tree", DecisionTreeClassifier(random_state=0), {"max_depth": [2, 4, 6]}),
+    ]
+    kw = dict(n=2, cv=3, random_state=3, scoring="neg_log_loss")
+    dist = DistMultiModelSearch(models, sc=spark, **kw).fit(X, y, **fit_params)
+    serial = DistMultiModelSearch(models, sc=None, **kw).fit(X, y, **fit_params)
+    assert dist.cv_results_ == serial.cv_results_
+    for attr in ("best_index_", "best_model_index_", "best_model_name_",
+                 "best_params_", "best_score_"):
+        assert getattr(dist, attr) == getattr(serial, attr), attr
+    assert dist.predict_proba(X).tobytes() == serial.predict_proba(X).tobytes()
+
+    res = dist.cv_results_
+    assert res["model_index"] == [0, 0, 1, 1]
+    for ci, (mi, params) in enumerate(zip(res["model_index"], res["params"])):
+        fold_scores = []
+        for tr, te in _cv_folds(X, y):
+            est = clone(models[mi][1]).set_params(**params)
+            est.fit(X[tr], y[tr], **{k: v[tr] for k, v in fit_params.items()})
+            fold_scores.append(-log_loss(y[te], est.predict_proba(X[te]), labels=est.classes_))
+        np.testing.assert_allclose(res["mean_test_score"][ci], np.mean(fold_scores), rtol=1e-12)
+    assert dist.best_index_ == int(np.argmax(res["mean_test_score"]))
+    best = clone(models[dist.best_model_index_][1]).set_params(**dist.best_params_)
+    best.fit(X, y, **fit_params)
+    assert dist.predict_proba(X).tobytes() == best.predict_proba(X).tobytes()
+
+
+def test_multi_model_search_without_refit_raises_like_grid_search(data):
+    X, y = data
+    models = [("lr", LogisticRegression(), {"C": [0.1, 1.0]})]
+    m = DistMultiModelSearch(models, n=2, cv=3, refit=False).fit(X, y)
+    g = DistGridSearchCV(LogisticRegression(), {"C": [0.1, 1.0]}, cv=3, refit=False).fit(X, y)
+    with pytest.raises(RuntimeError) as grid_err:
+        g.predict(X)
+    with pytest.raises(RuntimeError) as multi_err:
+        m.predict(X)
+    assert str(multi_err.value) == str(grid_err.value)
+
+
 def test_ovr(spark, data):
     X, y = data
     m = DistOneVsRestClassifier(LogisticRegression(), sc=spark).fit(X, y)
@@ -301,6 +356,37 @@ def test_forest_regressor(spark):
     assert m.score(X, y) > 0.8
 
 
+def _tree_output(model, X):
+    return model.predict_proba(X) if hasattr(model, "predict_proba") else model.predict(X)
+
+
+@pytest.mark.parametrize("cls", [DistRandomForestClassifier, DistRandomForestRegressor,
+                                 DistExtraTreesClassifier, DistExtraTreesRegressor])
+def test_forest_trees_use_sample_weight(spark, cls):
+    """Each tree fits with its bootstrap counts times ``sample_weight``
+    (the weights alone without bootstrap), seeded as the forest seeds it."""
+    X, y, sw = _noisy()
+    regress = cls in (DistRandomForestRegressor, DistExtraTreesRegressor)
+    if regress:
+        y = X @ np.arange(1.0, 6.0) + np.random.RandomState(0).randn(len(y))
+    tree_cls = DecisionTreeRegressor if regress else DecisionTreeClassifier
+    kw = dict(n_estimators=4, max_depth=5, max_features=0.6, random_state=3)
+    seeds = [int(s) % (2**31 - 1) for s in np.random.SeedSequence(3).generate_state(4)]
+    plain = cls(sc=spark, **kw).fit(X, y)
+    weighted = cls(sc=spark, **kw).fit(X, y, sample_weight=sw)
+    for w, forest in ((None, plain), (sw, weighted)):
+        for seed, tree in zip(seeds, forest.estimators_):
+            tree_w = w
+            if forest.bootstrap:
+                counts = np.bincount(np.random.RandomState(seed).randint(0, len(y), len(y)),
+                                     minlength=len(y)).astype(np.float64)
+                tree_w = counts if w is None else counts * w
+            want = tree_cls(max_depth=5, max_features=0.6, random_state=seed)
+            want.fit(X, y, sample_weight=tree_w)
+            assert _tree_output(tree, X).tobytes() == _tree_output(want, X).tobytes()
+    assert _tree_output(weighted, X).tobytes() != _tree_output(plain, X).tobytes()
+
+
 def test_random_trees_embedding(spark, data):
     X, _ = data
     m = DistRandomTreesEmbedding(n_estimators=8, sc=spark, max_depth=4, random_state=0).fit(X)
@@ -320,6 +406,75 @@ def test_feature_eliminator(spark):
     assert m.n_features_ <= 10
     assert m.best_score_ > 0.85
     assert m.predict(X).shape == y.shape
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_feature_eliminator_exact(spark, weighted):
+    """Spark and serial fits agree bit for bit, and every keep-set's
+    score is the mean of hand-made fold fits on its columns."""
+    X, y, sw = _noisy(d=7)
+    fit_params = {"sample_weight": sw} if weighted else {}
+    kw = dict(min_features_to_select=3, step=2, cv=3, scoring="neg_log_loss")
+    dist = DistFeatureEliminator(LogisticRegression(max_iter=80), sc=spark, **kw)
+    dist.fit(X, y, **fit_params)
+    serial = DistFeatureEliminator(LogisticRegression(max_iter=80), sc=None, **kw)
+    serial.fit(X, y, **fit_params)
+    assert dist.scores_ == serial.scores_
+    assert dist.best_score_ == serial.best_score_
+    assert dist.best_features_.tolist() == serial.best_features_.tolist()
+    assert dist.best_estimator_.coef_.tobytes() == serial.best_estimator_.coef_.tobytes()
+
+    # keep-sets by hand: drop the 2, then 4 features of least squared coef
+    coef = LogisticRegression(max_iter=80).fit(X, y, **fit_params).coef_
+    ranks = np.argsort((coef**2).sum(axis=0))
+    keep_sets = [np.delete(np.arange(7), ranks[:r]) for r in (0, 2, 4)]
+    assert len(dist.scores_) == len(keep_sets)
+    for keep, got in zip(keep_sets, dist.scores_):
+        fold_scores = []
+        for tr, te in _cv_folds(X, y):
+            est = LogisticRegression(max_iter=80).fit(
+                X[tr][:, keep], y[tr], **{k: v[tr] for k, v in fit_params.items()}
+            )
+            fold_scores.append(
+                -log_loss(y[te], est.predict_proba(X[te][:, keep]), labels=est.classes_)
+            )
+        np.testing.assert_allclose(got, np.mean(fold_scores), rtol=1e-12)
+    best = int(np.argmax(dist.scores_))
+    assert dist.best_features_.tolist() == keep_sets[best].tolist()
+    want = LogisticRegression(max_iter=80).fit(X[:, keep_sets[best]], y, **fit_params)
+    assert dist.best_estimator_.coef_.tobytes() == want.coef_.tobytes()
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_searches_spark_match_serial_exactly(spark, weighted):
+    """Grid and randomized search: every non-timing ``cv_results_``
+    column, ``best_*`` and ``preds_`` are equal with and without Spark."""
+    X, y, sw = _noisy()
+    fit_params = {"sample_weight": sw} if weighted else {}
+    kw = dict(cv=3, scoring=["accuracy", "neg_log_loss"], refit="neg_log_loss",
+              return_train_score=True, preds=True)
+    makers = [
+        lambda sc: DistGridSearchCV(
+            LogisticRegression(max_iter=80), {"C": [0.05, 1.0]}, sc=sc, **kw),
+        lambda sc: DistRandomizedSearchCV(
+            LogisticRegression(max_iter=80), {"C": [0.01, 0.1, 1.0], "lr": [0.05, 0.1]},
+            sc=sc, n_iter=3, random_state=4, **kw),
+    ]
+    for make in makers:
+        dist = make(spark).fit(X, y, **fit_params)
+        serial = make(None).fit(X, y, **fit_params)
+        keys = [k for k in serial.cv_results_ if not k.endswith("_time")]
+        assert keys == [k for k in dist.cv_results_ if not k.endswith("_time")]
+        for k in keys:
+            got, want = dist.cv_results_[k], serial.cv_results_[k]
+            if isinstance(want, np.ndarray) and want.dtype != object:
+                assert got.dtype == want.dtype and got.tobytes() == want.tobytes(), k
+            else:
+                assert list(got) == list(want), k
+        assert (dist.best_index_, dist.best_params_, dist.best_score_) == (
+            serial.best_index_, serial.best_params_, serial.best_score_)
+        assert dist.preds_.tobytes() == serial.preds_.tobytes()
+        assert dist.best_estimator_.coef_.tobytes() == serial.best_estimator_.coef_.tobytes()
 
 
 def test_prediction_udf_numpy(spark, data):
