@@ -132,7 +132,8 @@ class _BaseDecisionTree(BaseEstimator):
             f, thr, gain = best
             mask = X[idx, f] <= thr
             # a midpoint that rounds onto the upper value moves its rows left
-            if mask.sum() < self.min_samples_leaf or (~mask).sum() < self.min_samples_leaf:
+            pos = sw[idx] > 0
+            if min((mask & pos).sum(), (~mask & pos).sum()) < self.min_samples_leaf:
                 continue
             importances[f] += gain
             tree.feature[node_id] = int(f)
@@ -158,11 +159,17 @@ class _BaseDecisionTree(BaseEstimator):
             xt = X.T[chunk]  # (features, rows)
             order = np.argsort(xt, axis=1, kind="mergesort")
             xs = np.take_along_axis(xt, order, axis=1)
-            # valid split positions: distinct values, min_samples_leaf rows a side
+            ws = sw[order]
+            # valid split positions: distinct values, min_samples_leaf rows
+            # of positive weight a side (zero-weight rows count for neither).
+            # At 1 no count is needed: a cut leaving one side no weight has
+            # no gain, so it never wins.
             cut = xs[:, :-1] != xs[:, 1:]
-            cut[:, : self.min_samples_leaf - 1] = False
-            cut[:, n - self.min_samples_leaf :] = False
-            left_imp, right_imp = self._prefix_impurities(y[order], sw[order], n_out)
+            if self.min_samples_leaf > 1:
+                n_pos = np.cumsum(ws > 0, axis=1)
+                cut &= n_pos[:, :-1] >= self.min_samples_leaf
+                cut &= n_pos[:, -1:] - n_pos[:, :-1] >= self.min_samples_leaf
+            left_imp, right_imp = self._prefix_impurities(y[order], ws, n_out)
             gain = parent_imp - (left_imp + right_imp)
             gain[~cut] = -np.inf
             top = np.argmax(gain, axis=1)

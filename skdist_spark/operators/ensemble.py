@@ -5,10 +5,13 @@ Reference parity: DistRandomForestClassifier/Regressor,
 DistExtraTreesClassifier/Regressor, DistRandomTreesEmbedding
 (skdist/distribute/ensemble.py:365-716). Each tree trains on broadcast
 data in its own Spark task, then ships back pickled; the ensemble
-aggregates probabilities/means on the driver at predict time. A
-forest tree fits with its bootstrap counts times ``sample_weight`` as
-row weights; extra-trees default to no bootstrap (the full sample,
-weighted by ``sample_weight``) and use the same CART splitter.
+aggregates probabilities/means on the driver at predict time. Every
+tree, the embedding's too, is one ``_fit_tree_task`` seeded by
+``_DistBaseForest._fit_forest``. A forest tree fits with its bootstrap
+counts times ``sample_weight`` as row weights; extra-trees default to
+no bootstrap (the full sample, weighted by ``sample_weight``) and use
+the same CART splitter. The embedding's trees never bootstrap and,
+having no target, regress on uniform noise drawn from their seed.
 
 ``get_single_oof`` is the one fold-prediction step: ``get_oof`` runs
 it per fold as Spark tasks, and the searches' ``preds_`` run it per
@@ -80,12 +83,14 @@ def get_oof(clf, X, y, n_splits=5, sc=None, partitions="auto"):
 
 def _fit_tree_task(task: dict, shared: dict):
     X = np.asarray(shared["X"], dtype=np.float64)
-    y = np.asarray(shared["y"])
     seed = task["seed"]
     rng = np.random.RandomState(seed)
     est = clone(shared["base_tree"])
     est.set_params(random_state=seed)
     n = len(X)
+    # no target (the embedding): regress on uniform noise, so the splits
+    # become data-density partitions (scikit-learn's RandomTreesEmbedding)
+    y = rng.uniform(size=n) if shared["y"] is None else np.asarray(shared["y"])
     sw = shared["sample_weight"]
     if shared["bootstrap"]:
         counts = np.bincount(rng.randint(0, n, n), minlength=n).astype(np.float64)
@@ -135,7 +140,7 @@ class _DistBaseForest(BaseEstimator):
         tasks = [{"seed": s} for s in seeds]
         shared = {
             "X": np.asarray(X, dtype=np.float64),
-            "y": np.asarray(y),
+            "y": None if y is None else np.asarray(y),
             "sample_weight": (
                 None if sample_weight is None else np.asarray(sample_weight, dtype=np.float64)
             ),
@@ -209,23 +214,15 @@ class DistExtraTreesRegressor(DistRandomForestRegressor):
         )
 
 
-def _fit_embed_tree_task(task: dict, shared: dict):
-    X = np.asarray(shared["X"], dtype=np.float64)
-    seed = task["seed"]
-    rng = np.random.RandomState(seed)
-    # unsupervised trick: regress on uniform random targets so splits
-    # become data-density partitions (sklearn RandomTreesEmbedding idea)
-    y_rand = rng.uniform(size=len(X))
-    est = DecisionTreeRegressor(
-        max_depth=shared["max_depth"], max_features=1, random_state=seed,
-        min_samples_leaf=shared["min_samples_leaf"],
-    )
-    est.fit(X, y_rand)
-    return est
+class DistRandomTreesEmbedding(_DistBaseForest):
+    """Unsupervised leaf-index embedding (one tree per Spark task).
 
+    Each tree is a ``DecisionTreeRegressor(max_depth, max_features=1,
+    min_samples_leaf)`` fit without bootstrap on ``sample_weight``, to
+    uniform noise drawn from its seed. A row's embedding is one-hot
+    over every tree's leaves."""
 
-class DistRandomTreesEmbedding(BaseEstimator):
-    """Unsupervised leaf-index embedding (one tree per Spark task)."""
+    bootstrap = False
 
     def __init__(self, n_estimators=100, sc=None, partitions="auto",
                  max_depth=5, min_samples_leaf=1, random_state=None):
@@ -236,39 +233,31 @@ class DistRandomTreesEmbedding(BaseEstimator):
         self.min_samples_leaf = min_samples_leaf
         self.random_state = random_state
 
-    def fit(self, X, y=None, sample_weight=None):
-        ss = np.random.SeedSequence(self.random_state)
-        seeds = [int(s) % (2**31 - 1) for s in ss.generate_state(self.n_estimators)]
-        tasks = [{"seed": s} for s in seeds]
-        shared = {
-            "X": np.asarray(X, dtype=np.float64),
-            "max_depth": self.max_depth,
-            "min_samples_leaf": self.min_samples_leaf,
-        }
-        self.estimators_ = run_tasks(
-            self.sc, tasks, _fit_embed_tree_task, shared, self.partitions
+    def _base_tree(self):
+        return DecisionTreeRegressor(
+            max_depth=self.max_depth, max_features=1, min_samples_leaf=self.min_samples_leaf
         )
-        # map each tree's leaf node-ids to embedding columns
-        self._leaf_maps = []
+
+    def fit(self, X, y=None, sample_weight=None):
+        self._fit_forest(X, None, sample_weight)
+        # per tree, node id -> embedding column (-1 for split nodes)
+        self._leaf_columns = []
         offset = 0
         for est in self.estimators_:
-            leaves = sorted(
-                i for i, f in enumerate(est.tree_.feature) if f == -1
-            )
-            mapping = {leaf: offset + j for j, leaf in enumerate(leaves)}
-            self._leaf_maps.append(mapping)
-            offset += len(leaves)
+            leaf = np.asarray(est.tree_.feature) == -1
+            cols = np.full(len(leaf), -1)
+            cols[leaf] = offset + np.arange(leaf.sum())
+            self._leaf_columns.append(cols)
+            offset += int(leaf.sum())
         self.n_output_features_ = offset
-        strip_spark(self)
         return self
 
     def transform(self, X):
         n = len(np.asarray(X))
         out = np.zeros((n, self.n_output_features_))
-        for est, mapping in zip(self.estimators_, self._leaf_maps):
-            nodes = est.apply(X)
-            for i, node in enumerate(nodes):
-                out[i, mapping[int(node)]] = 1.0
+        rows = np.arange(n)
+        for est, cols in zip(self.estimators_, self._leaf_columns):
+            out[rows, cols[est.apply(X)]] = 1.0
         return out
 
     def fit_transform(self, X, y=None, sample_weight=None):

@@ -39,7 +39,11 @@ def get_prediction_udf(model, method="predict", feature_type="numpy", names=None
     """Build a vectorized PySpark UDF applying a fitted model.
 
     The model is captured in the UDF closure -> serialized once per
-    executor, applied per Arrow batch.
+    executor, applied per Arrow batch. One closure serves both methods:
+    it calls ``getattr(model, method)`` on the batch's features.
+    ``predict`` returns the labels (typed after ``classes_[0]``: string,
+    long, int, else double); ``predict_proba`` returns one
+    ``array<double>`` per row. Any other method raises ``ValueError``.
 
     Example::
 
@@ -56,12 +60,6 @@ def get_prediction_udf(model, method="predict", feature_type="numpy", names=None
     )
 
     if method == "predict":
-
-        def predict_func(*cols):
-            gate_zip_rereads()
-            vals = _get_vals(*cols, feature_type=feature_type, names=names)
-            return pd.Series(np.asarray(model.predict(vals)))
-
         first_class = getattr(model, "classes_", np.array([0]))[0]
         if isinstance(first_class, str):
             return_type = StringType()
@@ -69,16 +67,17 @@ def get_prediction_udf(model, method="predict", feature_type="numpy", names=None
             return_type = LongType() if isinstance(first_class, (np.int64, int)) else IntegerType()
         else:
             return_type = DoubleType()
-        return F.pandas_udf(predict_func, returnType=return_type)
+    elif method == "predict_proba":
+        return_type = ArrayType(DoubleType())
+    else:
+        raise ValueError(f"Unknown method: {method} (use 'predict' or 'predict_proba')")
 
-    if method == "predict_proba":
+    def predict_func(*cols):
+        gate_zip_rereads()
+        vals = _get_vals(*cols, feature_type=feature_type, names=names)
+        out = getattr(model, method)(vals)
+        if method == "predict_proba":
+            return pd.Series(list(np.asarray(out, dtype=np.float64)))
+        return pd.Series(np.asarray(out))
 
-        def predict_proba_func(*cols):
-            gate_zip_rereads()
-            vals = _get_vals(*cols, feature_type=feature_type, names=names)
-            proba = np.asarray(model.predict_proba(vals), dtype=np.float64)
-            return pd.Series(list(proba))
-
-        return F.pandas_udf(predict_proba_func, returnType=ArrayType(DoubleType()))
-
-    raise ValueError(f"Unknown method: {method} (use 'predict' or 'predict_proba')")
+    return F.pandas_udf(predict_func, returnType=return_type)

@@ -3,6 +3,12 @@ meta-estimator end-to-end on the embeddings table and returns a small
 deterministic DataFrame (rows-only correctness check — model training
 isn't ANSI-SQL-expressible; determinism comes from fixed seeds and the
 deterministic numpy estimators).
+
+Fitted models score rows only through the library's prediction UDF
+(``operators.predict.get_prediction_udf``), never through a copy of a
+model's arithmetic. ``_quality_model`` is the one document-quality
+feature frame and fit (classifier, permutation importance, source
+ablation); ``_search_rows`` is the one readout of a fitted search.
 """
 
 from __future__ import annotations
@@ -49,6 +55,19 @@ def _load_xy(spark: SparkSession, sf_dir: str):
     return ids, X, y
 
 
+def _search_rows(spark: SparkSession, search) -> DataFrame:
+    """A fitted search's candidates as (params as sorted-key JSON, mean
+    test score to 9 decimals, rank) rows, best first."""
+    res = search.cv_results_
+    rows = [
+        (json.dumps(p, sort_keys=True), float(round(s, 9)), int(r))
+        for p, s, r in zip(res["params"], res["mean_test_score"], res["rank_test_score"])
+    ]
+    return spark.createDataFrame(
+        rows, "params string, mean_test_score double, rank int"
+    ).orderBy("rank", "params")
+
+
 def ml_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed grid search: one Spark task per candidate x fold."""
     _, X, y = _load_xy(spark, sf_dir)
@@ -59,21 +78,7 @@ def ml_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv=3,
         scoring="accuracy",
     ).fit(X, y)
-    rows = [
-        (
-            json.dumps(p, sort_keys=True),
-            float(round(s, 9)),
-            int(r),
-        )
-        for p, s, r in zip(
-            gs.cv_results_["params"],
-            gs.cv_results_["mean_test_score"],
-            gs.cv_results_["rank_test_score"],
-        )
-    ]
-    return spark.createDataFrame(
-        rows, "params string, mean_test_score double, rank int"
-    ).orderBy("rank", "params")
+    return _search_rows(spark, gs)
 
 
 def ml_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,17 +96,7 @@ def ml_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoring="accuracy",
         random_state=11,
     ).fit(X, y)
-    rows = [
-        (json.dumps(p, sort_keys=True), float(round(s, 9)), int(r))
-        for p, s, r in zip(
-            rs.cv_results_["params"],
-            rs.cv_results_["mean_test_score"],
-            rs.cv_results_["rank_test_score"],
-        )
-    ]
-    return spark.createDataFrame(
-        rows, "params string, mean_test_score double, rank int"
-    ).orderBy("rank", "params")
+    return _search_rows(spark, rs)
 
 
 def ml_ovr_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,41 +257,59 @@ def encoderizer_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quality_model(docs: DataFrame, label=None, *keep: DataFrame):
+    """The document quality model: its feature frame and its fit.
+
+    Returns ``(feats, feature_cols, train, model)``. ``feats`` holds
+    doc_id, the columns of each ``keep`` frame (joined on doc_id), the
+    four ORTHOGONAL ``quality_score`` ratios as ``feature_cols`` (length,
+    word length, distinct-token and stopword ratios) and ``label`` as
+    label_weak. ``label`` is a Column over quality_score's output; None
+    is the repetition filter's weak label (a doc is "quality" when its
+    duplicated-bigram fraction is at most 5.2%). ``train`` is the first
+    2,000 rows by doc_id on the driver (deterministic and bounded) and
+    ``model`` the LogisticRegression fitted on it. ``feats`` is
+    checkpointed lazily: the training sample materializes it, and the
+    corpus-wide scoring pass that follows reads it back.
+    """
+    from ..operators.text import quality_score, repetition_stats
+
+    frame = quality_score(docs)
+    if label is None:
+        frame = frame.join(repetition_stats(docs).select("doc_id", "dup_bigram_ppm"), "doc_id")
+        label = F.col("dup_bigram_ppm") <= 52_000
+    for other in keep:
+        frame = frame.join(other, "doc_id")
+    feats = frame.select(
+        "doc_id",
+        *[c for other in keep for c in other.columns if c != "doc_id"],
+        (F.col("n_words") / 100.0).alias("f_len"),
+        (F.col("mean_word_len") / 10.0).alias("f_wlen"),
+        F.col("distinct_ratio").alias("f_distinct"),
+        F.col("stopword_ratio").alias("f_stop"),
+        label.cast("int").alias("label_weak"),
+    ).localCheckpoint(eager=False)
+    feature_cols = ["f_len", "f_wlen", "f_distinct", "f_stop"]
+    train = feats.orderBy("doc_id").limit(2000).toPandas()
+    model = LogisticRegression(max_iter=200).fit(
+        train[feature_cols].to_numpy(), train["label_weak"].to_numpy()
+    )
+    return feats, feature_cols, train, model
+
+
 def ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-level quality classifier composed from the scoring
-    primitives: weak labels come from the repetition filter (a doc is
-    "quality" when its duplicated-bigram fraction is low), features
-    come from the ORTHOGONAL quality_score ratios (length, word length,
-    distinct-token and stopword ratios), so the model has to learn the
-    correlation rather than echo its own input.
+    primitives: weak labels come from the repetition filter, features
+    from the orthogonal quality_score ratios, so the model has to learn
+    the correlation rather than echo its own input (``_quality_model``).
 
     Train: deterministic bounded sample to the driver (the 100 TB path
     is the same features through sample_stratified), numpy logistic
     fit. Score: Arrow-batch pandas UDF over the full corpus —
     prediction stays distributed exactly like reference predict.py.
     """
-    from ..operators.text import quality_score, repetition_stats
-
     docs = load_table(spark, "documents", sf_dir)
-    q = quality_score(docs).select(
-        "doc_id", "n_words", "mean_word_len", "distinct_ratio", "stopword_ratio"
-    )
-    labels = repetition_stats(docs).select(
-        "doc_id", (F.col("dup_bigram_ppm") <= 52_000).cast("int").alias("label_weak")
-    )
-    feats = q.join(labels, "doc_id").select(
-        "doc_id",
-        (F.col("n_words") / 100.0).alias("f_len"),
-        (F.col("mean_word_len") / 10.0).alias("f_wlen"),
-        F.col("distinct_ratio").alias("f_distinct"),
-        F.col("stopword_ratio").alias("f_stop"),
-        "label_weak",
-    )
-    feature_cols = ("f_len", "f_wlen", "f_distinct", "f_stop")
-    train = feats.orderBy("doc_id").limit(2000).toPandas()
-    model = LogisticRegression(max_iter=200).fit(
-        train[list(feature_cols)].to_numpy(), train["label_weak"].to_numpy()
-    )
+    feats, feature_cols, _, model = _quality_model(docs)
     predict = get_prediction_udf(model, method="predict")
     proba = get_prediction_udf(model, method="predict_proba")
     cols = [F.col(c) for c in feature_cols]
@@ -314,7 +327,6 @@ def ml_gbt_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaces ml.boosting through the driver contract (deterministic:
     no randomness anywhere in the boosting path)."""
     from ..ml.boosting import GradientBoostingClassifier
-    from ..operators.predict import get_prediction_udf
 
     ids, X, y = _load_xy(spark, sf_dir)
     yb = (y % 2).astype(int)
@@ -358,11 +370,6 @@ def permutation_importance(
     from pyspark.sql import Window
 
     predict = get_prediction_udf(model, method="predict")
-    cols = [F.col(c) for c in feature_cols]
-    n_and_correct = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("pred") == F.col(label_col)).cast("long")).alias("ok"),
-    ]
     bucket = F.pmod(
         (F.pmod(F.col(id_col).cast("bigint"), F.lit(2**31)) * _PERM_KNUTH)
         % _PERM_MOD,
@@ -396,25 +403,22 @@ def permutation_importance(
         donor,
         (F.col("bucket") == F.col("d_bucket")) & (F.col("r_nat") == F.col("d_rank")),
     ).localCheckpoint()
-    base = (
-        permuted.withColumn("pred", predict(*cols))
-        .agg(*n_and_correct)
-        .select(F.expr("CAST(ok * 1000000 DIV n AS BIGINT)").alias("acc_ppm"))
-        .collect()[0]["acc_ppm"]
-    )
-    rows = []
-    for c in feature_cols:
-        scored = permuted.withColumn(
-            "pred",
-            predict(*[
-                F.col(f"perm_{c}") if f == c else F.col(f) for f in feature_cols
-            ]),
-        )
-        acc = (
-            scored.agg(*n_and_correct)
+
+    def acc_ppm(cols):
+        return (
+            permuted.withColumn("pred", predict(*[F.col(c) for c in cols]))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("pred") == F.col(label_col)).cast("long")).alias("ok"),
+            )
             .select(F.expr("CAST(ok * 1000000 DIV n AS BIGINT)").alias("acc_ppm"))
             .collect()[0]["acc_ppm"]
         )
+
+    base = acc_ppm(feature_cols)
+    rows = []
+    for c in feature_cols:
+        acc = acc_ppm([f"perm_{c}" if f == c else f for f in feature_cols])
         rows.append((c, int(base), int(acc), int(base - acc)))
     spark = feats.sparkSession
     return spark.createDataFrame(
@@ -430,25 +434,8 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     — f_len must dominate, the correlated distinct_ratio may pick up a
     shadow share, and the orthogonal ratios should sit near zero; the
     readout demonstrates the eval separating signal from passengers."""
-    from ..operators.text import quality_score
-
     docs = load_table(spark, "documents", sf_dir)
-    q = quality_score(docs).select(
-        "doc_id", "n_words", "mean_word_len", "distinct_ratio", "stopword_ratio"
-    )
-    feats = q.select(
-        "doc_id",
-        (F.col("n_words") / 100.0).alias("f_len"),
-        (F.col("mean_word_len") / 10.0).alias("f_wlen"),
-        F.col("distinct_ratio").alias("f_distinct"),
-        F.col("stopword_ratio").alias("f_stop"),
-        (F.col("n_words") > 56).cast("int").alias("label_weak"),
-    )
-    feature_cols = ["f_len", "f_wlen", "f_distinct", "f_stop"]
-    train = feats.orderBy("doc_id").limit(2000).toPandas()
-    model = LogisticRegression(max_iter=200).fit(
-        train[feature_cols].to_numpy(), train["label_weak"].to_numpy()
-    )
+    feats, feature_cols, _, model = _quality_model(docs, F.col("n_words") > 56)
     return permutation_importance(feats, model, feature_cols, "doc_id", "label_weak")
 
 
@@ -528,43 +515,16 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     every model is evaluated DISTRIBUTED over the full corpus through
     the same Arrow prediction UDF with exact integer correct-counts.
     """
-    from ..operators.text import quality_score, repetition_stats
-
     docs = load_table(spark, "documents", sf_dir)
-    q = quality_score(docs).select(
-        "doc_id", "n_words", "mean_word_len", "distinct_ratio", "stopword_ratio"
+    feats, feature_cols, train, model = _quality_model(
+        docs, None, docs.select("doc_id", "source")
     )
-    labels = repetition_stats(docs).select(
-        "doc_id",
-        (F.col("dup_bigram_ppm") <= 52_000).cast("int").alias("label_weak"),
-    )
-    src = docs.select("doc_id", "source")
-    feats = (
-        q.join(labels, "doc_id")
-        .join(src, "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            (F.col("n_words") / 100.0).alias("f_len"),
-            (F.col("mean_word_len") / 10.0).alias("f_wlen"),
-            F.col("distinct_ratio").alias("f_distinct"),
-            F.col("stopword_ratio").alias("f_stop"),
-            "label_weak",
-        )
-        .localCheckpoint(eager=False)
-    )
-    feature_cols = ["f_len", "f_wlen", "f_distinct", "f_stop"]
-    train = feats.orderBy("doc_id").limit(2000).toPandas()
     sources = sorted(train["source"].unique())
 
     # fit the whole ablation family (all-sources + one model per
     # excluded source) — each fit is the bounded driver sample
     names: list[str] = ["(all sources)"]
-    models = [
-        LogisticRegression(max_iter=200).fit(
-            train[feature_cols].to_numpy(), train["label_weak"].to_numpy()
-        )
-    ]
+    models = [model]
     n_train = [int(len(train))]
     for s in sources:
         sub = train[train["source"] != s]
@@ -576,40 +536,22 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # score EVERY model in ONE distributed pass: per Arrow batch, one
-    # tiny matmul per model, partial (model_idx, ok, n) counts out —
-    # 21 scoring passes collapse to one corpus scan
-    params = [
-        (m.coef_.copy(), m.intercept_.copy(), m.classes_.copy()) for m in models
-    ]
-
-    def score_all(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = pdf[feature_cols].to_numpy(dtype=float)
-            y = pdf["label_weak"].to_numpy()
-            idxs, oks, ns = [], [], []
-            for i, (w, b, cls) in enumerate(params):
-                pred = cls[np.argmax(X @ w.T + b, axis=1)]
-                idxs.append(i)
-                oks.append(int((pred == y).sum()))
-                ns.append(len(y))
-            yield pd.DataFrame({"model_idx": idxs, "ok": oks, "n": ns})
-
-    counts = {
-        r["model_idx"]: (int(r["ok"]), int(r["n"]))
-        for r in feats.mapInPandas(
-            score_all, schema="model_idx int, ok long, n long"
-        )
-        .groupBy("model_idx")
-        .agg(F.sum("ok").alias("ok"), F.sum("n").alias("n"))
-        .collect()
-    }
-    accs = [counts[i][0] * 1_000_000 // counts[i][1] for i in range(len(models))]
+    # score EVERY model in ONE distributed pass: one prediction UDF per
+    # model in one select (one Arrow eval node), then one aggregate of
+    # exact correct-counts — 21 scoring passes collapse to one corpus scan
+    cols = [F.col(c) for c in feature_cols]
+    scored = feats.select(
+        "label_weak",
+        *[get_prediction_udf(m, "predict")(*cols).alias(f"pred{i}") for i, m in enumerate(models)],
+    )
+    counts = scored.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.sum((F.col(f"pred{i}") == F.col("label_weak")).cast("long")).alias(f"ok{i}")
+            for i in range(len(models))
+        ],
+    ).collect()[0]
+    accs = [counts[f"ok{i}"] * 1_000_000 // counts["n"] for i in range(len(models))]
     rows = [
         (names[i], n_train[i], accs[i], accs[i] - accs[0])
         for i in range(len(models))

@@ -483,6 +483,25 @@ def test_min_samples_leaf_root_split_matches_brute_force(leaf, k):
     assert sizes[sizes > 0].min() >= leaf
 
 
+@pytest.mark.parametrize("cls", [DecisionTreeClassifier, DecisionTreeRegressor])
+def test_min_samples_leaf_counts_positive_weight_rows(cls):
+    """Bootstrap counts as weights: a zero-weight row is out of the
+    sample, so every leaf holds min_samples_leaf rows of positive weight;
+    all-positive weights grow the tree that unit weights grow."""
+    rng = np.random.RandomState(0)
+    X = rng.standard_normal((300, 4))
+    y = rng.randint(0, 3, 300) if cls is DecisionTreeClassifier else X @ rng.standard_normal(4)
+    counts = np.bincount(rng.randint(0, 300, 300), minlength=300).astype(np.float64)
+    tree = cls(min_samples_leaf=5, random_state=0).fit(X, y, sample_weight=counts)
+    leaves = tree.apply(X)
+    per_leaf = np.bincount(leaves[counts > 0])
+    assert per_leaf[np.unique(leaves)].min() >= 5
+    assert len(np.unique(leaves)) > 4
+    ones = cls(min_samples_leaf=5, random_state=0).fit(X, y, sample_weight=np.ones(300))
+    unweighted = cls(min_samples_leaf=5, random_state=0).fit(X, y)
+    assert _tree_arrays(ones) == _tree_arrays(unweighted)
+
+
 def _tree_arrays(est):
     t = est.tree_
     return (np.asarray(t.feature).tobytes(), np.asarray(t.threshold).tobytes(),

@@ -396,6 +396,44 @@ def test_random_trees_embedding(spark, data):
     assert np.all(T.sum(axis=1) == 8)
 
 
+@pytest.mark.parametrize("leaf", [1, 3])
+def test_random_trees_embedding_trees_use_sample_weight(spark, leaf):
+    """Each tree is a max_features=1 regressor on uniform noise drawn
+    from its seed, fit on ``sample_weight`` (no bootstrap); without
+    weights it is the tree the embedding always grew."""
+    X, _, sw = _noisy()
+    kw = dict(n_estimators=4, max_depth=4, min_samples_leaf=leaf, random_state=5)
+    seeds = [int(s) % (2**31 - 1) for s in np.random.SeedSequence(5).generate_state(4)]
+    plain = DistRandomTreesEmbedding(sc=spark, **kw).fit(X)
+    weighted = DistRandomTreesEmbedding(sc=spark, **kw).fit(X, sample_weight=sw)
+    for w, emb in ((None, plain), (sw, weighted)):
+        for seed, tree in zip(seeds, emb.estimators_):
+            want = DecisionTreeRegressor(max_depth=4, max_features=1, min_samples_leaf=leaf,
+                                         random_state=seed)
+            want.fit(X, np.random.RandomState(seed).uniform(size=len(X)), sample_weight=w)
+            assert tree.predict(X).tobytes() == want.predict(X).tobytes()
+            assert np.asarray(tree.tree_.threshold).tobytes() == \
+                np.asarray(want.tree_.threshold).tobytes()
+    assert plain.transform(X).tobytes() != weighted.transform(X).tobytes()
+
+
+def test_random_trees_embedding_transform_matches_per_row_mapping():
+    """One-hot leaf columns: trees in order, each tree's leaves in node-id order."""
+    X, _, _ = _noisy()
+    m = DistRandomTreesEmbedding(n_estimators=6, max_depth=4, random_state=2).fit(X)
+    want = np.zeros((len(X), m.n_output_features_))
+    offset = 0
+    for est in m.estimators_:
+        leaves = sorted(i for i, f in enumerate(est.tree_.feature) if f == -1)
+        column = {node: offset + j for j, node in enumerate(leaves)}
+        for i, node in enumerate(est.apply(X)):
+            want[i, column[int(node)]] = 1.0
+        offset += len(leaves)
+    assert offset == m.n_output_features_
+    assert m.transform(X).tobytes() == want.tobytes()
+    assert m.transform(X[:7]).tobytes() == want[:7].tobytes()
+
+
 def test_feature_eliminator(spark):
     rng = np.random.RandomState(0)
     X_good, y = _blobs(n=200, d=4, k=2, seed=5)
@@ -499,6 +537,12 @@ def test_prediction_udf_numpy(spark, data):
     agree = np.mean(out["pred"].values == local_preds)
     assert agree > 0.99  # row order preserved in local mode
     np.testing.assert_allclose(np.vstack(out["scores"].values).sum(axis=1), 1.0, atol=1e-6)
+
+
+def test_prediction_udf_rejects_unknown_method(data):
+    model = LogisticRegression().fit(*data)
+    with pytest.raises(ValueError, match="Unknown method"):
+        get_prediction_udf(model, method="decision_function")
 
 
 def test_prediction_udf_text(spark):

@@ -24,7 +24,8 @@ Each hash covers the model's attributes (trees, sub-estimators and
 dicts such as ``cv_results_`` walked recursively; entries named
 ``*_time`` dropped, as wall times differ between runs) and its
 predictions (``predict_proba`` for classifiers, ``predict`` for
-regressors) on the training rows. A Dist* estimator's line hashes the
+regressors, ``transform`` for ``DistRandomTreesEmbedding``) on the
+training rows. A Dist* estimator's line hashes the
 fitted results named in ``DIST_RESULTS`` that it has, not every
 attribute, so a refactor may add bookkeeping; a ``get_oof`` line
 hashes the returned model and the out-of-fold matrix.
@@ -76,12 +77,14 @@ DIST_RESULTS = (
     "cv_results_", "best_index_", "best_params_", "best_score_", "best_estimator_",
     "best_model_index_", "best_model_name_", "preds_", "n_splits_", "multimetric_",
     "scores_", "best_features_", "n_features_", "classes_", "pairs_", "estimators_",
+    "n_output_features_",
 )
 
 
 def fingerprint(est, X, attrs=None) -> str:
     """Hash ``est``'s attributes (only those named in ``attrs`` if
-    given) and its predictions on ``X``."""
+    given) and its predictions on ``X`` (its ``transform`` output if it
+    cannot predict)."""
     h = hashlib.sha256()
     if attrs is None:
         _feed(h, type(est).__name__, est)
@@ -89,7 +92,12 @@ def fingerprint(est, X, attrs=None) -> str:
         for name in attrs:
             if hasattr(est, name):
                 _feed(h, name, getattr(est, name))
-    out = est.predict_proba(X) if hasattr(est, "predict_proba") else est.predict(X)
+    if hasattr(est, "predict_proba"):
+        out = est.predict_proba(X)
+    elif hasattr(est, "predict"):
+        out = est.predict(X)
+    else:
+        out = est.transform(X)
     _feed(h, "prediction", np.asarray(out))
     return h.hexdigest()
 
@@ -173,6 +181,7 @@ def dist_fits():
         DistRandomForestClassifier,
         DistRandomForestRegressor,
         DistRandomizedSearchCV,
+        DistRandomTreesEmbedding,
         get_oof,
     )
 
@@ -224,6 +233,13 @@ def dist_fits():
                lambda cls=cls, target=target, depth=depth, mf=mf, leaf=leaf: (
                    cls(n_estimators=5, max_depth=depth, max_features=mf,
                        min_samples_leaf=leaf, random_state=7).fit(X, target), None))
+
+    for wk, leaf in itertools.product(("none", "float", "bootstrap"), (1, 3)):
+        fp = {} if wk == "none" else {"sample_weight": _weights(wk, len(y), 0)}
+        yield (f"DistRandomTreesEmbedding min_samples_leaf={leaf} w={wk}",
+               lambda fp=fp, leaf=leaf: (DistRandomTreesEmbedding(
+                   n_estimators=5, max_depth=4, min_samples_leaf=leaf, random_state=7
+               ).fit(X, **fp), None))
 
     for name, clf in (("lr", LogisticRegression(max_iter=80)),
                       ("tree", DecisionTreeClassifier(max_depth=5, random_state=0))):
