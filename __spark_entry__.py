@@ -40,22 +40,27 @@ _MODULES = [
 # is therefore a verification budget.  Policy: front-load entries that have
 # not yet earned a driver row for their CURRENT form; demote verified ones.
 # Rounds 1-8 attested 270/270 oracles cumulatively (no row older than
-# round 3 after r8).  ROUND-9 ROTATION (executed, VERDICT r8 #2):
-# positions 1-2 are THIS round's changed faces (similar_doc_pairs:
-# generalized prefix-filter candidate bound + count-gated verify;
-# rfm_segments: one grouped two-phase rank replaces three chained
-# ones); positions 3-28 are the r8 sessions-3-6 rewrites that landed
-# AFTER the r8 window was set and so never re-earned a driver row for
-# their current form (GEMM Lloyd, PQ/diversified ANN, edit-join
-# verify-before-dedup, the re-derived-subtree checkpoint sweep, the
-# vectorized Hilbert walk); positions 29-31 are the three displaced
-# from the r8 window; the remainder continues the third pass with the
-# oldest round-3-vintage rows.  Only these 50 names are listed: every
-# other entry follows in module order, which nothing the driver checks
-# depends on.
+# round 3 after r8), and round 9 attested all 50 names of its window.
+# Positions 1-2 are round 9's changed faces (similar_doc_pairs: generalized
+# prefix-filter candidate bound + count-gated verify; rfm_segments: one
+# grouped two-phase rank replaces three chained ones).  Positions 3-7 are
+# the other oracle queries that rank through functions/global_rank,
+# rewritten since round 9 (one two_phase_row_number with optional
+# group_cols; the qini rank now routes NULL scores last), and that the
+# round-9 window did not hold; user_revenue_gini and revenue_pareto (same
+# rewrite) stay at 12-13.  Positions 8-33 are the late round-8 rewrites
+# that round 9 attested; the remainder continues the third pass with the
+# oldest round-3-vintage rows.  The five windows.py faces that made room
+# (value_histogram, profile_documents, user_event_features,
+# event_transitions, sales_grouping_sets) hold round-9 hash matches and
+# no change since.
+# Only these 50 names are listed: every other entry follows in module
+# order, which no correctness row depends on.
 _PRIORITY = [
-    # -- ROUND-9 WINDOW (first 50 get a driver CORRECTNESS row) --
-    "similar_doc_pairs", "rfm_segments", "ml_kmeans_exact",
+    # -- CHECKED WINDOW (first 50 get a CORRECTNESS row) --
+    "similar_doc_pairs", "rfm_segments", "purchase_uplift_qini",
+    "doc_perplexity_filter", "doc_curriculum_phases", "event_lateness_profile",
+    "peak_concurrent_sessions", "ml_kmeans_exact",
     "dedup_semantic_exact", "ann_pq_exact", "ann_diversified_exact",
     "user_revenue_gini", "revenue_pareto", "blocking_eval",
     "fuzzy_part_match", "part_entity_resolution", "tfidf_doc_pairs",
@@ -70,8 +75,6 @@ _PRIORITY = [
     "daily_percentile_bands", "session_bounce_rate",
     "daily_revenue_decompose", "setops_customers", "bloom_semi_sales",
     "events_value_windows", "orders_date_features", "events_unpivot",
-    "value_histogram", "profile_documents", "user_event_features",
-    "event_transitions", "sales_grouping_sets",
 ]
 
 

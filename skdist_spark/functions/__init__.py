@@ -9,7 +9,6 @@ contract.
 
 from .global_rank import (
     ntile_from_row_number,
-    two_phase_group_row_number,
     two_phase_max_prefix_sum,
     two_phase_row_number,
     two_phase_running_agg,
@@ -32,7 +31,6 @@ __all__ = [
     "morton_value",
     "ntile_from_row_number",
     "ppm_of_rank",
-    "two_phase_group_row_number",
     "two_phase_max_prefix_sum",
     "two_phase_row_number",
     "two_phase_running_agg",

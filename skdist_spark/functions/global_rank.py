@@ -11,27 +11,28 @@ This module computes the SAME values in two phases, the classic
 distributed-rank shape (TeraSort's partitioner applied to ranking):
 
 1. **Deterministic range sharding.**  Shard boundaries are exact
-   percentiles of a numeric ``shard_key`` (optionally over a
-   deterministic hash-sample for huge frames), broadcast as one
-   array row; each row's shard id is ``#{boundaries < key}`` — a PURE
-   function of the row's data.  This is deliberately NOT
-   ``repartitionByRange`` + ``spark_partition_id``: the range
-   partitioner re-samples with a seed derived from the physical RDD id,
-   so the two consumers below can silently disagree on partition ids
-   whenever the exchange is not reused (measured: caching the input
-   broke rank equality).  Data-derived boundaries cannot disagree.
+   percentiles of a numeric ``shard_key`` over a deterministic
+   hash-sample, broadcast as one array row; each row's shard id is
+   ``#{boundaries < key}`` — a PURE function of the row's data.  This
+   is deliberately NOT ``repartitionByRange`` + ``spark_partition_id``:
+   the range partitioner re-samples with a seed derived from the
+   physical RDD id, so the two consumers below can silently disagree
+   on partition ids whenever the exchange is not reused (measured:
+   caching the input broke rank equality).  Data-derived boundaries
+   cannot disagree.  There are ``spark.sql.shuffle.partitions`` shards.
 2. **Local rank + offset merge.**  A window PARTITIONED by shard id
-   gives each row its local rank; per-shard counts (≤ N rows, tiny)
-   turn into exclusive-prefix offsets via a window over the N-row
-   frame, merged back with a shuffled-hash join on the shard id —
-   the data side leaves the window ALREADY hash-partitioned by shard,
-   so the join adds no exchange over the data and no broadcast job
-   (the offsets side pays one ≤ N-row exchange); then
-   ``global = local + offset(shard)``.
+   (and by the caller's ``group_cols``, for a per-group rank) gives
+   each row its local rank; per-shard counts (≤ N rows per group,
+   tiny) turn into exclusive-prefix offsets via a window over that
+   count frame, merged back with a shuffled-hash join on the same keys
+   — the data side leaves the window ALREADY hash-partitioned by
+   them, so the join adds no exchange over the data and no broadcast
+   job (the offsets side pays one count-sized exchange); then
+   ``rank = local + offset(shard)``.
 
 No stage ever sees more than ~1/N of the data (given sane boundaries),
 and every step is JVM-side (whole-stage codegen; no UDFs).  Values are
-EXACTLY those of the global window — boundary placement only decides
+EXACTLY those of the plain window — boundary placement only decides
 which shard does the work, never the resulting rank — so DuckDB
 oracles keep using plain ``ROW_NUMBER()/NTILE() OVER (ORDER BY ...)``.
 
@@ -41,80 +42,56 @@ analytics layer; net-new surface).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "two_phase_row_number",
-    "two_phase_group_row_number",
     "two_phase_running_agg",
     "two_phase_max_prefix_sum",
     "ntile_from_row_number",
 ]
 
-# Default boundary-sample modulus: boundaries come from an exact
-# percentile over the deterministic ``xxhash64 % 251 == 0`` sample, so
-# the aggregate's collected buffer is ~corpus/251 — bounded at 100 TB
+# Boundary-sample modulus: boundaries come from an exact percentile
+# over the deterministic ``xxhash64 % 251 == 0`` sample, so the
+# aggregate's collected buffer is ~corpus/251 — bounded at 100 TB
 # (1e9-unit frame -> ~4M sampled keys) while still giving ~1% quantile
 # error, far finer than the shard count needs.  Tiny frames may sample
 # down to nothing — boundaries degrade toward fewer shards but ranks
 # are boundary-independent, so results never change (pinned by the
-# equality tests at sample_mod 1, 7, and the default).
+# equality tests, which also run with this set to 1 and 7).  Read at
+# call time.
 DEFAULT_SAMPLE_MOD = 251
 
 _PART = "__gr_part"
 _LOCAL = "__gr_local"
 _OFF = "__gr_off"
+_CNT = "__gr_cnt"
 _KEY = "__gr_key"
 _TIE = "__gr_tie"
 _BNDS = "__gr_bnds"
 
 
-def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
-    if num_partitions is not None:
-        return int(num_partitions)
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
-def _materialized(df: DataFrame, materialize) -> DataFrame:
-    """Share ONE computed copy of ``df`` across the boundary aggregate,
-    the per-shard counts, and the main pass (without it each consumer
-    re-derives the full upstream lineage — measured 12x on a 3-rank
-    chain).
-
-    ``"persist"`` / ``True`` (default): lazy ``persist(MEMORY_AND_DISK)``
-    — spill-safe, FAULT-TOLERANT (lineage retained, lost executors
-    recompute), and the full logical plan stays visible to plan-based
-    audits (plan_lint, snapshot gates).  ``"checkpoint"``: lazy
-    ``localCheckpoint`` — truncates lineage to a LogicalRDD, which cuts
-    analyzer cost on very deep chains but (a) is NOT fault-tolerant
-    (executor loss fails the job) and (b) BLINDS every plan audit to
-    operators upstream of the cut; prefer persist unless planning time
-    is the bottleneck.  ``False``: keep pure lineage (e.g. under a
-    caller's own checkpoint/cache).
-    """
-    if materialize == "checkpoint":
-        return df.localCheckpoint(eager=False)
-    if materialize:  # True or "persist"
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
-
-
 def _sharded(
     df: DataFrame,
     shard_key: Column,
-    n: int,
-    sample_mod: int,
+    n: int | None = None,
+    sample_mod: int | None = None,
     total_col: str | None = None,
-    materialize=True,
     nulls_last: bool = False,
     tie_key: Column | None = None,
 ) -> DataFrame:
-    """Attach a deterministic range-shard id in ``[0, n)``.
+    """Attach a deterministic range-shard id in ``[0, n)`` (``n``
+    defaults to ``spark.sql.shuffle.partitions``, ``sample_mod`` to
+    ``DEFAULT_SAMPLE_MOD``).
 
-    ``materialize`` — see ``_materialized``.
+    The input is persisted (lazy ``MEMORY_AND_DISK``) so ONE computed
+    copy is shared by the boundary aggregate, the per-shard counts and
+    the main pass — without it each consumer re-derives the full
+    upstream lineage (measured 12x on a 3-rank chain).  Persist is
+    spill-safe and fault-tolerant (lineage retained), and keeps the
+    full logical plan visible to plan audits (plan_lint, snapshots).
 
     ``shard_key`` must be numeric and monotone non-decreasing in the
     caller's total order (negate for DESC).  The DOUBLE cast used for
@@ -142,12 +119,15 @@ def _sharded(
     collected buffer — merge-order insensitive, hence deterministic) —
     or, with ``tie_key``, evenly-spaced elements of the sorted sampled
     pair list — computed over the deterministic ``xxhash64 %
-    sample_mod == 0`` sample (``DEFAULT_SAMPLE_MOD`` = 251, so the
-    boundary aggregate's buffer stays ~corpus/251 at ANY scale; pass
-    ``sample_mod=1`` for exact boundaries on small frames where
-    perfect balance matters more than buffer size).
+    sample_mod == 0`` sample, so the boundary aggregate's buffer stays
+    ~corpus/``sample_mod`` at ANY scale (1 samples every row).
     """
-    df = _materialized(df, materialize)
+    if n is None:
+        conf = df.sparkSession.conf
+        n = int(conf.get("spark.sql.shuffle.partitions", "200"))
+    if sample_mod is None:
+        sample_mod = DEFAULT_SAMPLE_MOD
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     kdf = df.withColumn(_KEY, shard_key.cast("double"))
     if tie_key is not None:
         kdf = kdf.withColumn(_TIE, tie_key.cast("double"))
@@ -209,126 +189,70 @@ def two_phase_row_number(
     order_by: list[Column],
     shard_key: Column,
     out_col: str = "rn",
-    num_partitions: int | None = None,
-    sample_mod: int = DEFAULT_SAMPLE_MOD,
+    group_cols=(),
     total_col: str | None = None,
-    materialize=True,
-    nulls_last: bool = False,
-    tie_key: Column | None = None,
-) -> DataFrame:
-    """``ROW_NUMBER() OVER (ORDER BY order_by)`` without a
-    single-partition exchange over the data.
-
-    ``order_by`` must be a TOTAL order (include a unique tiebreak
-    column); ``shard_key`` is a numeric column monotone non-decreasing
-    in that order (usually the first order column, negated for DESC).
-    Pass ``nulls_last=True`` when the leading order is DESC and
-    ``shard_key`` can be NULL, and ``tie_key`` (the next order column,
-    negated for DESC) when ``shard_key`` carries heavy tie masses —
-    see ``_sharded``.  Returns ``df`` plus a BIGINT 1-based ``out_col``
-    — and, when ``total_col`` is set, the total row count as an extra
-    column (free: it rides the boundary aggregate; NTILE recomposition
-    needs exactly rn + n).
-    """
-    n = _num_partitions(df, num_partitions)
-    sharded = _sharded(
-        df, shard_key, n, sample_mod, total_col, materialize,
-        nulls_last, tie_key,
-    )
-    local = sharded.withColumn(
-        _LOCAL,
-        F.row_number().over(Window.partitionBy(_PART).orderBy(*order_by)),
-    )
-    counts = local.groupBy(_PART).agg(
-        F.max(_LOCAL).cast("long").alias("__cnt")
-    )
-    # exclusive prefix over ≤ n rows (one per shard): the sanctioned
-    # bounded-frame global window
-    off_w = Window.orderBy(_PART).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(_PART, F.sum("__cnt").over(off_w).alias(_OFF))
-    # shuffled-hash, NOT broadcast: ``local`` is already hash-partitioned
-    # by the shard id (the window's exchange), so the join inserts no
-    # exchange on the data side and skips the broadcast-materialization
-    # job a ``F.broadcast(offsets)`` would run; only the ≤ n-row offsets
-    # side shuffles
-    return (
-        local.join(offsets.hint("shuffle_hash"), _PART)
-        .withColumn(
-            out_col,
-            (F.col(_LOCAL) + F.coalesce(F.col(_OFF), F.lit(0))).cast("long"),
-        )
-        .drop(_PART, _LOCAL, _OFF)
-    )
-
-
-def two_phase_group_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list[Column],
-    shard_key: Column,
-    out_col: str = "rn",
-    num_partitions: int | None = None,
-    sample_mod: int = DEFAULT_SAMPLE_MOD,
-    total_col: str | None = None,
-    materialize=True,
     nulls_last: bool = False,
     tie_key: Column | None = None,
 ) -> DataFrame:
     """``ROW_NUMBER() OVER (PARTITION BY group_cols ORDER BY order_by)``
-    without a per-group hot partition.
+    without a single-partition exchange (no ``group_cols``) or a
+    per-group hot partition over the data.
 
-    ``Window.partitionBy(group)`` puts each group's ENTIRE mass in one
-    task — fine for many small groups, a job-killer when one group
-    dominates (the perplexity-filter shape: one source = 90% of a
-    100 TB corpus).  This computes the same values with the window
-    partitioned by ``(group, range-shard)``: boundaries are GLOBAL
-    percentiles of ``shard_key`` (the dominant group drives the global
-    distribution, so its rows spread across all shards; minor groups
-    may concentrate but are small by definition), local ranks merge
-    with a per-(group, shard) exclusive-prefix offset table — one row
-    per (group, shard), windowed per group over ≤ n rows and broadcast
-    back.  ``shard_key`` must be numeric and monotone non-decreasing
-    in ``order_by`` WITHIN each group (the usual case: the leading
-    order column).  Values are exactly the per-group window's —
-    boundary placement only picks which task does the work — so DuckDB
-    oracles keep plain partitioned ``ROW_NUMBER()``.
+    ``order_by`` must be a TOTAL order within each group (include a
+    unique tiebreak column); ``shard_key`` is a numeric column
+    monotone non-decreasing in that order (usually the first order
+    column, negated for DESC).  Pass ``nulls_last=True`` when the
+    leading order is DESC and ``shard_key`` can be NULL, and
+    ``tie_key`` (the next order column, negated for DESC) when
+    ``shard_key`` carries heavy tie masses — see ``_sharded``.
+    Returns ``df`` plus a BIGINT 1-based ``out_col`` and, when
+    ``total_col`` is set, the row count of the row's group (of the
+    whole frame without ``group_cols``) as an extra column — the
+    rank + count pair NTILE recomposition and every keep-top-percent
+    cut need.
 
-    ``total_col``: also attach each group's total row count (rides the
-    same offset table — the rank + count pair every keep-top-percent
-    cut needs, without a second per-group window).
+    With ``group_cols`` the window partitions by (group, range-shard),
+    never by the group alone: ``Window.partitionBy(group)`` puts each
+    group's ENTIRE mass in one task — a job-killer when one group
+    dominates (one source = 90% of a 100 TB corpus).  Boundaries are
+    GLOBAL percentiles of ``shard_key``, so the dominant group, which
+    drives the global distribution, spreads across all shards; minor
+    groups may concentrate but are small by definition.
+
+    The total is free either way: without groups it rides the boundary
+    aggregate, with groups it is each group's sum over the offsets
+    table (one row per (group, shard)).
     """
-    n = _num_partitions(df, num_partitions)
+    keys = [*group_cols, _PART]
     sharded = _sharded(
-        df, shard_key, n, sample_mod, None, materialize, nulls_last, tie_key
+        df, shard_key, total_col=None if group_cols else total_col,
+        nulls_last=nulls_last, tie_key=tie_key,
     )
     local = sharded.withColumn(
         _LOCAL,
-        F.row_number().over(
-            Window.partitionBy(*group_cols, _PART).orderBy(*order_by)
-        ),
+        F.row_number().over(Window.partitionBy(*keys).orderBy(*order_by)),
     )
-    counts = local.groupBy(*group_cols, _PART).agg(
-        F.max(_LOCAL).cast("long").alias("__gr_cnt")
-    )
+    counts = local.groupBy(*keys).agg(F.max(_LOCAL).cast("long").alias(_CNT))
+    # exclusive prefix over ≤ n rows per group (one per shard): without
+    # groups this is the sanctioned bounded-frame global window
     off_w = (
         Window.partitionBy(*group_cols)
         .orderBy(_PART)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.withColumn(_OFF, F.sum("__gr_cnt").over(off_w))
-    if total_col is not None:
+    offsets = counts.withColumn(_OFF, F.sum(_CNT).over(off_w))
+    if group_cols and total_col is not None:
         offsets = offsets.withColumn(
-            total_col,
-            F.sum("__gr_cnt").over(Window.partitionBy(*group_cols)),
+            total_col, F.sum(_CNT).over(Window.partitionBy(*group_cols))
         )
-    offsets = offsets.drop("__gr_cnt")
-    # shuffled-hash, NOT broadcast: the offsets table here is one row
-    # per (group, shard) — it GROWS with the group count, so broadcast
-    # is a scale hazard on high-cardinality groups; the data side is
-    # already hash-partitioned by (group, shard) from the window, so
-    # the join costs one offsets-sized exchange and nothing else
+    # shuffled-hash, NOT broadcast: ``local`` is already hash-partitioned
+    # by the join keys (the window's exchange), so the join inserts no
+    # exchange on the data side and skips the broadcast-materialization
+    # job a ``F.broadcast(offsets)`` would run — and the offsets table
+    # GROWS with the group count, so broadcast is a scale hazard on
+    # high-cardinality groups; only the offsets side shuffles
     return (
-        local.join(offsets.hint("shuffle_hash"), [*group_cols, _PART])
+        local.join(offsets.drop(_CNT).hint("shuffle_hash"), keys)
         .withColumn(
             out_col,
             (F.col(_LOCAL) + F.coalesce(F.col(_OFF), F.lit(0))).cast("long"),
@@ -344,9 +268,6 @@ def two_phase_running_agg(
     value_col: str,
     agg: str = "sum",
     out_col: str = "running",
-    num_partitions: int | None = None,
-    sample_mod: int = DEFAULT_SAMPLE_MOD,
-    materialize=True,
     nulls_last: bool = False,
     tie_key: Column | None = None,
 ) -> DataFrame:
@@ -361,10 +282,7 @@ def two_phase_running_agg(
     if agg not in ("sum", "max", "min"):
         raise ValueError(f"unsupported running agg: {agg}")
     fn = {"sum": F.sum, "max": F.max, "min": F.min}[agg]
-    n = _num_partitions(df, num_partitions)
-    sharded = _sharded(
-        df, shard_key, n, sample_mod, None, materialize, nulls_last, tie_key
-    )
+    sharded = _sharded(df, shard_key, nulls_last=nulls_last, tie_key=tie_key)
     local = sharded.withColumn(
         _LOCAL,
         fn(value_col).over(
@@ -396,9 +314,6 @@ def two_phase_max_prefix_sum(
     order_by: list[Column],
     shard_key: Column,
     value_col: str,
-    num_partitions: int | None = None,
-    sample_mod: int = DEFAULT_SAMPLE_MOD,
-    materialize=True,
     nulls_last: bool = False,
     tie_key: Column | None = None,
 ) -> DataFrame:
@@ -412,10 +327,7 @@ def two_phase_max_prefix_sum(
     shard frame.  Cheaper than ``two_phase_running_agg`` + max when
     only the peak is needed (no broadcast join over the data).
     """
-    n = _num_partitions(df, num_partitions)
-    sharded = _sharded(
-        df, shard_key, n, sample_mod, None, materialize, nulls_last, tie_key
-    )
+    sharded = _sharded(df, shard_key, nulls_last=nulls_last, tie_key=tie_key)
     w = (
         Window.partitionBy(_PART)
         .orderBy(*order_by)

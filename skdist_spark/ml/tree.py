@@ -126,13 +126,19 @@ class _BaseDecisionTree(BaseEstimator):
                 if k_feat == d
                 else rng.choice(d, size=k_feat, replace=False)
             )
+            # rows of zero weight (out of a bootstrap sample) do not count
+            # toward min_samples_split; checked after the feature draw, so
+            # every node of min_samples_split rows still draws and the
+            # random stream of the other nodes is unchanged
+            pos = sw[idx] > 0
+            if pos.sum() < self.min_samples_split:
+                continue
             best = self._best_split(X[idx], y_enc[idx], sw[idx], feats, n_out)
             if best is None:
                 continue
             f, thr, gain = best
             mask = X[idx, f] <= thr
             # a midpoint that rounds onto the upper value moves its rows left
-            pos = sw[idx] > 0
             if min((mask & pos).sum(), (~mask & pos).sum()) < self.min_samples_leaf:
                 continue
             importances[f] += gain

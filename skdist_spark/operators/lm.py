@@ -762,22 +762,22 @@ def perplexity_filter(
 
     Scale: the LM scoring is ``doc_logprob`` (one corpus scan, shuffle
     bounded by distinct (doc, word)); the ranking goes through
-    ``two_phase_group_row_number`` — the per-source window is
-    partitioned by (source, perplexity-range shard), NEVER by source
-    alone, so one source owning 90% of a 100 TB corpus still spreads
+    ``two_phase_row_number`` with ``group_cols`` — the per-source
+    window is partitioned by (source, perplexity-range shard), NEVER by
+    source alone, so one source owning 90% of a 100 TB corpus spreads
     its ranking across every shard (the dominant source drives the
     global boundary percentiles).  Ranks and the per-source count ride
     one offset table; values are exactly the plain partitioned
     window's, so the DuckDB oracle keeps ``ROW_NUMBER() OVER
     (PARTITION BY source ...)``.
     """
-    from ..functions.global_rank import two_phase_group_row_number
+    from ..functions.global_rank import two_phase_row_number
 
     scored = doc_logprob(
         df.select(F.col(id_col), F.col(text_col)), id_col, text_col
     )
     meta = df.select(F.col(id_col), F.col(group_col))
-    # EAGER checkpoint: two_phase_group_row_number references its input
+    # EAGER checkpoint: two_phase_row_number references its input
     # from three subtrees (boundary aggregate, main pass, offsets), and
     # the input here is the whole LM scoring pipeline (token explode +
     # tf/cf aggregates) — without the checkpoint the compiled plan
@@ -785,12 +785,12 @@ def perplexity_filter(
     # executed per reference (measured 14.6 -> 3.8 s cold at sf0.1).
     # One slim row per doc, so the stored frame is output-sized.
     joined = scored.join(meta, id_col).localCheckpoint(eager=True)
-    ranked = two_phase_group_row_number(
+    ranked = two_phase_row_number(
         joined,
-        [group_col],
         [F.col("perplexity").asc(), F.col(id_col).asc()],
         shard_key=F.col("perplexity"),
         out_col="ppx_rank",
+        group_cols=[group_col],
         total_col="n_grp",
         tie_key=F.col(id_col),
     )

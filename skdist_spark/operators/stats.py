@@ -768,34 +768,6 @@ ORACLE_SQL: dict[str, str] = {
 # ---- inequality / weighted-quantile analytics -------------------------
 
 
-def gini_moments(df: DataFrame, value_col: str, id_col: str) -> DataFrame:
-    """Exact moments for the rank-formulation Gini coefficient
-    G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n over values sorted ascending
-    (ties broken by ``id_col``; the formula is tie-order invariant
-    since equal x collapse).  Returns one row (n, sx, six); compose
-    the final DOUBLE ratio with ``_gini_select()``.
-
-    The rank over the PRE-AGGREGATED unit dimension (one row per id —
-    aggregate raw facts first) is the two-phase distributed rank
-    (``functions.two_phase_row_number``): percentile-bounded range
-    shards + local ranks + broadcast offsets — identical values to
-    ``ROW_NUMBER() OVER (ORDER BY ...)`` with no single-partition
-    exchange over the unit frame.
-    """
-    ranked = two_phase_row_number(
-        df.select(F.col(value_col).alias("x"), F.col(id_col).alias("_id")),
-        [F.col("x").asc(), F.col("_id").asc()],
-        F.col("x"),
-        "i",
-        tie_key=F.col("_id"),  # repeated values (zero/modal spend) tie
-    )
-    return ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0))")).alias("sx"),
-        F.sum(F.expr("CAST(i AS DECIMAL(19,0)) * x")).alias("six"),
-    )
-
-
 def _gini_select(n: str = "n", sx: str = "sx", six: str = "six") -> str:
     return (
         f"ROUND(2.0 * CAST({six} AS DOUBLE) / (CAST({n} AS DOUBLE) * CAST({sx} AS DOUBLE))"

@@ -2247,6 +2247,8 @@ def qini_curve(
         -F.col(score_col),
         "rn",
         total_col="n_units",
+        # DESC ranks NULL scores last: route them to the last shard
+        nulls_last=True,
         # model scores are coarse: split their tie mass across shards
         tie_key=F.col("unit_id"),
     ).withColumn(

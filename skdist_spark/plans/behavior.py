@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.global_rank import (
     ntile_from_row_number,
-    two_phase_group_row_number,
+    two_phase_row_number,
     two_phase_running_agg,
 )
 from ..sources.catalog import load_table
@@ -883,7 +883,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor date is the max of the per-user maxes — no second scan);
     the three quintiles are NTILE(5) values recomposed from ONE
     grouped two-phase distributed rank
-    (functions.two_phase_group_row_number, group = dimension id) over
+    (functions.two_phase_row_number, group_cols = dimension id) over
     the slim unioned (user_id, dim, key) rows — each dimension's
     NTILE order is expressed as ascending (key, user_id) with
     key = -recency_days / frequency / monetary, so one window pass,
@@ -940,12 +940,12 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("monetary").alias("key"),
         )
     )
-    ranked = two_phase_group_row_number(
+    ranked = two_phase_row_number(
         dims,
-        ["dim"],
         [F.asc("key"), F.asc("user_id")],
         F.col("key"),
         "rn",
+        group_cols=["dim"],
         total_col="nt",  # per-dim total = the user count NTILE needs
         tie_key=F.col("user_id"),  # day/count keys carry heavy tie mass
     )

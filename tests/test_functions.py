@@ -49,7 +49,7 @@ def test_words_array_and_morton(spark):
     assert z == 0b100111
 
 
-def test_two_phase_row_number_matches_global_window(spark):
+def test_two_phase_row_number_matches_global_window(spark, monkeypatch):
     """The distributed rank must equal ROW_NUMBER() OVER (ORDER BY ...)
     exactly — including on a CACHED input (the repartitionByRange +
     spark_partition_id design this helper replaces silently broke
@@ -59,7 +59,7 @@ def test_two_phase_row_number_matches_global_window(spark):
 
     from pyspark.sql import Window
 
-    from skdist_spark.functions import two_phase_row_number
+    from skdist_spark.functions import global_rank, two_phase_row_number
 
     random.seed(7)
     rows = [(i, random.randint(0, 50), random.random()) for i in range(5003)]
@@ -78,27 +78,21 @@ def test_two_phase_row_number_matches_global_window(spark):
     # DESC order via negated shard key, plus the hash-sampled
     # boundary path (sample only moves boundaries, never ranks)
     order_d = [F.col("x").desc(), F.col("id").asc()]
-    got = two_phase_row_number(df, order_d, -F.col("x"), "rn", sample_mod=7)
-    exp = df.select(
-        "id", F.row_number().over(Window.orderBy(*order_d)).alias("ern")
-    )
-    assert got.select("id", "rn").join(exp, "id").where("rn != ern").count() == 0
+    with monkeypatch.context() as m:
+        m.setattr(global_rank, "DEFAULT_SAMPLE_MOD", 7)
+        got = two_phase_row_number(df, order_d, -F.col("x"), "rn")
+        exp = df.select(
+            "id", F.row_number().over(Window.orderBy(*order_d)).alias("ern")
+        )
+        assert (
+            got.select("id", "rn").join(exp, "id").where("rn != ern").count()
+            == 0
+        )
     # empty input
     assert (
         two_phase_row_number(df.where("v < 0"), order, F.col("v"), "rn").count()
         == 0
     )
-    # materialize variants compute identical ranks (persist keeps
-    # lineage visible to plan audits; checkpoint truncates it)
-    for mat in ("persist", "checkpoint", False):
-        got = two_phase_row_number(df, order, F.col("v"), "rn", materialize=mat)
-        exp = df.select(
-            "id", F.row_number().over(Window.orderBy(*order)).alias("ern")
-        )
-        assert (
-            got.select("id", "rn").join(exp, "id").where("rn != ern").count()
-            == 0
-        ), mat
 
 
 def test_two_phase_group_row_number_matches_partitioned_window(spark):
@@ -110,7 +104,7 @@ def test_two_phase_group_row_number_matches_partitioned_window(spark):
 
     from pyspark.sql import Window
 
-    from skdist_spark.functions import two_phase_group_row_number
+    from skdist_spark.functions import two_phase_row_number
 
     random.seed(23)
     rows = [
@@ -123,8 +117,8 @@ def test_two_phase_group_row_number_matches_partitioned_window(spark):
     ]
     df = spark.createDataFrame(rows, "id long, g string, v long").repartition(16)
     order = [F.col("v").asc(), F.col("id").asc()]
-    got = two_phase_group_row_number(
-        df, ["g"], order, F.col("v"), "rn", total_col="n",
+    got = two_phase_row_number(
+        df, order, F.col("v"), "rn", group_cols=["g"], total_col="n",
         tie_key=F.col("id"),
     )
     w = Window.partitionBy("g").orderBy(*order)
@@ -148,8 +142,8 @@ def test_two_phase_group_row_number_matches_partitioned_window(spark):
     assert data_windows and all("__gr_part" in line for line in data_windows)
     # empty input
     assert (
-        two_phase_group_row_number(
-            df.where("v < 0"), ["g"], order, F.col("v"), "rn"
+        two_phase_row_number(
+            df.where("v < 0"), order, F.col("v"), "rn", group_cols=["g"]
         ).count() == 0
     )
 
@@ -188,7 +182,7 @@ def test_two_phase_row_number_null_keys(spark):
     assert got.select("id", "rn").join(exp, "id").where("rn != ern").count() == 0
 
 
-def test_two_phase_row_number_tie_key_balances_tie_mass(spark):
+def test_two_phase_row_number_tie_key_balances_tie_mass(spark, monkeypatch):
     """VERDICT r4 #6: a value carrying 90% of the rows collapses into
     one shard when boundaries see shard_key alone; with tie_key the
     boundaries are (key, tie) pairs, ranks stay EXACTLY the global
@@ -197,7 +191,7 @@ def test_two_phase_row_number_tie_key_balances_tie_mass(spark):
 
     from pyspark.sql import Window
 
-    from skdist_spark.functions import two_phase_row_number
+    from skdist_spark.functions import global_rank, two_phase_row_number
     from skdist_spark.functions.global_rank import _PART, _sharded
 
     random.seed(23)
@@ -209,16 +203,18 @@ def test_two_phase_row_number_tie_key_balances_tie_mass(spark):
     df = spark.createDataFrame(rows, "id long, v long").repartition(16)
     order = [F.col("v").asc(), F.col("id").asc()]
     for mod in (1, 7):
-        got = two_phase_row_number(
-            df, order, F.col("v"), "rn", tie_key=F.col("id"), sample_mod=mod
-        )
-        exp = df.select(
-            "id", F.row_number().over(Window.orderBy(*order)).alias("ern")
-        )
-        assert (
-            got.select("id", "rn").join(exp, "id").where("rn != ern").count()
-            == 0
-        ), mod
+        with monkeypatch.context() as m:
+            m.setattr(global_rank, "DEFAULT_SAMPLE_MOD", mod)
+            got = two_phase_row_number(
+                df, order, F.col("v"), "rn", tie_key=F.col("id")
+            )
+            exp = df.select(
+                "id", F.row_number().over(Window.orderBy(*order)).alias("ern")
+            )
+            assert (
+                got.select("id", "rn").join(exp, "id").where("rn != ern")
+                .count() == 0
+            ), mod
     # shard balance: with exact pair boundaries the largest shard is
     # ~mean; without tie_key the v=7 mass collapses into one shard
     n_shards = 16

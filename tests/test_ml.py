@@ -502,6 +502,34 @@ def test_min_samples_leaf_counts_positive_weight_rows(cls):
     assert _tree_arrays(ones) == _tree_arrays(unweighted)
 
 
+@pytest.mark.parametrize("cls", [DecisionTreeClassifier, DecisionTreeRegressor])
+def test_min_samples_split_counts_positive_weight_rows(cls):
+    """Bootstrap counts as weights: only rows of positive weight count
+    toward min_samples_split, so no split node holds fewer sampled rows;
+    all-positive weights grow the tree that unit weights grow."""
+    rng = np.random.RandomState(0)
+    X = rng.standard_normal((300, 4))
+    y = rng.randint(0, 3, 300) if cls is DecisionTreeClassifier else X @ rng.standard_normal(4)
+    counts = np.bincount(rng.randint(0, 300, 300), minlength=300).astype(np.float64)
+    t = cls(min_samples_split=20, random_state=0).fit(X, y, sample_weight=counts).tree_
+    # every node each sampled row passes through, leaves included
+    n_pos = np.zeros(len(t.feature), dtype=np.int64)
+    for row in X[counts > 0]:
+        node = 0
+        while True:
+            n_pos[node] += 1
+            if t.feature[node] < 0:
+                break
+            go_left = row[t.feature[node]] <= t.threshold[node]
+            node = t.left[node] if go_left else t.right[node]
+    split = np.asarray(t.feature) >= 0
+    assert split.sum() > 4
+    assert n_pos[split].min() >= 20
+    ones = cls(min_samples_split=20, random_state=0).fit(X, y, sample_weight=np.ones(300))
+    unweighted = cls(min_samples_split=20, random_state=0).fit(X, y)
+    assert _tree_arrays(ones) == _tree_arrays(unweighted)
+
+
 def _tree_arrays(est):
     t = est.tree_
     return (np.asarray(t.feature).tobytes(), np.asarray(t.threshold).tobytes(),

@@ -1082,7 +1082,7 @@ def test_group_rank_dominant_group_spreads_across_shards(spark, big_events):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from skdist_spark.functions import two_phase_group_row_number
+    from skdist_spark.functions import two_phase_row_number
     from skdist_spark.functions.global_rank import _PART
 
     df = big_events.select(
@@ -1093,8 +1093,8 @@ def test_group_rank_dominant_group_spreads_across_shards(spark, big_events):
         F.col("value").alias("ppx"),
     ).localCheckpoint(eager=False)
     order = [F.col("ppx").asc(), F.col("event_id").asc()]
-    got = two_phase_group_row_number(
-        df, ["source"], order, F.col("ppx"), "rn", total_col="n",
+    got = two_phase_row_number(
+        df, order, F.col("ppx"), "rn", group_cols=["source"], total_col="n",
         tie_key=F.col("event_id"),
     )
     exp = df.select(

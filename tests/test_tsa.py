@@ -216,3 +216,44 @@ def test_series_topk_lossless_vs_bruteforce(spark):
     assert [(r.user_id, r.dist) for r in repart] == [
         (r.user_id, r.dist) for r in pruned
     ]
+
+
+def test_qini_curve_ranks_null_scores_last(spark):
+    """A DESC score order puts NULL scores LAST (Spark and DuckDB
+    alike), so units without a score fill the final bins.  The units
+    here without a score are all treated converters: ranked right
+    after the top scores instead, they would inflate the first bins'
+    treated conversions."""
+    import random
+
+    import pandas as pd
+
+    random.seed(31)
+    rows = [
+        (
+            i,
+            None if i % 13 == 0 else random.randint(0, 50),
+            1 if i % 13 == 0 else random.randint(0, 1),
+            1 if i % 13 == 0 else int(random.random() < 0.2),
+        )
+        for i in range(4000)
+    ]
+    units = spark.createDataFrame(
+        rows, "unit_id long, score long, arm int, converted int"
+    ).repartition(8)
+    got = tsa.qini_curve(units, "score", "arm", "converted").collect()
+
+    pdf = pd.DataFrame(rows, columns=["unit_id", "score", "arm", "converted"])
+    pdf = pdf.sort_values(
+        ["score", "unit_id"], ascending=[False, True], na_position="last"
+    )
+    pdf["bin"] = [
+        (rn - 1) * tsa.QINI_BINS // len(pdf) for rn in range(1, len(pdf) + 1)
+    ]
+    treated = pdf["arm"] == 1
+    pdf["n_t"], pdf["n_c"] = treated.astype(int), (~treated).astype(int)
+    pdf["y_t"] = pdf["converted"] * pdf["n_t"]
+    pdf["y_c"] = pdf["converted"] * pdf["n_c"]
+    cum = pdf.groupby("bin")[["n_t", "n_c", "y_t", "y_c"]].sum().cumsum()
+    exp = [(b, *map(int, r)) for b, r in zip(cum.index, cum.values)]
+    assert [(r.bin, r.cn_t, r.cn_c, r.cy_t, r.cy_c) for r in got] == exp

@@ -151,6 +151,11 @@ def fits():
             yield (f"DecisionTreeClassifier depth={depth} mf={mf} {tag}",
                    DecisionTreeClassifier(max_depth=depth, max_features=mf, random_state=seed),
                    X, y, sw)
+        for mss in (2, 20):
+            yield (f"DecisionTreeClassifier mss={mss} mf=sqrt {tag}",
+                   DecisionTreeClassifier(max_features="sqrt", min_samples_split=mss,
+                                          random_state=seed),
+                   X, y, sw)
         if k == 2:
             for depth, mf in ((None, None), (5, 1), (8, 0.5)):
                 yield (f"DecisionTreeRegressor depth={depth} mf={mf} {tag}",
