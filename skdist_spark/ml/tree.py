@@ -108,7 +108,10 @@ class _BaseDecisionTree(BaseEstimator):
         k_feat = self._n_features_to_try(d)
 
         importances = np.zeros(d)
-        stack = [(np.arange(n), 0, None, False)]  # indices, depth, parent, is_right
+        # rows of zero weight (out of a bootstrap sample) are out of the
+        # fit, as in scikit-learn's splitter: every node holds only rows
+        # of positive weight, so its row count is its sampled-row count
+        stack = [(np.flatnonzero(sw > 0), 0, None, False)]  # indices, depth, parent, is_right
         while stack:
             idx, depth, parent, is_right = stack.pop()
             node_val = self._leaf_value(y_enc[idx], sw[idx], n_out)
@@ -126,20 +129,14 @@ class _BaseDecisionTree(BaseEstimator):
                 if k_feat == d
                 else rng.choice(d, size=k_feat, replace=False)
             )
-            # rows of zero weight (out of a bootstrap sample) do not count
-            # toward min_samples_split; checked after the feature draw, so
-            # every node of min_samples_split rows still draws and the
-            # random stream of the other nodes is unchanged
-            pos = sw[idx] > 0
-            if pos.sum() < self.min_samples_split:
-                continue
             best = self._best_split(X[idx], y_enc[idx], sw[idx], feats, n_out)
             if best is None:
                 continue
             f, thr, gain = best
             mask = X[idx, f] <= thr
             # a midpoint that rounds onto the upper value moves its rows left
-            if min((mask & pos).sum(), (~mask & pos).sum()) < self.min_samples_leaf:
+            n_left = mask.sum()
+            if min(n_left, len(idx) - n_left) < self.min_samples_leaf:
                 continue
             importances[f] += gain
             tree.feature[node_id] = int(f)
@@ -159,6 +156,10 @@ class _BaseDecisionTree(BaseEstimator):
         best_gain, best = 1e-12, None
         parent_imp = self._impurity_total(y, sw, n_out)
         total_w = sw.sum()
+        # split positions that leave min_samples_leaf rows a side
+        # (position i leaves i + 1 rows left)
+        n_left = np.arange(1, n)
+        sized = (n_left >= self.min_samples_leaf) & (n - n_left >= self.min_samples_leaf)
         step = max(1, _SPLIT_BLOCK_ELEMS // (n * n_out))
         for lo in range(0, len(feats), step):
             chunk = feats[lo : lo + step]
@@ -166,15 +167,7 @@ class _BaseDecisionTree(BaseEstimator):
             order = np.argsort(xt, axis=1, kind="mergesort")
             xs = np.take_along_axis(xt, order, axis=1)
             ws = sw[order]
-            # valid split positions: distinct values, min_samples_leaf rows
-            # of positive weight a side (zero-weight rows count for neither).
-            # At 1 no count is needed: a cut leaving one side no weight has
-            # no gain, so it never wins.
-            cut = xs[:, :-1] != xs[:, 1:]
-            if self.min_samples_leaf > 1:
-                n_pos = np.cumsum(ws > 0, axis=1)
-                cut &= n_pos[:, :-1] >= self.min_samples_leaf
-                cut &= n_pos[:, -1:] - n_pos[:, :-1] >= self.min_samples_leaf
+            cut = (xs[:, :-1] != xs[:, 1:]) & sized  # valid split positions
             left_imp, right_imp = self._prefix_impurities(y[order], ws, n_out)
             gain = parent_imp - (left_imp + right_imp)
             gain[~cut] = -np.inf

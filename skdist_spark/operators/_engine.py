@@ -5,13 +5,11 @@ ensemble, multiclass, eliminate — all variants of it) is: enumerate a
 grid of small independent training tasks, broadcast the training data
 once, run one task per Spark task, collect small results.
 
-This rebuild expresses that Spark-first: tasks become rows of a
-DataFrame, range-partitioned one-task-per-partition, executed through
-``mapInPandas`` (Arrow-batched), with results returned as pickled
-payloads in a binary column. Compared to the reference's
-``sc.parallelize(...).map``, the task set is visible to Catalyst/AQE,
-results stream back through Arrow, and the same code path works on
-Spark Connect clusters where raw RDDs are unavailable.
+This rebuild keeps that shape: one RDD job per task grid,
+``parallelize(range(n_tasks), n_parts).mapPartitions``, with contiguous
+task ids per partition (one task each by default) and each result sent
+back cloudpickled next to its task id. The broadcast needs a
+SparkContext, so the engine runs on classic Spark, not Spark Connect.
 
 Scale posture: the collected payloads are (score, params, small
 model) tuples — never training data — so driver memory stays O(#tasks),
@@ -31,27 +29,6 @@ from collections.abc import Callable, Iterable, Sequence
 from typing import Any
 
 import numpy as np
-
-
-def resolve_spark(sc) -> tuple[Any | None, Any | None]:
-    """Accept SparkSession, SparkContext, or None.
-
-    Returns (spark_session, spark_context); (None, None) -> run locally.
-    The reference accepts a sparkContext argument everywhere; we keep
-    that API but prefer a session when given one.
-    """
-    if sc is None:
-        return None, None
-    # SparkSession
-    if hasattr(sc, "sparkContext"):
-        return sc, sc.sparkContext
-    # SparkContext -> find/create the session on top of it
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        spark = SparkSession(sc)
-    return spark, sc
 
 
 def gate_zip_rereads() -> None:
@@ -109,15 +86,16 @@ def run_tasks(
     """Run ``work_fn(task, shared)`` for every task, preserving order.
 
     With no Spark handle, runs serially (reference parity: joblib path).
-    With Spark, broadcasts ``shared`` + the task list once and fans out
-    via a task-id DataFrame -> mapInPandas.
+    With Spark (a SparkSession or a SparkContext, as the reference's
+    ``sc``), broadcasts ``shared`` + the task list once and runs the
+    tasks as one RDD job.
     """
     tasks = list(tasks)
     if not tasks:
         return []
-    spark, context = resolve_spark(sc)
-    if spark is None:
+    if sc is None:
         return [work_fn(t, shared) for t in tasks]
+    context = getattr(sc, "sparkContext", sc)
 
     n_parts = parse_partitions(partitions, len(tasks))
     # cloudpickle (vendored in pyspark) so closures/lambdas work as work_fn.
@@ -138,34 +116,25 @@ def run_tasks(
 
     bc = context.broadcast(cloudpickle.dumps((tasks, shared, work_fn)))
 
-    def _run_batch(batches):
+    def _run_partition(ids):
         gate_zip_rereads()
-        import pandas as pd
         from pyspark import cloudpickle as cp
 
         tasks_l, shared_l, fn = pickle.loads(bc.value)
-        for pdf in batches:
-            ids = pdf["task_id"].tolist()
+        for i in ids:
             # cloudpickle on the worker too: results may hold instances of
             # classes that traveled by value and differ from importables
-            payloads = [cp.dumps(fn(tasks_l[i], shared_l)) for i in ids]
-            yield pd.DataFrame({"task_id": ids, "payload": payloads})
+            yield i, cp.dumps(fn(tasks_l[i], shared_l))
 
-    # spark.range with an explicit partition count already yields
-    # CONTIGUOUS equal id ranges per partition — the repartitionByRange
-    # this replaces paid a RangePartitioner SAMPLING job plus an
-    # exchange+sort per run_tasks call to produce the same layout
-    task_df = spark.range(0, len(tasks), 1, n_parts).withColumnRenamed(
-        "id", "task_id"
-    )
-    out_rows = task_df.mapInPandas(
-        _run_batch, schema="task_id long, payload binary"
-    ).collect()
+    # parallelize slices a range into contiguous equal id ranges, one per
+    # partition, without serializing the ids
+    ids = context.parallelize(range(len(tasks)), n_parts)
+    out = ids.mapPartitions(_run_partition).collect()
     bc.unpersist()
     results: list[Any] = [None] * len(tasks)
-    for row in out_rows:
-        results[row["task_id"]] = pickle.loads(bytes(row["payload"]))
-    missing = sorted(set(range(len(tasks))) - {row["task_id"] for row in out_rows})
+    for i, payload in out:
+        results[i] = pickle.loads(payload)
+    missing = sorted(set(range(len(tasks))) - {i for i, _ in out})
     if missing:
         raise RuntimeError(f"distributed tasks lost results for ids {missing[:5]}...")
     return results

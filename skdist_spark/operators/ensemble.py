@@ -8,7 +8,9 @@ data in its own Spark task, then ships back pickled; the ensemble
 aggregates probabilities/means on the driver at predict time. Every
 tree, the embedding's too, is one ``_fit_tree_task`` seeded by
 ``_DistBaseForest._fit_forest``. A forest tree fits with its bootstrap
-counts times ``sample_weight`` as row weights; extra-trees default to
+counts times ``sample_weight`` as row weights, and its splits see only
+the rows of positive weight (the in-bag rows, as scikit-learn's
+splitter skips zero-weight rows); extra-trees default to
 no bootstrap (the full sample, weighted by ``sample_weight``) and use
 the same CART splitter. The embedding's trees never bootstrap and,
 having no target, regress on uniform noise drawn from their seed.

@@ -209,38 +209,6 @@ def convert_to_parquet(
     )
 
 
-_AVRO_PROVIDER = "org.apache.spark.sql.avro.AvroFileFormat"
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True iff the spark-avro module is on the JVM classpath (it is an
-    external module, not bundled with core Spark)."""
-    try:
-        spark._jvm.java.lang.Class.forName(_AVRO_PROVIDER)
-        return True
-    except Exception:
-        return False
-
-
-def read_avro(spark: SparkSession, path: str, **options: str) -> DataFrame:
-    """Avro read, availability-gated with an actionable error."""
-    if not avro_available(spark):
-        raise RuntimeError(
-            "spark-avro not on classpath. Add the module matching your "
-            "Spark version (e.g. --packages org.apache.spark:spark-avro_2.13:<version>)."
-        )
-    return spark.read.format("avro").options(**options).load(path)
-
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite", **options: str) -> None:
-    if not avro_available(df.sparkSession):
-        raise RuntimeError(
-            "spark-avro not on classpath. Add the module matching your "
-            "Spark version (e.g. --packages org.apache.spark:spark-avro_2.13:<version>)."
-        )
-    df.write.format("avro").options(**options).mode(mode).save(path)
-
-
 def read_binary_files(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:

@@ -436,7 +436,7 @@ class _SessionProcessor:
 def tws_available() -> bool:
     """transformWithStateInPandas runs a protobuf-based state server in
     the Python worker; without google.protobuf the worker crashes at
-    runtime, so gate on the import like the Kafka/Avro connectors."""
+    runtime, so gate on the import like the Kafka connector."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

@@ -530,6 +530,25 @@ def test_min_samples_split_counts_positive_weight_rows(cls):
     assert _tree_arrays(ones) == _tree_arrays(unweighted)
 
 
+@pytest.mark.parametrize("split, leaf", [(2, 1), (20, 5)])
+@pytest.mark.parametrize("cls", [DecisionTreeClassifier, DecisionTreeRegressor])
+def test_bootstrap_weights_fit_in_bag_rows_only(cls, split, leaf):
+    """Rows of zero weight are out of the fit: bootstrap counts as
+    weights grow the tree that the in-bag rows alone, weighted by their
+    counts, grow (thresholds, values and the feature draws alike)."""
+    rng = np.random.RandomState(4)
+    X = np.round(rng.standard_normal((400, 6)) * 3)  # ties across the bag edge
+    y = rng.randint(0, 3, 400) if cls is DecisionTreeClassifier else X @ rng.standard_normal(6)
+    counts = np.bincount(rng.randint(0, 400, 400), minlength=400).astype(np.float64)
+    bag = counts > 0
+    make = lambda: cls(min_samples_split=split, min_samples_leaf=leaf,
+                       max_features=0.5, random_state=1)
+    full = make().fit(X, y, sample_weight=counts)
+    in_bag = make().fit(X[bag], y[bag], sample_weight=counts[bag])
+    assert (~bag).sum() > 100 and len(full.tree_.feature) > 9
+    assert _tree_arrays(full) == _tree_arrays(in_bag)
+
+
 def _tree_arrays(est):
     t = est.tree_
     return (np.asarray(t.feature).tobytes(), np.asarray(t.threshold).tobytes(),

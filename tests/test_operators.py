@@ -348,6 +348,17 @@ def test_forest_classifier(spark, data):
     np.testing.assert_array_equal(m.predict_proba(X), m2.predict_proba(X))
 
 
+def test_forest_classifier_spark_matches_serial(spark, data):
+    """A forest's trees fit the same on Spark tasks as serially."""
+    X, y = data
+    kw = dict(n_estimators=6, max_depth=6, max_features=0.5, min_samples_leaf=3, random_state=7)
+    dist = DistRandomForestClassifier(sc=spark, **kw).fit(X, y)
+    serial = DistRandomForestClassifier(sc=None, **kw).fit(X, y)
+    assert dist.predict_proba(X).tobytes() == serial.predict_proba(X).tobytes()
+    for a, b in zip(dist.estimators_, serial.estimators_):
+        assert (a.tree_.threshold, a.tree_.feature) == (b.tree_.threshold, b.tree_.feature)
+
+
 def test_forest_regressor(spark):
     rng = np.random.RandomState(3)
     X = rng.randn(300, 5)
@@ -2776,6 +2787,26 @@ def test_run_tasks_none_results_match_serial(spark):
         return None
 
     assert run_tasks(spark, range(3), work) == run_tasks(None, range(3), work)
+
+
+def _task_and_partition(t, s):
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return (t, s * t), None if ctx is None else ctx.partitionId()
+
+
+@pytest.mark.parametrize("n_tasks, partitions", [(7, 3), (3, 8)])
+def test_run_tasks_explicit_partitions_keep_task_order(spark, n_tasks, partitions):
+    """Several tasks per partition (7 in 3) and empty partitions (3 in
+    8) return every result in task order, as the serial path does."""
+    from skdist_spark.operators._engine import run_tasks
+
+    got = run_tasks(spark, range(n_tasks), _task_and_partition, 10, partitions)
+    want = run_tasks(None, range(n_tasks), _task_and_partition, 10, partitions)
+    assert [r for r, _ in got] == [r for r, _ in want] == [(t, 10 * t) for t in range(n_tasks)]
+    parts = [p for _, p in got]
+    assert parts == sorted(parts) and len(set(parts)) == min(n_tasks, partitions)
 
 
 def _write_zip_module(path, name, version):
