@@ -41,23 +41,30 @@ _MODULES = [
 # not yet earned a driver row for their CURRENT form; demote verified ones.
 # Rounds 1-8 attested 270/270 oracles cumulatively (no row older than
 # round 3 after r8), and round 9 attested all 50 names of its window.
-# Positions 1-2 are round 9's changed faces (similar_doc_pairs: generalized
-# prefix-filter candidate bound + count-gated verify; rfm_segments: one
-# grouped two-phase rank replaces three chained ones).  Positions 3-7 are
-# the other oracle queries that rank through functions/global_rank,
-# rewritten since round 9 (one two_phase_row_number with optional
-# group_cols; the qini rank now routes NULL scores last), and that the
-# round-9 window did not hold; user_revenue_gini and revenue_pareto (same
-# rewrite) stay at 12-13.  Positions 8-33 are the late round-8 rewrites
-# that round 9 attested; the remainder continues the third pass with the
-# oldest round-3-vintage rows.  The five windows.py faces that made room
-# (value_histogram, profile_documents, user_event_features,
-# event_transitions, sales_grouping_sets) hold round-9 hash matches and
-# no change since.
+# Positions 1-6 are the registry queries that now compute through the
+# generic API they used to re-code (asof_join and range_join_clicks via
+# operators.joins, salted_event_totals via operators.aggregates.salted_agg,
+# user_retention via cohort_retention, user_tier_history via scd2_history,
+# events_funnel via funnel's count row).  Positions 7-8 are round 9's
+# changed faces (similar_doc_pairs: generalized prefix-filter candidate
+# bound + count-gated verify; rfm_segments: one grouped two-phase rank
+# replaces three chained ones).  Positions 9-13 are the other oracle
+# queries that rank through functions/global_rank, rewritten since round 9
+# (one two_phase_row_number with optional group_cols; the qini rank now
+# routes NULL scores last), and that the round-9 window did not hold;
+# user_revenue_gini and revenue_pareto (same rewrite) stay at 18-19.
+# Positions 14-39 are the late round-8 rewrites that round 9 attested; the
+# remainder continues the third pass with the oldest round-3-vintage rows.
+# The six faces that made room (rolling_revenue, setops_customers,
+# bloom_semi_sales, events_value_windows, orders_date_features,
+# events_unpivot) hold hash matches from rounds 1, 7 and 9 and no change
+# since.
 # Only these 50 names are listed: every other entry follows in module
 # order, which no correctness row depends on.
 _PRIORITY = [
     # -- CHECKED WINDOW (first 50 get a CORRECTNESS row) --
+    "asof_join", "range_join_clicks", "salted_event_totals",
+    "user_retention", "user_tier_history", "events_funnel",
     "similar_doc_pairs", "rfm_segments", "purchase_uplift_qini",
     "doc_perplexity_filter", "doc_curriculum_phases", "event_lateness_profile",
     "peak_concurrent_sessions", "ml_kmeans_exact",
@@ -71,10 +78,9 @@ _PRIORITY = [
     "doc_containment", "doc_keyphrases", "source_leakage",
     "purchase_ab_mannwhitney", "purchase_ab_conversion", "inverted_postings",
     "embedding_covariance", "daily_gapfill", "user_daily_interpolate",
-    "daily_active_users", "time_bucket_rollup", "rolling_revenue",
+    "daily_active_users", "time_bucket_rollup",
     "daily_percentile_bands", "session_bounce_rate",
-    "daily_revenue_decompose", "setops_customers", "bloom_semi_sales",
-    "events_value_windows", "orders_date_features", "events_unpivot",
+    "daily_revenue_decompose",
 ]
 
 

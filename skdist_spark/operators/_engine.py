@@ -207,8 +207,16 @@ def strip_spark(obj) -> None:
 
 
 def rankdata_min(values: np.ndarray) -> np.ndarray:
-    """scipy.stats.rankdata(method='min') for 1-D arrays (ascending)."""
-    values = np.asarray(values)
+    """scipy.stats.rankdata(method='min') for 1-D arrays (ascending).
+
+    NaN entries (failed fits) tie at the worst rank, after every
+    number, as scikit-learn ranks search scores; all-NaN ranks all 1.
+    """
+    values = np.asarray(values, dtype=float)
+    nan = np.isnan(values)
+    if nan.all():
+        return np.ones(len(values), dtype=np.int32)
+    values = np.where(nan, np.nanmax(values) + 1, values)
     order = np.argsort(values, kind="mergesort")
     ranks = np.empty(len(values), dtype=np.int32)
     rank = 1

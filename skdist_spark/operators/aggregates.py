@@ -3,7 +3,7 @@
 A plain ``groupBy(keys)`` over power-law keys bottlenecks: the heaviest
 key lands on ONE reducer regardless of cluster size. For decomposable
 aggregates (count / sum / min / max) the fix is the two-stage salted
-shape (see plans.windows.salted_event_totals for the fixed-query face):
+shape (the registry query plans.windows.salted_event_totals calls it):
 stage 1 aggregates on (keys, salt) — num_salts x the reduce parallelism
 for the hot keys — stage 2 merges the bounded per-salt partials.
 

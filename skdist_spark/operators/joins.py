@@ -1,9 +1,9 @@
 """Reusable temporal join operators (DataFrame-in / DataFrame-out).
 
-The fixed driver queries in ``plans.windows`` demonstrate these shapes
-on the events table; this module is the user-facing API, generalized
-to arbitrary inputs. Both operators avoid the nested-loop plans Spark
-produces for raw inequality predicates:
+The registry queries ``plans.windows.asof_join`` and
+``range_join_clicks`` are these operators applied to the events table.
+Both operators avoid the nested-loop plans Spark produces for raw
+inequality predicates:
 
 - ``asof_join``: union both sides and take a running ``last(...)``
   window per key over the merged timeline — one shuffle on the key,

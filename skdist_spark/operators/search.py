@@ -198,7 +198,8 @@ class DistBaseSearchCV(BaseEstimator):
 
         refit_metric = self.refit if multimetric else "score"
         if not multimetric or self.refit:
-            self.best_index_ = int(np.argmax(mean_test[refit_metric]))
+            # the rank puts failed (NaN) candidates last; argmax would pick one
+            self.best_index_ = int(np.argmin(out[f"rank_test_{refit_metric}"]))
             self.best_params_ = candidates[self.best_index_]
             self.best_score_ = float(mean_test[refit_metric][self.best_index_])
 
@@ -370,8 +371,9 @@ class DistMultiModelSearch(DistBaseSearchCV):
             {"score": self.scorer_}, fit_params,
         )
         mean_scores = test["score"].mean(axis=1)
+        ranks = rankdata_min(-mean_scores)
 
-        self.best_index_ = int(np.argmax(mean_scores))
+        self.best_index_ = int(np.argmin(ranks))
         best_mi, best_params, _ = candidates[self.best_index_]
         self.best_model_index_ = best_mi
         self.best_model_name_ = models[best_mi][0]
@@ -382,7 +384,7 @@ class DistMultiModelSearch(DistBaseSearchCV):
             "model_name": [models[c[0]][0] for c in candidates],
             "params": [c[1] for c in candidates],
             "mean_test_score": mean_scores.tolist(),
-            "rank_test_score": rankdata_min(-mean_scores).tolist(),
+            "rank_test_score": ranks.tolist(),
         }
         if self.verbose:
             by_model = {}

@@ -35,7 +35,8 @@ FUNNEL_STEPS = ("signup", "click", "purchase")
 
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered 3-step funnel (signup -> click -> purchase): how many
-    users completed each prefix, with strictly increasing timestamps.
+    users completed each prefix, with strictly increasing timestamps —
+    the wide per-step count row of the generic ``funnel``.
 
     Plan: one shuffle on user_id; step k's first-completion time is a
     windowed MIN over the same partitioning referencing step k-1's
@@ -43,36 +44,13 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange+Sort. The alternative k-way self-join would shuffle k
     times and skew on power users.
     """
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_type", "ts")
-    w = Window.partitionBy("user_id")
-    s1, s2, s3 = FUNNEL_STEPS
-    staged = (
-        ev.withColumn("t1", F.min(F.when(F.col("event_type") == s1, F.col("ts"))).over(w))
-        .withColumn(
-            "t2",
-            F.min(
-                F.when((F.col("event_type") == s2) & (F.col("ts") > F.col("t1")), F.col("ts"))
-            ).over(w),
-        )
-        .withColumn(
-            "t3",
-            F.min(
-                F.when((F.col("event_type") == s3) & (F.col("ts") > F.col("t2")), F.col("ts"))
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
-    )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count("t1").alias("n_signup"),
-        F.count("t2").alias("n_signup_click"),
-        F.count("t3").alias("n_full_funnel"),
+    ev = load_table(spark, "events", sf_dir)
+    return _funnel_counts(ev, list(FUNNEL_STEPS)).toDF(
+        "n_users", "n_signup", "n_signup_click", "n_full_funnel"
     )
 
 
-def funnel(
+def _funnel_counts(
     df: DataFrame,
     steps: "list[str]",
     id_col: str = "user_id",
@@ -80,17 +58,8 @@ def funnel(
     ts_col: str = "ts",
     within_s: "int | None" = None,
 ) -> DataFrame:
-    """Generic ordered funnel: per-step completion counts for an
-    arbitrary step list, optionally requiring the whole journey to
-    finish within ``within_s`` seconds of step 1 (the conversion
-    window every product-analytics funnel offers).
-
-    Same single-exchange plan as events_funnel for any k: step k's
-    first-completion instant is a windowed MIN referencing step k-1's
-    column, so the k Window nodes stack on ONE (id)-partitioned
-    exchange — never k self-joins.  Returns (step_idx, step_name,
-    n_completed) with step_idx 0 = all ids seen.
-    """
+    """``funnel``'s one-row count frame: ``n0`` = all ids seen, ``n<k>``
+    = ids that completed steps 1..k in order."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
     w = Window.partitionBy(id_col)
@@ -112,10 +81,32 @@ def funnel(
     per_user = staged.groupBy(id_col).agg(
         *[F.max(f"_s{i}").alias(f"_s{i}") for i in range(1, len(steps) + 1)]
     )
-    counts = per_user.agg(
+    return per_user.agg(
         F.count(F.lit(1)).alias("n0"),
         *[F.count(f"_s{i}").alias(f"n{i}") for i in range(1, len(steps) + 1)],
     )
+
+
+def funnel(
+    df: DataFrame,
+    steps: "list[str]",
+    id_col: str = "user_id",
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    within_s: "int | None" = None,
+) -> DataFrame:
+    """Generic ordered funnel: per-step completion counts for an
+    arbitrary step list, optionally requiring the whole journey to
+    finish within ``within_s`` seconds of step 1 (the conversion
+    window every product-analytics funnel offers).
+
+    Single-exchange plan for any k: step k's first-completion instant
+    is a windowed MIN referencing step k-1's column, so the k Window
+    nodes stack on ONE (id)-partitioned exchange — never k
+    self-joins.  Returns (step_idx, step_name, n_completed) with
+    step_idx 0 = all ids seen.
+    """
+    counts = _funnel_counts(df, steps, id_col, type_col, ts_col, within_s)
     names = ["(all)"] + list(steps)
     stacked = ", ".join(
         f"{i}, '{names[i]}', n{i}" for i in range(0, len(steps) + 1)
@@ -301,29 +292,16 @@ def _funnel_intervals_oracle_sql() -> str:
 def user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention: users bucketed by the week of their
     first event; for each (cohort_week, week_offset) the count of
-    distinct users active that many weeks later.
+    distinct users active that many weeks later — the generic
+    ``cohort_retention`` over the events table, columns renamed.
 
     Week indexes are integer day-diffs floor-divided by 7 from a fixed
     epoch — engine-aligned (no locale week-start semantics). Both the
     first-event aggregate and the activity dedup shuffle on user_id,
     so AQE reuses one exchange for the self-join.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id", F.to_date("ts").alias("day")
-    )
-    firsts = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
-    activity = ev.distinct()
-    joined = activity.join(firsts, "user_id").select(
-        "user_id",
-        (F.floor(F.datediff(F.col("first_day"), F.lit(_WEEK_EPOCH).cast("date")) / 7))
-        .cast("int")
-        .alias("cohort_week"),
-        (F.floor(F.datediff(F.col("day"), F.col("first_day")) / 7)).cast("int").alias("week_offset"),
-    )
-    return (
-        joined.groupBy("cohort_week", "week_offset")
-        .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
+    return cohort_retention(load_table(spark, "events", sf_dir)).withColumnsRenamed(
+        {"cohort_period": "cohort_week", "period_offset": "week_offset", "n_active": "n_users"}
     )
 
 
@@ -336,8 +314,9 @@ def cohort_retention(
 ) -> DataFrame:
     """Generic cohort retention: ids bucketed by the period of their
     first activity; for each (cohort_period, period_offset) the count
-    of distinct ids active that many periods later — user_retention
-    parameterized to any id/timestamp columns and period width.
+    of distinct ids active that many periods later, for any
+    id/timestamp columns and period width (``user_retention`` is the
+    weekly events-table face).
 
     Integer day-diff arithmetic from a fixed epoch (engine-aligned, no
     locale week-start semantics); the first-activity aggregate and the
@@ -370,8 +349,8 @@ def scd2_history(
     order_col: str | None = None,
 ) -> DataFrame:
     """Generic SCD2 builder: each id's ``state_col`` changes as
-    [valid_from_us, valid_to_us) intervals — user_tier_history
-    parameterized to any (id, timestamp, state) columns.
+    [valid_from_us, valid_to_us) intervals, for any (id, timestamp,
+    state) columns (``user_tier_history`` is the events-table face).
 
     One id-partitioned time-ordered exchange serves both windows
     (lag change-filter, lead interval-close); ``order_col`` breaks
@@ -1153,7 +1132,8 @@ TIER_WIDTH = 100.0  # value tiers [0,100) -> 0, [100,200) -> 1, ... clamp 4
 
 def user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2-style temporal state table: each user's value-tier change
-    history as [valid_from, valid_to) intervals.
+    history as [valid_from, valid_to) intervals, through the generic
+    ``scd2_history`` with event_id breaking timestamp ties.
 
     The warehouse slowly-changing-dimension build, from an event log:
     keep only rows where the tier DIFFERS from the previous event's
@@ -1163,31 +1143,10 @@ def user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros so the interval bounds hash-match the oracle.  The open
     interval (valid_to_us NULL) is the current state.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        "event_id",
-        F.expr(
-            f"least(4, greatest(0, CAST(floor(value / {TIER_WIDTH}D) AS INT)))"
-        ).alias("tier"),
+    ev = load_table(spark, "events", sf_dir).withColumn(
+        "tier", F.expr(f"least(4, greatest(0, CAST(floor(value / {TIER_WIDTH}D) AS INT)))")
     )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    changes = (
-        ev.withColumn("prev_tier", F.lag("tier").over(w))
-        .where(F.col("prev_tier").isNull() | (F.col("tier") != F.col("prev_tier")))
-    )
-    w2 = Window.partitionBy("user_id").orderBy("us", "event_id")
-    return (
-        changes.withColumn("valid_to_us", F.lead("us").over(w2))
-        .select(
-            "user_id",
-            "tier",
-            F.col("us").alias("valid_from_us"),
-            "valid_to_us",
-            F.expr("valid_to_us IS NULL").alias("is_current"),
-        )
-        .orderBy("user_id", "valid_from_us")
-    )
+    return scd2_history(ev, "user_id", "ts", "tier", order_col="event_id")
 
 
 ORACLE_SQL["user_tier_history"] = f"""

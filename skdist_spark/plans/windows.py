@@ -19,6 +19,7 @@ from ..functions.global_rank import (
     two_phase_row_number,
     two_phase_running_agg,
 )
+from ..operators import aggregates, joins
 from ..sources.catalog import load_table
 
 SESSION_GAP_MIN = 30
@@ -58,42 +59,25 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each purchase event, the most recent prior click
-    by the same user.
+    by the same user, through the generic ``operators.joins.asof_join``.
 
     Spark-first plan: instead of an inequality join (which Spark would
     execute as a broadcast-nested-loop), union both event streams and
     take a running ``last(click_ts)`` window per user ordered by time —
     one shuffle on user_id, linear in events, skew-safe under AQE.
+    ``strict`` (the default) excludes a same-instant click, matching
+    the oracle's ``click_ts < purchase_ts`` predicate.
     """
     ev = load_table(spark, "events", sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("ev_ts"), F.col("ts").alias("click_ts"),
-        F.lit(None).cast("bigint").alias("purchase_id"),
-    )
     purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("ev_ts"), F.lit(None).cast("timestamp").alias("click_ts"),
-        F.col("event_id").alias("purchase_id"),
+        F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts")
     )
-    # purchases sort BEFORE clicks at identical ts, so a same-instant
-    # click is excluded from the purchase's preceding frame — this
-    # matches the oracle's strict click_ts < purchase_ts predicate
-    order_rank = F.when(F.col("purchase_id").isNull(), 1).otherwise(0)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ev_ts", order_rank)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    clicks = ev.where(F.col("event_type") == "click").select(
+        "user_id", F.col("ts").alias("click_ts")
     )
-    merged = clicks.unionByName(purchases).withColumn(
-        "asof_click_ts", F.last("click_ts", ignorenulls=True).over(w)
-    )
-    return (
-        merged.where(F.col("purchase_id").isNotNull())
-        .select(
-            F.col("purchase_id"), "user_id", F.col("ev_ts").alias("purchase_ts"),
-            "asof_click_ts",
-        )
-        .orderBy("purchase_id")
-    )
+    return joins.asof_join(
+        purchases, clicks, "user_id", "purchase_ts", "click_ts", value_cols=["click_ts"]
+    ).orderBy("purchase_id")
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,46 +191,28 @@ RANGE_JOIN_WINDOW_S = 1800
 
 def range_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval range join: for each error event, how many clicks by the
-    same user within +/-30 minutes.
+    same user within +/-30 minutes, through the generic
+    ``operators.joins.interval_join``.
 
     Spark-first plan: a naive ``ON abs(e.ts - c.ts) <= w`` inequality
     join becomes a broadcast-nested-loop. Instead each error explodes
-    to its 3 candidate 30-min buckets and the join is an EQUI-join on
+    to its candidate time buckets and the join is an EQUI-join on
     (user_id, bucket) followed by the exact interval filter — shuffle
     hash/sort-merge joinable, linear in events, skew bounded by bucket
     cardinality. Exact integer microsecond arithmetic on both faces.
     """
     ev = load_table(spark, "events", sf_dir)
-    w_us = RANGE_JOIN_WINDOW_S * 1_000_000
-    errors = (
-        ev.where(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id"),
-            F.unix_micros("ts").alias("err_us"),
-        )
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    (F.col("err_us") / w_us).cast("long") - 1,
-                    (F.col("err_us") / w_us).cast("long"),
-                    (F.col("err_us") / w_us).cast("long") + 1,
-                )
-            ),
-        )
+    errors = ev.where(F.col("event_type") == "error").select(
+        F.col("event_id").alias("error_id"), "user_id", "ts"
     )
     clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.unix_micros("ts").alias("click_us"),
-        (F.unix_micros("ts") / w_us).cast("long").alias("c_bucket"),
+        "user_id", F.col("ts").alias("click_ts")
     )
     return (
-        errors.join(
-            clicks,
-            (errors.user_id == clicks.c_user) & (errors.bucket == clicks.c_bucket),
+        joins.interval_join(
+            errors, clicks, "user_id", "ts", "click_ts",
+            -RANGE_JOIN_WINDOW_S, RANGE_JOIN_WINDOW_S,
         )
-        .where(F.abs(F.col("err_us") - F.col("click_us")) <= w_us)
         .groupBy("error_id", "user_id")
         .agg(F.count(F.lit(1)).alias("n_nearby_clicks"))
         .orderBy("error_id")
@@ -345,7 +311,8 @@ SALT_BUCKETS = 8
 def salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe aggregation: two-stage salted groupBy on event_type
     (5 hot keys — the worst-case skew shape, where a plain groupBy
-    bottlenecks 5 reducers no matter how many executors exist).
+    bottlenecks 5 reducers no matter how many executors exist), through
+    the generic ``operators.aggregates.salted_agg``.
 
     Stage 1 groups on (event_type, salt) — SALT_BUCKETS x more
     parallelism for the heavy map-side combine; stage 2 merges the
@@ -354,25 +321,16 @@ def salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically). Decimal partials make the two-stage sum EXACTLY equal
     to the single-stage oracle regardless of merge order.
     """
-    ev = load_table(spark, "events", sf_dir)
-    partial = (
-        ev.withColumn("salt", F.pmod(F.col("event_id"), F.lit(SALT_BUCKETS)))
-        .groupBy("event_type", "salt")
-        .agg(
-            F.count(F.lit(1)).alias("n_partial"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_partial"),
-            F.max("value").alias("max_partial"),
-        )
-    )
-    return (
-        partial.groupBy("event_type")
-        .agg(
-            F.sum("n_partial").alias("n_events"),
-            F.sum("sum_partial").cast("double").alias("sum_value"),
-            F.max("max_partial").alias("max_value"),
-        )
-        .orderBy("event_type")
-    )
+    return aggregates.salted_agg(
+        load_table(spark, "events", sf_dir),
+        ["event_type"],
+        sum_cols=["value"],
+        max_cols=["value"],
+        count_alias="n_events",
+        salt_src="event_id",
+        num_salts=SALT_BUCKETS,
+        sum_decimal="decimal(18,6)",
+    ).orderBy("event_type")
 
 
 def order_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,18 +33,24 @@ from pyspark.sql.types import (
 SESSION_GAP_MIN = 30
 
 
-def _stage_stream_dir(sf_dir: str) -> str:
+def _stage_table_dir(sf_dir: str, table: str) -> str:
     """The file stream source requires a DIRECTORY; stage one with a
-    symlink to the (read-only) events parquet."""
+    symlink to the (read-only) ``table`` parquet of ``sf_dir``."""
     import hashlib
     import os
 
-    stage = f"/tmp/skdist_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    prefix = {"events": "skdist_stream", "documents": "skdist_stream_docs"}[table]
+    stage = f"/tmp/{prefix}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
     os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
+    link = os.path.join(stage, f"{table}.parquet")
     if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
+        os.symlink(os.path.join(sf_dir, f"{table}.parquet"), link)
     return stage
+
+
+def _stage_stream_dir(sf_dir: str) -> str:
+    """The staged events directory that ``_read_event_stream`` reads."""
+    return _stage_table_dir(sf_dir, "events")
 
 
 def _read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,9 +231,11 @@ def _read_replay(spark: SparkSession, sf_dir: str, layout: str) -> DataFrame:
 
 def stage_stream_inputs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Stage every file-stream input of ``sf_dir`` ahead of the stream
-    queries: the events symlink directory plus each replay layout.
-    Idempotent (staged layouts are reused).  Returns {layout: stage}."""
+    queries: the events and documents symlink directories plus each
+    replay layout.  Idempotent (staged layouts are reused).  Returns
+    {layout: stage}."""
     _stage_stream_dir(sf_dir)
+    _stage_table_dir(sf_dir, "documents")
     return {layout: _stage_replay(spark, sf_dir, layout) for layout in _REPLAY_LAYOUTS}
 
 
@@ -668,18 +676,10 @@ _DOCS_SCHEMA = StructType(
 def stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: streaming MinHash candidate edges over the
     documents table as a file stream, drained to a static frame."""
-    import hashlib
-    import os
-
-    stage = f"/tmp/skdist_stream_docs_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
     docs = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .format("parquet")
-        .load(stage)
+        .load(_stage_table_dir(sf_dir, "documents"))
         .select("doc_id", "text")
     )
     out = run_stream_to_df(minhash_pairs_stream(docs))

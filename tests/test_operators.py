@@ -280,6 +280,45 @@ def test_multi_model_search_without_refit_raises_like_grid_search(data):
     assert str(multi_err.value) == str(grid_err.value)
 
 
+class _FailsAtHalf(LogisticRegression):
+    """A LogisticRegression whose fit raises at C=0.5."""
+
+    def fit(self, X, y, sample_weight=None):
+        if self.C == 0.5:
+            raise ValueError("fit fails at C=0.5")
+        return super().fit(X, y, sample_weight)
+
+
+@pytest.mark.parametrize("on_spark", [False, True])
+def test_failed_candidate_never_wins_the_search(spark, data, on_spark):
+    """A failed fit scores NaN (``error_score``): its candidates tie at
+    the worst rank, and the best index follows the rank, so neither
+    search picks (nor refits) a failed candidate."""
+    X, y = data
+    sc = spark if on_spark else None
+    grid = DistGridSearchCV(
+        _FailsAtHalf(max_iter=80), {"C": [1.0, 0.5, 2.0], "max_iter": [40, 80]}, sc=sc, cv=3
+    ).fit(X, y)
+    res = grid.cv_results_
+    failed = [i for i, p in enumerate(res["params"]) if p["C"] == 0.5]
+    assert failed == [2, 3] and np.isnan(res["mean_test_score"][failed]).all()
+    assert list(res["rank_test_score"][failed]) == [5, 5]
+    assert res["rank_test_score"][grid.best_index_] == 1
+    assert grid.best_score_ == np.nanmax(res["mean_test_score"])
+    assert grid.best_params_["C"] != 0.5
+
+    models = [
+        ("failing", _FailsAtHalf(max_iter=80), {"C": [0.5]}),
+        ("tree", DecisionTreeClassifier(random_state=0), {"max_depth": [2, 4]}),
+    ]
+    multi = DistMultiModelSearch(models, sc=sc, n=2, cv=3, random_state=0).fit(X, y)
+    res = multi.cv_results_
+    assert np.isnan(res["mean_test_score"][0])
+    assert res["rank_test_score"][0] == 3
+    assert multi.best_model_name_ == "tree" and res["rank_test_score"][multi.best_index_] == 1
+    assert multi.best_score_ == np.nanmax(res["mean_test_score"])
+
+
 def test_ovr(spark, data):
     X, y = data
     m = DistOneVsRestClassifier(LogisticRegression(), sc=spark).fit(X, y)

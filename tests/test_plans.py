@@ -450,22 +450,6 @@ def test_generic_funnel_matches_fixed_and_respects_window(spark, sf_dir):
     assert windowed == {0: 3, 1: 3, 2: 2, 3: 1}  # user 3's c is too late
 
 
-def test_generic_cohort_retention_matches_fixed(spark, sf_dir):
-    from skdist_spark.plans.behavior import cohort_retention, user_retention
-    from skdist_spark.sources.catalog import load_table
-
-    ev = load_table(spark, "events", sf_dir)
-    gen = {
-        (r.cohort_period, r.period_offset): r.n_active
-        for r in cohort_retention(ev).collect()
-    }
-    fixed = {
-        (r.cohort_week, r.week_offset): r.n_users
-        for r in user_retention(spark, sf_dir).collect()
-    }
-    assert gen == fixed
-
-
 def test_generic_scd2_history(spark):
     import datetime
 
@@ -588,3 +572,33 @@ def test_event_lateness_profile_out_of_order_branch(spark, tmp_path):
     # on-time: 0,1,3,7 -> 4 events; 0.4s -> bucket 0; 10s/19s -> 3,4;
     # 1.5s late at event 6 -> bucket 0 (20.0 - 18.5)
     assert got == {-1: 4, 0: 2, 3: 1, 4: 1}, got
+
+
+@pytest.mark.parametrize(
+    "query, module, api",
+    [
+        ("asof_join", "skdist_spark.operators.joins", "asof_join"),
+        ("range_join_clicks", "skdist_spark.operators.joins", "interval_join"),
+        ("salted_event_totals", "skdist_spark.operators.aggregates", "salted_agg"),
+        ("user_retention", "skdist_spark.plans.behavior", "cohort_retention"),
+        ("user_tier_history", "skdist_spark.plans.behavior", "scd2_history"),
+        ("events_funnel", "skdist_spark.plans.behavior", "_funnel_counts"),
+    ],
+)
+def test_registry_query_computes_through_its_api(spark, sf_dir, monkeypatch, query, module, api):
+    """Each of these registry queries is its generic API plus a column
+    readout, so the DuckDB oracle that checks the query checks the API."""
+    import importlib
+
+    import __spark_entry__ as entry_mod
+
+    mod = importlib.import_module(module)
+    real, calls = getattr(mod, api), []
+
+    def spy(*args, **kwargs):
+        calls.append(api)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, api, spy)
+    entry_mod.queries()[query](spark, sf_dir)  # lazy build, no job
+    assert calls == [api]

@@ -197,22 +197,16 @@ def test_stream_minhash_with_ttl_same_single_batch_result(spark, sf_dir):
     availableNow drain (the timeout clock keeps scheduling batches), so
     the TTL run uses a manually-stopped continuous micro-batch query.
     """
-    import hashlib
-    import os
     import time
     import uuid
 
     from skdist_spark.streaming.ops import (
-        _DOCS_SCHEMA, minhash_pairs_stream, run_stream_to_df,
+        _DOCS_SCHEMA, _stage_table_dir, minhash_pairs_stream, run_stream_to_df,
     )
 
-    stage = f"/tmp/skdist_stream_docs_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
     docs = (
-        spark.readStream.schema(_DOCS_SCHEMA).format("parquet").load(stage)
+        spark.readStream.schema(_DOCS_SCHEMA).format("parquet")
+        .load(_stage_table_dir(sf_dir, "documents"))
         .select("doc_id", "text")
     )
     plain = run_stream_to_df(minhash_pairs_stream(docs)).collect()
@@ -863,3 +857,30 @@ def test_stage_stream_inputs_layout_and_reuse(spark, sf_dir):
         assert all(a < b for a, b in zip(mtimes, mtimes[1:])), stage
     assert stage_stream_inputs(spark, sf_dir) == stages
     assert snapshot(stages) == first
+
+
+def test_stage_stream_inputs_stages_both_symlink_tables(spark, tmp_path, monkeypatch):
+    """``stage_stream_inputs`` stages the events and the documents
+    directory (what the stream queries read) through the one stager."""
+    import os
+    import shutil
+
+    from skdist_spark.streaming import ops
+
+    monkeypatch.setattr(ops, "_REPLAY_LAYOUTS", {})
+    sf_dir = str(tmp_path)
+    for table in ("events", "documents"):
+        os.makedirs(os.path.join(sf_dir, f"{table}.parquet"))
+    stages = {table: ops._stage_table_dir(sf_dir, table) for table in ("events", "documents")}
+    for stage in stages.values():
+        shutil.rmtree(stage, ignore_errors=True)
+    try:
+        assert ops.stage_stream_inputs(spark, sf_dir) == {}
+        assert stages["events"] == ops._stage_stream_dir(sf_dir)
+        assert os.path.basename(stages["documents"]).startswith("skdist_stream_docs_")
+        for table, stage in stages.items():
+            link = os.path.join(stage, f"{table}.parquet")
+            assert os.readlink(link) == os.path.join(sf_dir, f"{table}.parquet")
+    finally:
+        for stage in stages.values():
+            shutil.rmtree(stage, ignore_errors=True)
