@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .similarity import _fold_dot, _fold_norms
 
 N_HASHES = 8
 N_BANDS = 4  # rows per band = 2
@@ -482,10 +483,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     The all-pairs exactness is inherent (this is the small-N verifier;
     the 100 TB screening path is the LSH/IVF bucketed operators).
 
-    Determinism: the tile product accumulates one DIMENSION at a time
-    (64 vectorized outer-product adds), which reproduces the strict
-    left-fold summation of the DuckDB oracle's list_sum bit-for-bit —
-    same floats, same hash, while being plain numpy inside.
+    Determinism: the tile is similarity's left-fold kernel
+    (``_fold_norms``, ``_fold_dot``): it accumulates one DIMENSION at a
+    time (64 vectorized outer-product adds), which reproduces the
+    strict left-fold summation of the DuckDB oracle's list_sum
+    bit-for-bit — same floats, same hash, while being plain numpy
+    inside.
     """
     return _embedding_impl(load_table(spark, "embeddings", sf_dir))
 
@@ -526,18 +529,11 @@ def _embedding_impl(raw: DataFrame) -> DataFrame:
                 ids_b = np.array([r["vec_id"] for r in rows_b], dtype=np.int64)
                 A = np.array([r["v"] for r in rows_a], dtype=np.float64)
                 B = np.array([r["v"] for r in rows_b], dtype=np.float64)
-                # normalize: left-fold sum of squares per vector, then
-                # one IEEE division — same op sequence as the oracle
-                for M in (A, B):
-                    acc = np.zeros(len(M))
-                    for i in range(M.shape[1]):
-                        acc += M[:, i] * M[:, i]
-                    M /= np.sqrt(acc)[:, None]
-                # cosine tile: accumulate dimension-by-dimension so each
-                # entry is the exact left-fold sum a0*b0 + a1*b1 + ...
-                tile = np.zeros((len(A), len(B)))
-                for i in range(A.shape[1]):
-                    tile += np.outer(A[:, i], B[:, i])
+                # normalize, then one left-fold dot tile: the oracle's
+                # op sequence (similarity's left-fold kernel)
+                tile = _fold_dot(
+                    A / _fold_norms(A)[:, None], B / _fold_norms(B)[:, None]
+                )
                 ia, ib = np.nonzero(
                     (tile >= thr) & (ids_a[:, None] < ids_b[None, :])
                 )
@@ -817,14 +813,13 @@ def semantic_dedup(
     )
 
     def cell_pairs(pdf):
-        # One cosine tile per cell (the dedup_embedding GEMM recipe)
-        # instead of the within-cell self-join's per-pair interpreted
-        # HOF dot.  Floats are IDENTICAL, not approximately so: the
-        # norm is the same left-fold sum of squares + one IEEE divide,
-        # and the tile accumulates one DIMENSION at a time (outer-
-        # product adds), which reproduces the zip_with left fold
-        # bit-for-bit — the documented _embedding_impl determinism
-        # trick.  Row blocks bound the (block x cell) tile, so a
+        # One cosine tile per cell instead of the within-cell self-join's
+        # per-pair interpreted HOF dot, through similarity's left-fold
+        # kernel (``_fold_norms`` then ``_fold_dot``, as in
+        # dedup_embedding).  Floats are IDENTICAL, not approximately so:
+        # the norm is the same left-fold sum of squares + one IEEE
+        # divide, and the tile reproduces the zip_with left fold
+        # bit-for-bit.  Row blocks bound the (block x cell) tile, so a
         # pathologically hot cell degrades to streaming, not OOM.
         import numpy as np
         import pandas as pd
@@ -833,17 +828,12 @@ def semantic_dedup(
         ids = pdf[id_col].to_numpy()
         V = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
         m = len(V)
-        acc = np.zeros(m)
-        for i in range(V.shape[1]):
-            acc += V[:, i] * V[:, i]
-        V /= np.sqrt(acc)[:, None]
+        V /= _fold_norms(V)[:, None]
         out_a, out_b, out_c = [], [], []
         step = max(1, (1 << 24) // max(m, 1))
         for s in range(0, m, step):
             Vb = V[s : s + step]
-            tile = np.zeros((len(Vb), m))
-            for i in range(V.shape[1]):
-                tile += np.outer(Vb[:, i], V[:, i])
+            tile = _fold_dot(Vb, V)
             ia, ib = np.nonzero(
                 (tile >= threshold)
                 & (ids[s : s + len(Vb), None] < ids[None, :])

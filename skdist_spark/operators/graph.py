@@ -130,18 +130,20 @@ def _star_components(
     edges: DataFrame, src: str, dst: str, max_iterations: int
 ) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star rounds; returns (labels, rounds)."""
-    e = (
+    raw = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
     )
+    # nodes come from the edges BEFORE the self-loop filter: a node whose
+    # only edge is (v, v) is its own component, as in connected_components
     nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
+        raw.select(F.col("a").alias("node"))
+        .union(raw.select(F.col("b").alias("node")))
         .distinct()
         .localCheckpoint()
     )
+    e = raw.where(F.col("a") != F.col("b"))
     prev = _edge_fingerprint(
         e.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")).distinct()
     )

@@ -1,13 +1,30 @@
 """Similarity search over embedding columns.
 
-- ann_topk: exact brute-force cosine top-k for a bounded query set —
-  broadcast the queries, one pass over the corpus, per-query top-k via
-  ranked window. The exactness baseline.
+- ann_topk / cosine_topk: exact brute-force cosine top-k for a bounded
+  query set — the query side rides the closure (or a broadcast), one
+  pass over the corpus, per-query top-k via ranked window. The
+  exactness baseline.
 - ann_lsh: random-hyperplane (sign) LSH bucketing — the 100 TB path:
   candidates meet in buckets via an equi-join instead of a cross join.
   Hyperplanes are derived deterministically from md5, so results are
   reproducible and the bucket assignment is oracle-checked (the sign
   matrix inlines into DuckDB SQL with the same fold order).
+- ann_ivf / ivf_join (+ ivf_build_index, the streaming replica's
+  static side): IVF cells by nearest centroid, queries probe nprobe
+  cells, candidates meet through an equi-join on the cell id;
+  ann_recall_eval and ann_probe_sweep score the index against
+  ann_topk.
+- ann_pq / ann_pq_exact / ann_int8: compressed-code ANN (product
+  quantization, int8).
+- diversified_topk / ann_diversified / ann_diversified_exact: greedy
+  diversified top-k over a bounded per-query candidate pool.
+- ann_filtered, feature_corr, silhouette_score, lsh_label_nmi and
+  their registry faces.
+
+Every Arrow-batch cosine (here and in ``dedup``) goes through one
+left-fold kernel — ``_fold_norms``, ``_fold_dot``, ``_fold_cos``, the
+sorted ``_collect_block`` and the self-excluding ``_prune_top_m`` —
+which reproduces the SQL faces' left-fold sums bit for bit.
 """
 
 from __future__ import annotations
@@ -33,6 +50,63 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---- the left-fold cosine kernel --------------------------------------
+# The numpy spelling of README's determinism contract ("vector math uses
+# strict left-fold summation"): every Arrow-batch cosine in this module
+# and in ``dedup`` is computed here, so its doubles equal the SQL left
+# fold (Spark ``aggregate`` from 0D, DuckDB ``list_reduce``) bit for
+# bit.  A BLAS matmul (``A @ B.T``) sums in another order and does not.
+
+
+def _fold_norms(M):
+    """Row norms: left-fold sum of squares + one sqrt, the op sequence
+    of sqrt(aggregate(transform(v, x -> x*x), 0D, +))."""
+    acc = np.zeros(len(M))
+    for i in range(M.shape[1]):
+        acc += M[:, i] * M[:, i]
+    return np.sqrt(acc)
+
+
+def _fold_dot(A, B):
+    """(len(A) x len(B)) dot tile accumulated one dimension at a time:
+    each entry is the zip_with left fold a0*b0 + a1*b1 + ..."""
+    tile = np.zeros((len(A), len(B)))
+    for i in range(A.shape[1]):
+        tile += np.outer(A[:, i], B[:, i])
+    return tile
+
+
+def _fold_cos(A, B, an, bn):
+    """Cosine tile in the SQL's op order: dot / (norm_a * norm_b)."""
+    return _fold_dot(A, B) / (an[:, None] * bn[None, :])
+
+
+def _collect_block(df: DataFrame, id_col: str = "vec_id", vec_col: str = "v"):
+    """Collect a BOUNDED vector frame (queries, centroids) sorted by id
+    -> ``(ids, M)``; an empty frame gives a (0, 0) matrix, which every
+    kernel helper accepts."""
+    rows = sorted(df.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    if not rows:
+        return ids, np.zeros((0, 0))
+    return ids, np.array([list(r[1]) for r in rows], dtype=np.float64)
+
+
+def _prune_top_m(qids, ids, S, m):
+    """Per query row r of the score tile ``S`` (queries ``qids`` x
+    candidates ``ids``): the positions of its m best candidates under
+    (score desc, id asc) with the query's own id dropped BEFORE the cut,
+    so a self match never takes a slot.  Returns ``(rows, cols)`` index
+    arrays, query by query."""
+    rows, cols = [], []
+    for r, q in enumerate(qids):
+        keep = np.flatnonzero(ids != q)
+        top = keep[np.lexsort((ids[keep], -S[r, keep]))[:m]]
+        rows.append(np.full(len(top), r))
+        cols.append(top)
+    return np.concatenate(rows), np.concatenate(cols)
+
+
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: queries (vec_id < N_QUERIES) x corpus.
 
@@ -42,60 +116,27 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Implementation (r8): the bounded query block rides the mapInPandas
     closure (the same state the old plan broadcast) and each Arrow
-    batch computes one cosine tile whose values reproduce the SQL left
-    fold bit-for-bit (dimension-at-a-time accumulation + the same
-    norm/divide order), pre-pruned to the per-batch top-k per query
-    under the final (cosine desc, neighbor_id) order — a superset of
-    the global top-k, so the window reads O(batches * k) rows per
-    query instead of the whole corpus.
+    batch computes one left-fold cosine tile, pre-pruned to the
+    per-batch top-k per query under the final (cosine desc,
+    neighbor_id) order — a superset of the global top-k, so the window
+    reads O(batches * k) rows per query instead of the whole corpus.
     """
-    import numpy as np
-
     emb = _emb(spark, sf_dir)
-    q_rows = sorted(
-        emb.where(F.col("vec_id") < N_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    QV = np.array([list(r["v"]) for r in q_rows], dtype=np.float64)
-    nq = len(qids)
-
-    def _norms(M):
-        acc = np.zeros(len(M))
-        for i in range(M.shape[1]):
-            acc += M[:, i] * M[:, i]
-        return np.sqrt(acc)
-
-    qnorm = _norms(QV) if nq else np.zeros(0)
+    qids, QV = _collect_block(emb.where(F.col("vec_id") < N_QUERIES))
+    qnorm = _fold_norms(QV)
 
     def score_batches(batches):
         import pandas as pd
 
         for pdf in batches:
-            if not len(pdf) or not nq:
+            if not len(pdf) or not len(qids):
                 continue
             C = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
             ids = pdf["vec_id"].to_numpy()
-            tile = np.zeros((nq, len(C)))
-            for i in range(C.shape[1]):
-                tile += np.outer(QV[:, i], C[:, i])
-            cos = tile / (qnorm[:, None] * _norms(C)[None, :])
-            out_q, out_n, out_c = [], [], []
-            for r in range(nq):
-                mask = ids != qids[r]
-                cand_n, cand_c = ids[mask], cos[r, mask]
-                order = np.lexsort((cand_n, -cand_c))[
-                    : min(TOP_K, len(cand_n))
-                ]
-                out_q.append(np.full(len(order), qids[r]))
-                out_n.append(cand_n[order])
-                out_c.append(cand_c[order])
+            cos = _fold_cos(QV, C, qnorm, _fold_norms(C))
+            r, c = _prune_top_m(qids, ids, cos, TOP_K)
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q) if out_q else [],
-                    "neighbor_id": np.concatenate(out_n) if out_n else [],
-                    "cosine": np.concatenate(out_c) if out_c else [],
-                }
+                {"query_id": qids[r], "neighbor_id": ids[c], "cosine": cos[r, c]}
             )
 
     scored = emb.mapInPandas(
@@ -292,28 +333,13 @@ IVF_NPROBE = 4
 _CENTROID_BASE = 100  # corpus vectors used as deterministic centroids
 
 
-def _ann_ivf_index(emb: DataFrame):
-    """``ann_ivf``'s static side — the collected centroid matrix and
-    the corpus cell assignment (the data-sized stage; independent of
-    ``nprobe``) — split out so ``ann_probe_sweep`` can assign cells
-    ONCE for all sweep points instead of once per probe budget.
-    Returns ``(C_ids, CV, cells)``; the arithmetic is byte-for-byte
-    the former inline build."""
-    import numpy as np
-
-    cent_rows = sorted(
-        emb.where(
-            (F.col("vec_id") >= _CENTROID_BASE)
-            & (F.col("vec_id") < _CENTROID_BASE + IVF_NLIST)
-        )
-        .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"))
-        .collect(),
-        key=lambda r: r["cent_id"],
-    )
-    C_ids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
-    CV = np.array([list(r["cv"]) for r in cent_rows], dtype=np.float64)
+def _ivf_assigner(C_ids, CV, id_col: str):
+    """The mapInPandas closure of both IVF builds: each ``(id_col, v)``
+    row -> ``(cell, cid, v)``, cell = the centroid of highest cosine.
+    Ties -> HIGHEST cent_id (max_by struct(cent_cos, cent_id)): argmax
+    over reversed columns returns the LAST max."""
+    cnorm = _fold_norms(CV)
     ncent = len(C_ids)
-    cnorm = _ivf_norms(CV) if ncent else np.zeros(0)
 
     def assign_cells(batches):
         import pandas as pd
@@ -322,14 +348,61 @@ def _ann_ivf_index(emb: DataFrame):
             if not len(pdf) or not ncent:
                 continue
             V = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
-            cos = _ivf_cos_tile(V, CV, _ivf_norms(V), cnorm)
+            cos = _fold_cos(V, CV, _fold_norms(V), cnorm)
             j = (ncent - 1) - np.argmax(cos[:, ::-1], axis=1)
             yield pd.DataFrame(
-                {"cell": C_ids[j], "vec_id": pdf["vec_id"], "v": pdf["v"]}
+                {"cell": C_ids[j], "cid": pdf[id_col], "v": pdf["v"]}
             )
 
+    return assign_cells
+
+
+def _ivf_prober(C_ids, CV, nprobe: int, id_col: str):
+    """The mapInPandas closure of both IVF serves: each ``(id_col, v)``
+    query row -> its ``nprobe`` probe rows ``(query_id, qv, cell)`` in
+    ascending (-cos, cent_id) order == the array_sort of
+    struct(negate(cent_cos), cent_id): ties -> lowest id.  C_ids is
+    ascending (``_collect_block``), so ONE stable argsort of -cos over
+    the whole tile (ties -> lowest column) is exactly the per-row
+    lexsort((C_ids, -cos[r]))."""
+    cnorm = _fold_norms(CV)
+    take = min(nprobe, len(C_ids))
+
+    def probe_lists(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf) or not take:
+                continue
+            Q = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
+            cos = _fold_cos(Q, CV, _fold_norms(Q), cnorm)
+            order = np.argsort(-cos, axis=1, kind="stable")[:, :take]
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(pdf[id_col].to_numpy(), take),
+                    "qv": [v for v in pdf["v"] for _ in range(take)],
+                    "cell": C_ids[order].ravel(),
+                }
+            )
+
+    return probe_lists
+
+
+def _ann_ivf_index(emb: DataFrame):
+    """``ann_ivf``'s static side — the collected centroid matrix and
+    the corpus cell assignment (the data-sized stage; independent of
+    ``nprobe``) — split out so ``ann_probe_sweep`` can assign cells
+    ONCE for all sweep points instead of once per probe budget.
+    Returns ``(C_ids, CV, cells)``."""
+    C_ids, CV = _collect_block(
+        emb.where(
+            (F.col("vec_id") >= _CENTROID_BASE)
+            & (F.col("vec_id") < _CENTROID_BASE + IVF_NLIST)
+        )
+    )
     cells = emb.mapInPandas(
-        assign_cells, schema="cell long, vec_id long, v array<double>"
+        _ivf_assigner(C_ids, CV, "vec_id"),
+        schema="cell long, cid long, v array<double>",
     )
     return C_ids, CV, cells
 
@@ -353,44 +426,19 @@ def ann_ivf(
     candidates per query drop by ~NLIST/NPROBE); exact cosine re-rank
     inside candidates only. Rows-only (recall-vs-exact is tested).
 
-    Implementation (r8): the same exact left-fold GEMM stages as
+    Implementation (r8): the same cell assigner and prober as
     ``ivf_join`` (cosines bit-identical to the SQL fold, ties
     identical), with the self-match filter applied inside the per-cell
     cogroup BEFORE its top-k prune.
     """
-    import numpy as np
-
     emb = _emb(spark, sf_dir)
     if _index is None:
         C_ids, CV, cells = _ann_ivf_index(emb)
     else:
         C_ids, CV, cells = _index
-    ncent = len(C_ids)
-    _norms, _cos_tile = _ivf_norms, _ivf_cos_tile
-    cnorm = _norms(CV) if ncent else np.zeros(0)
-    take = min(nprobe, ncent) if ncent else 0
-
-    def probe_lists(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf) or not take:
-                continue
-            Q = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
-            neg = -_cos_tile(Q, CV, _norms(Q), cnorm)
-            out = np.empty((len(Q), take), dtype=np.int64)
-            for r in range(len(Q)):
-                out[r] = C_ids[np.lexsort((C_ids, neg[r]))[:take]]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["vec_id"].to_numpy(), take),
-                    "qv": [v for v in pdf["v"] for _ in range(take)],
-                    "cell": out.ravel(),
-                }
-            )
-
     probes = emb.where(F.col("vec_id") < N_QUERIES).mapInPandas(
-        probe_lists, schema="query_id long, qv array<double>, cell long"
+        _ivf_prober(C_ids, CV, nprobe, "vec_id"),
+        schema="query_id long, qv array<double>, cell long",
     )
 
     def cell_candidates(qpdf, cpdf):
@@ -406,23 +454,12 @@ def ann_ivf(
             )
         Q = np.array([np.asarray(x) for x in qpdf["qv"]], dtype=np.float64)
         C = np.array([np.asarray(x) for x in cpdf["v"]], dtype=np.float64)
-        cos = _cos_tile(Q, C, _norms(Q), _norms(C))
-        nids = cpdf["vec_id"].to_numpy()
+        cos = _fold_cos(Q, C, _fold_norms(Q), _fold_norms(C))
+        nids = cpdf["cid"].to_numpy()
         qids = qpdf["query_id"].to_numpy()
-        out_q, out_n, out_c = [], [], []
-        for r in range(len(Q)):
-            mask = nids != qids[r]  # self-match filter BEFORE the prune
-            cand_n, cand_c = nids[mask], cos[r, mask]
-            order = np.lexsort((cand_n, -cand_c))[: min(TOP_K, len(cand_n))]
-            out_q.append(np.full(len(order), qids[r]))
-            out_n.append(cand_n[order])
-            out_c.append(cand_c[order])
+        r, c = _prune_top_m(qids, nids, cos, TOP_K)
         return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q) if out_q else [],
-                "neighbor_id": np.concatenate(out_n) if out_n else [],
-                "cosine": np.concatenate(out_c) if out_c else [],
-            }
+            {"query_id": qids[r], "neighbor_id": nids[c], "cosine": cos[r, c]}
         )
 
     cand = (
@@ -852,28 +889,6 @@ IVF_JOIN_NPROBE = 4
 IVF_JOIN_TARGET_CELL = 128
 
 
-def _ivf_norms(M):
-    # left-fold sum of squares + one sqrt — same op sequence as
-    # sqrt(aggregate(transform(v, x -> x*x), 0D, +))
-    import numpy as np
-
-    acc = np.zeros(len(M))
-    for i in range(M.shape[1]):
-        acc += M[:, i] * M[:, i]
-    return np.sqrt(acc)
-
-
-def _ivf_cos_tile(A, B, an, bn):
-    # dimension-at-a-time outer-product adds == the zip_with left
-    # fold; then dot / (norm_a * norm_b) in the SQL's op order
-    import numpy as np
-
-    tile = np.zeros((len(A), len(B)))
-    for i in range(A.shape[1]):
-        tile += np.outer(A[:, i], B[:, i])
-    return tile / (an[:, None] * bn[None, :])
-
-
 class _IvfIndex:
     """The STATIC side of ``ivf_join``, built once and served many
     times: the collected centroid matrix (bounded — it is the same
@@ -883,13 +898,11 @@ class _IvfIndex:
     re-deriving it per micro-batch re-paid the whole static-side cost
     for every trigger of a stream whose static corpus never changes."""
 
-    __slots__ = ("C_ids", "CV", "cnorm", "ncent", "cells")
+    __slots__ = ("C_ids", "CV", "cells")
 
-    def __init__(self, C_ids, CV, cnorm, ncent, cells):
+    def __init__(self, C_ids, CV, cells):
         self.C_ids = C_ids
         self.CV = CV
-        self.cnorm = cnorm
-        self.ncent = ncent
         self.cells = cells
 
 
@@ -905,18 +918,7 @@ def ivf_build_index(
     frame is lazily localCheckpoint'ed so the first consumer
     materializes it and every later one (the next micro-batch) reads
     the stored rows instead of re-scoring the corpus."""
-    import numpy as np
-
-    cent_rows = sorted(
-        centroids_df.select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv")
-        ).collect(),
-        key=lambda r: r["cent_id"],
-    )
-    C_ids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
-    CV = np.array([list(r["cv"]) for r in cent_rows], dtype=np.float64)
-    ncent = len(C_ids)
-    cnorm = _ivf_norms(CV) if ncent else np.zeros(0)
+    C_ids, CV = _collect_block(centroids_df, id_col, vec_col)
 
     # pin scoring parallelism: the centroid scoring stages are the
     # compute-heavy passes and the test corpora arrive as single-split
@@ -926,28 +928,13 @@ def ivf_build_index(
     corpus = corpus_df.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("v")
     ).repartition(n_par, F.col("cid"))
-
-    def assign_cells(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf) or not ncent:
-                continue
-            V = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
-            cos = _ivf_cos_tile(V, CV, _ivf_norms(V), cnorm)
-            # ties -> HIGHEST cent_id (max_by struct(cent_cos, cent_id)):
-            # argmax over reversed columns returns the LAST max
-            j = (ncent - 1) - np.argmax(cos[:, ::-1], axis=1)
-            yield pd.DataFrame(
-                {"cell": C_ids[j], "cid": pdf["cid"], "v": pdf["v"]}
-            )
-
     cells = corpus.mapInPandas(
-        assign_cells, schema="cell long, cid long, v array<double>"
+        _ivf_assigner(C_ids, CV, "cid"),
+        schema="cell long, cid long, v array<double>",
     )
     if reuse:
         cells = cells.localCheckpoint(eager=False)
-    return _IvfIndex(C_ids, CV, cnorm, ncent, cells)
+    return _IvfIndex(C_ids, CV, cells)
 
 
 def ivf_join(
@@ -976,72 +963,37 @@ def ivf_join(
     assignment takes the highest cent_id on equal cosine, probe order
     the lowest.
 
-    Implementation (r8): every cosine is produced by the
-    dimension-at-a-time numpy accumulation that reproduces the SQL
-    left fold BIT-FOR-BIT (the _embedding_impl determinism trick), so
-    the DuckDB oracle and the streaming replica see identical doubles
-    while the per-pair interpreted HOF evaluation — |side| x nlist x d
-    lambda evals in the centroid stages, |candidates| x d in the
-    serving join — becomes three vectorized stages: a mapInPandas
-    cell assignment, a mapInPandas probe-list builder (the centroid
-    matrix rides each closure; it is the same bounded state the old
-    plan broadcast), and a per-cell COGROUP that scores each query
-    block against its cell's members in one tile and pre-prunes to
-    the per-cell top-k under the final (cosine desc, neighbor_id)
-    order — a superset of the global top-k by construction, so the
-    rank window reads O(cells x k) rows per query, never every
-    candidate.
+    Implementation (r8): every cosine is produced by the left-fold
+    kernel (``_fold_cos``), which reproduces the SQL left fold
+    BIT-FOR-BIT, so the DuckDB oracle and the streaming replica see
+    identical doubles while the per-pair interpreted HOF evaluation —
+    |side| x nlist x d lambda evals in the centroid stages,
+    |candidates| x d in the serving join — becomes three vectorized
+    stages: a mapInPandas cell assignment, a mapInPandas probe-list
+    builder (the centroid matrix rides each closure; it is the same
+    bounded state the old plan broadcast), and a per-cell COGROUP that
+    scores each query block against its cell's members in one tile and
+    pre-prunes to the per-cell top-k under the final (cosine desc,
+    neighbor_id) order — a superset of the global top-k by
+    construction, so the rank window reads O(cells x k) rows per
+    query, never every candidate.
     ``index``: a prebuilt ``ivf_build_index`` result; the batch faces
     build it inline per call (``reuse=False`` — no checkpoint storage
     for a once-read frame, plans unchanged), the streaming replica
     builds it ONCE and serves every micro-batch from it instead of
     re-assigning the static corpus per trigger.
     """
-    import numpy as np
-
     if index is None:
         index = ivf_build_index(
             corpus_df, centroids_df, id_col, vec_col, reuse=False
         )
-    C_ids, CV, cnorm, ncent = index.C_ids, index.CV, index.cnorm, index.ncent
-    cells = index.cells
-    _norms, _cos_tile = _ivf_norms, _ivf_cos_tile
-
     n_par = queries_df.sparkSession.sparkContext.defaultParallelism
     queries = queries_df.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
     ).repartition(n_par, F.col("query_id"))
-
-    take = min(nprobe, ncent) if ncent else 0
-
-    def probe_lists(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf) or not take:
-                continue
-            Q = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
-            cos = _cos_tile(Q, CV, _norms(Q), cnorm)
-            # ascending (neg_cos, cent_id) == the array_sort of
-            # struct(negate(cent_cos), cent_id): ties -> lowest id.
-            # C_ids is ascending, so a STABLE argsort of -cos (ties ->
-            # lowest column index -> lowest cent_id) is exactly the
-            # per-row lexsort((C_ids, -cos[r])) — but one C-level sort
-            # over the whole tile instead of a Python loop per row
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-            cells_out = C_ids[order]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy(), take
-                    ),
-                    "qv": [v for v in pdf["v"] for _ in range(take)],
-                    "cell": cells_out.ravel(),
-                }
-            )
-
     probes = queries.mapInPandas(
-        probe_lists, schema="query_id long, qv array<double>, cell long"
+        _ivf_prober(index.C_ids, index.CV, nprobe, "query_id"),
+        schema="query_id long, qv array<double>, cell long",
     )
 
     def cell_candidates(qpdf, cpdf):
@@ -1064,7 +1016,7 @@ def ivf_join(
         # lexsort((nids, -cos[r])) it replaces, without the Python loop
         ordn = np.argsort(nids, kind="stable")
         nids = nids[ordn]
-        cos = _cos_tile(Q, C[ordn], _norms(Q), _norms(C)[ordn])
+        cos = _fold_cos(Q, C[ordn], _fold_norms(Q), _fold_norms(C)[ordn])
         keep = min(k, len(nids))
         qids = qpdf["query_id"].to_numpy()
         order = np.argsort(-cos, axis=1, kind="stable")[:, :keep]
@@ -1078,7 +1030,7 @@ def ivf_join(
 
     cand = (
         probes.groupby("cell")
-        .cogroup(cells.groupby("cell"))
+        .cogroup(index.cells.groupby("cell"))
         .applyInPandas(
             cell_candidates,
             schema="query_id long, neighbor_id long, cosine double",
@@ -1672,64 +1624,35 @@ def diversified_topk(
     applyInPandas over the PER-QUERY candidate pool (O(M*k) dot
     products on <= M rows — bounded state, never the corpus).
 
-    Implementation (r8): each Arrow batch computes one cosine tile
-    whose values reproduce the old per-pair SQL left fold bit-for-bit
-    (dimension-at-a-time accumulation + the same norm-multiply-divide
-    order — the ann_topk recipe), pre-pruned to the per-batch top-M
-    per query under the final (cosine desc, neighbor_id) order — a
-    superset of the global top-M pool, so the window reads
-    O(batches * M) rows per query instead of the whole corpus, and no
-    interpreted HOF runs per pair.
+    Implementation (r8): each Arrow batch computes one left-fold
+    cosine tile (``_fold_cos``: values reproduce the old per-pair SQL
+    left fold bit-for-bit), pre-pruned to the per-batch top-M per
+    query under the final (cosine desc, neighbor_id) order — a superset
+    of the global top-M pool, so the window reads O(batches * M) rows
+    per query instead of the whole corpus, and no interpreted HOF runs
+    per pair.
     """
-    import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
-    )
-    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    QV = np.array([list(r["v"]) for r in q_rows], dtype=np.float64)
-    nq = len(qids)
-
-    def _norms(M):
-        acc = np.zeros(len(M))
-        for i in range(M.shape[1]):
-            acc += M[:, i] * M[:, i]
-        return np.sqrt(acc)
-
-    qnorm = _norms(QV) if nq else np.zeros(0)
-    m_keep = candidates
+    qids, QV = _collect_block(queries)
+    qnorm = _fold_norms(QV)
 
     def score_batches(batches):
         for pdf in batches:
-            if not len(pdf) or not nq:
+            if not len(pdf) or not len(qids):
                 continue
             C = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
             ids = pdf["vec_id"].to_numpy()
-            vs = pdf["v"].to_numpy()
-            tile = np.zeros((nq, len(C)))
-            for i in range(C.shape[1]):
-                tile += np.outer(QV[:, i], C[:, i])
-            cos = tile / (qnorm[:, None] * _norms(C)[None, :])
-            frames = []
-            for r in range(nq):
-                mask = ids != qids[r]
-                cand_n, cand_c = ids[mask], cos[r, mask]
-                order = np.lexsort((cand_n, -cand_c))[
-                    : min(m_keep, len(cand_n))
-                ]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(order), qids[r]),
-                            "neighbor_id": cand_n[order],
-                            "cosine": cand_c[order],
-                            "nv": [list(v) for v in vs[mask][order]],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            cos = _fold_cos(QV, C, qnorm, _fold_norms(C))
+            r, c = _prune_top_m(qids, ids, cos, candidates)
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "neighbor_id": ids[c],
+                    "cosine": cos[r, c],
+                    "nv": [list(v) for v in pdf["v"].to_numpy()[c]],
+                }
+            )
 
     scored = emb.select("vec_id", "v").mapInPandas(
         score_batches,
@@ -1811,15 +1734,14 @@ def ann_diversified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Implementation (r8): each Arrow batch normalizes its block with
     the same left-fold sum of squares + per-element IEEE divide the
-    old SQL ``transform`` computed, then scores one cosine tile
-    accumulated dimension-at-a-time — the exact op sequence of the
-    ``aggregate(zip_with(qu, u, ...))`` fold, so every double matches
-    the DuckDB RECURSIVE oracle bit-for-bit.  Per-batch top-M pruning
-    keeps the window input at O(batches * M) rows per query.
+    old SQL ``transform`` computed (``_fold_norms``), then scores one
+    ``_fold_dot`` tile of the unit vectors — the exact op sequence of
+    the ``aggregate(zip_with(qu, u, ...))`` fold, so every double
+    matches the DuckDB RECURSIVE oracle bit-for-bit.  Per-batch top-M
+    pruning keeps the window input at O(batches * M) rows per query.
 
     No reference counterpart (sk-dist has no retrieval; net-new).
     """
-    import numpy as np
     import pandas as pd
 
     emb = (
@@ -1827,54 +1749,26 @@ def ann_diversified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("embedding").isNotNull() & (F.size("embedding") == 64))
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-
-    def _norms(M: "np.ndarray") -> "np.ndarray":
-        # left-fold sum of squares, one dimension at a time — the same
-        # op order as aggregate(transform(v, x -> x*x), 0D, +)
-        acc = np.zeros(len(M))
-        for i in range(M.shape[1]):
-            acc += M[:, i] * M[:, i]
-        return np.sqrt(acc)
-
-    q_rows = sorted(
-        emb.where(F.col("vec_id") < N_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    QV = np.array([list(r["v"]) for r in q_rows], dtype=np.float64)
-    nq = len(qids)
-    QU = QV / _norms(QV)[:, None] if nq else QV
-    m_keep = MMR_CANDIDATES
+    qids, QV = _collect_block(emb.where(F.col("vec_id") < N_QUERIES))
+    QU = QV / _fold_norms(QV)[:, None]
 
     def score_batches(batches):
         for pdf in batches:
-            if not len(pdf) or not nq:
+            if not len(pdf) or not len(qids):
                 continue
             V = np.array([np.asarray(x) for x in pdf["v"]], dtype=np.float64)
             ids = pdf["vec_id"].to_numpy()
-            U = V / _norms(V)[:, None]
-            tile = np.zeros((nq, len(U)))
-            for i in range(U.shape[1]):
-                tile += np.outer(QU[:, i], U[:, i])
-            frames = []
-            for r in range(nq):
-                mask = ids != qids[r]
-                cand_n, cand_c = ids[mask], tile[r, mask]
-                order = np.lexsort((cand_n, -cand_c))[
-                    : min(m_keep, len(cand_n))
-                ]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(order), qids[r]),
-                            "neighbor_id": cand_n[order],
-                            "cosine": cand_c[order],
-                            "nu": [list(u) for u in U[mask][order]],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            U = V / _fold_norms(V)[:, None]
+            cos = _fold_dot(QU, U)
+            r, c = _prune_top_m(qids, ids, cos, MMR_CANDIDATES)
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "neighbor_id": ids[c],
+                    "cosine": cos[r, c],
+                    "nu": [list(u) for u in U[c]],
+                }
+            )
 
     scored = emb.mapInPandas(
         score_batches,

@@ -1043,7 +1043,8 @@ def test_triangle_count_matches_bruteforce(spark):
 
 def test_connected_components_star_matches_union_find(spark):
     """Star-contraction components must equal a python union-find AND
-    the label-propagation operator on a random graph."""
+    the label-propagation operator on a random graph, including a node
+    whose only edge is a self-loop (its own component)."""
     import numpy as np
 
     from skdist_spark.operators.graph import (
@@ -1054,9 +1055,10 @@ def test_connected_components_star_matches_union_find(spark):
     rng = np.random.RandomState(11)
     n, m = 80, 55
     edges = [(int(a), int(b)) for a, b in rng.randint(0, n, size=(m, 2)) if a != b]
+    edges.append((n, n))
     df = spark.createDataFrame(edges, "src long, dst long")
 
-    parent = list(range(n))
+    parent = list(range(n + 1))
 
     def find(x):
         while parent[x] != x:

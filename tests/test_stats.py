@@ -1,15 +1,24 @@
 """Unit tests for the statistical-monitoring operators
-(operators/stats.py) and the cross-corpus IVF join
-(operators/similarity.ivf_join).  The fixed entry queries are covered
+(operators/stats.py), the cross-corpus IVF join
+(operators/similarity.ivf_join) and the left-fold cosine kernel every
+Arrow-batch cosine goes through.  The fixed entry queries are covered
 by the oracle parity lane; these exercise the generic APIs on crafted
 frames where the right answer is known in closed form.
 """
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
-from skdist_spark.operators.similarity import TOP_K, cosine_topk, ivf_join
+from skdist_spark.operators.similarity import (
+    TOP_K,
+    _fold_dot,
+    _fold_norms,
+    _prune_top_m,
+    cosine_topk,
+    ivf_join,
+)
 from skdist_spark.operators.stats import group_trend, key_skew, pmi_table, psi_drift
 
 
@@ -172,6 +181,50 @@ def test_ivf_join_prebuilt_index_identical(spark):
             for r in ivf_join(queries, k=TOP_K, nprobe=3, index=idx).collect()
         ]
         assert got == want
+
+
+def _left_fold(xs, ys):
+    acc = 0.0
+    for x, y in zip(xs, ys):
+        acc += x * y
+    return acc
+
+
+def test_fold_kernel_equals_python_left_fold():
+    # the kernel's doubles must be the strict left fold the SQL faces and
+    # DuckDB compute, bit for bit; a matmul sums in another order (it
+    # differs on this data), so it cannot stand in for the kernel
+    rng = np.random.RandomState(7)
+    A, B = rng.randn(6, 64), rng.randn(9, 64)
+    want = np.array([[_left_fold(a, b) for b in B] for a in A])
+    assert np.array_equal(_fold_dot(A, B), want)
+    assert np.array_equal(
+        _fold_norms(A), np.array([math.sqrt(_left_fold(a, a)) for a in A])
+    )
+    assert not np.array_equal(A @ B.T, want)
+
+
+def test_prune_top_m_excludes_self_before_cut_and_ties_to_low_id():
+    qids, ids = np.array([3, 100]), np.array([5, 3, 9, 1, 7])
+    S = np.array(
+        [
+            [0.2, 0.9, 0.5, 0.5, 0.1],  # query 3: its best match is itself
+            [0.4, 0.4, 0.4, 0.4, 0.4],  # query 100: all tied
+        ]
+    )
+
+    def picks(m):
+        r, c = _prune_top_m(qids, ids, S, m)
+        return [(int(q), int(i)) for q, i in zip(qids[r], ids[c])]
+
+    # the self match is dropped BEFORE the cut: query 3 still gets 2
+    # others; equal scores go to the lower id
+    assert picks(2) == [(3, 1), (3, 9), (100, 1), (100, 3)]
+    # m beyond the candidates returns every candidate, in order
+    assert picks(10) == [
+        (3, 1), (3, 9), (3, 5), (3, 7),
+        (100, 1), (100, 3), (100, 5), (100, 7), (100, 9),
+    ]
 
 
 def test_classification_report_crafted(spark):
