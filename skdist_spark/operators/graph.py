@@ -573,6 +573,16 @@ def _event_pagerank_oracle_sql(iterations: int = 8, damping: str = "0.85") -> st
     """
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph of ``edges`` as distinct (a, b) rows
+    in both directions, self-loops dropped: the edge set the triangle,
+    clustering and assortativity faces count over."""
+    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
+        F.col("a") != F.col("b")
+    )
+    return und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+
+
 def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -590,10 +600,7 @@ def triangle_count(
     degree d never produces d^2 wedge candidates. Plan: two equi-joins
     + one explode + one groupBy; no iteration.
     """
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+    und = _undirected(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     # oriented edge u->v iff (d_u, u) < (d_v, v); carry v's rank key
     # for the wedge ordering below
@@ -1098,11 +1105,7 @@ def local_clustering(
     bit-reproducible.  Nodes in no triangle get lcc 0, not dropped:
     "present but open" is signal.
     """
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
+    deg = _undirected(edges, src, dst).groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
     tri = triangle_count(edges, src, dst).withColumnRenamed("node", "a")
     return (
         deg.where(F.col("degree") >= 2)
@@ -1188,10 +1191,7 @@ def degree_assortativity(
     value-identical across engines.  Cost: the degree aggregation +
     one edge-degree join each side.
     """
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+    und = _undirected(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("a").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("a").alias("v"), F.col("d").alias("dv"))
@@ -1334,16 +1334,15 @@ def partition_modularity(
     )
 
 
-def brand_copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: does co-purchasing concentrate within part
-    brands?  Edges are part pairs co-occurring in >= 2 orders (the
-    market-basket graph, fan-out bounded by basket size); the
-    partition is p_brand; SUM(q_contrib) is the graph's brand
-    modularity — near zero means brands don't structure baskets."""
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    op = li.distinct()
+def _copurchase_pairs(op: DataFrame, min_orders: int) -> DataFrame:
+    """Co-purchase edges over ``op``, the distinct (l_orderkey,
+    l_partkey) rows: (part_a, part_b, n_ab) for every part pair
+    part_a < part_b that shares at least ``min_orders`` orders.  Both
+    self-join sides are merge-hinted, so pair generation stays inside
+    one order-key exchange and its fan-out is bounded by basket size
+    squared."""
     a, b = op.alias("a").hint("merge"), op.alias("b").hint("merge")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1354,8 +1353,18 @@ def brand_copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_partkey").alias("part_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= 2)
+        .where(F.col("n_ab") >= min_orders)
     )
+
+
+def brand_copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver query: does co-purchasing concentrate within part
+    brands?  Edges are part pairs co-occurring in >= 2 orders (the
+    market-basket graph, fan-out bounded by basket size); the
+    partition is p_brand; SUM(q_contrib) is the graph's brand
+    modularity — near zero means brands don't structure baskets."""
+    op = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey").distinct()
+    pairs = _copurchase_pairs(op, 2)
     part = load_table(spark, "part", sf_dir).select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
     )

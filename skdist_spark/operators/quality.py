@@ -692,23 +692,27 @@ def k_anonymity_audit(
     )
 
 
+def _customer_quasi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(c_nationkey, c_mktsegment, first_year) per customer: the
+    released attributes the privacy audits group on, with first_year
+    the year of the customer's first order (0 when none)."""
+    cust = load_table(spark, "customer", sf_dir)
+    orders = load_table(spark, "orders", sf_dir)
+    first = orders.groupBy("o_custkey").agg(
+        F.min(F.year("o_orderdate")).alias("first_year")
+    )
+    return cust.join(first, cust["c_custkey"] == first["o_custkey"], "left").select(
+        "c_nationkey", "c_mktsegment", F.coalesce("first_year", F.lit(0)).alias("first_year")
+    )
+
+
 def customer_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: k-anonymity of customers under the quasi-identifier
     (nation, market segment, first-order year) — the released-attributes
     combination an attacker could link on."""
-    from ..sources.catalog import load_table as _lt
-
-    cust = _lt(spark, "customer", sf_dir)
-    orders = _lt(spark, "orders", sf_dir)
-    first = orders.groupBy("o_custkey").agg(
-        F.min(F.year("o_orderdate")).alias("first_year")
+    return k_anonymity_audit(
+        _customer_quasi(spark, sf_dir), ["c_nationkey", "c_mktsegment", "first_year"]
     )
-    quasi = cust.join(
-        first, cust["c_custkey"] == first["o_custkey"], "left"
-    ).select(
-        "c_nationkey", "c_mktsegment", F.coalesce("first_year", F.lit(0)).alias("first_year")
-    )
-    return k_anonymity_audit(quasi, ["c_nationkey", "c_mktsegment", "first_year"])
 
 
 def _kanonymity_oracle_sql() -> str:
@@ -902,22 +906,8 @@ def customer_ldiversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     within (nation, first-order-year) quasi-identifier classes — the
     follow-up question to `customer_kanonymity`: even where classes
     are big, does everyone in one share a segment?"""
-    from ..sources.catalog import load_table as _lt
-
-    cust = _lt(spark, "customer", sf_dir)
-    orders = _lt(spark, "orders", sf_dir)
-    first = orders.groupBy("o_custkey").agg(
-        F.min(F.year("o_orderdate")).alias("first_year")
-    )
-    quasi = cust.join(
-        first, cust["c_custkey"] == first["o_custkey"], "left"
-    ).select(
-        "c_nationkey",
-        F.coalesce("first_year", F.lit(0)).alias("first_year"),
-        "c_mktsegment",
-    )
     return l_diversity_audit(
-        quasi, ["c_nationkey", "first_year"], "c_mktsegment"
+        _customer_quasi(spark, sf_dir), ["c_nationkey", "first_year"], "c_mktsegment"
     )
 
 

@@ -354,6 +354,26 @@ def _hll_rho_sql(w: str) -> str:
     return f"(CASE {branches} ELSE {_HLL_W_BITS + 1} END)"
 
 
+def _hll_rho(events: DataFrame, key="event_type") -> DataFrame:
+    """The portable-HLL register stage over ``events`` (batch or
+    streaming): (key, bucket, rho) per event with a user_id, where
+    bucket is the low 8 bits of the portable 32-bit user hash and rho
+    the leading-zero rank of the other 24.  ``key`` is a column name
+    or an aliased Column; a MAX(rho) per (key, bucket) is the register
+    table."""
+    hashed = events.where(F.col("user_id").isNotNull()).select(
+        key, F.col("user_id").cast("bigint").alias("h")
+    )
+    name = hashed.columns[0]
+    for expr in hash_stage_exprs("h", "spark"):
+        hashed = hashed.select(name, F.expr(expr).alias("h"))
+    return hashed.select(
+        name,
+        F.expr(f"CAST(h & {HLL_M - 1} AS INT)").alias("bucket"),
+        F.expr(_hll_rho_sql("(h >> 8)")).alias("rho"),
+    )
+
+
 def hll_portable_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable-HLL distinct-user sketch per event_type — ORACLE-BACKED:
     the register table (bucket -> max leading-zero rank) is a pure
@@ -371,16 +391,8 @@ def hll_portable_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded groupBy (types x 256 registers), map-side combinable —
     the registers ARE the shuffle payload at 100 TB.
     """
-    ev = load_table(spark, "events", sf_dir).where(F.col("user_id").isNotNull())
-    hashed = ev.select(F.col("event_type"), F.col("user_id").cast("bigint").alias("h"))
-    for expr in hash_stage_exprs("h", "spark"):
-        hashed = hashed.select("event_type", F.expr(expr).alias("h"))
     regs = (
-        hashed.select(
-            "event_type",
-            F.expr(f"CAST(h & {HLL_M - 1} AS INT)").alias("bucket"),
-            F.expr(_hll_rho_sql("(h >> 8)")).alias("rho"),
-        )
+        _hll_rho(load_table(spark, "events", sf_dir))
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("reg"))
     )
@@ -778,13 +790,8 @@ def hll_portable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain".  Output per week: merged z-numerator, raw estimate (one
     IEEE division), and the identity flag.
     """
-    ev = load_table(spark, "events", sf_dir).where(F.col("user_id").isNotNull())
-    hashed = ev.select(
-        F.to_date("ts").alias("day"), F.col("user_id").cast("bigint").alias("h")
-    )
-    for expr in hash_stage_exprs("h", "spark"):
-        hashed = hashed.select("day", F.expr(expr).alias("h"))
-    binned = hashed.select(
+    rho = _hll_rho(load_table(spark, "events", sf_dir), F.to_date("ts").alias("day"))
+    binned = rho.select(
         # floor division (not DIV): Spark DIV truncates toward zero
         # while the oracle's // floors — they disagree on any pre-epoch
         # day, so keep both sides floor-consistent
@@ -792,8 +799,8 @@ def hll_portable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "week"
         ),
         "day",
-        F.expr(f"CAST(h & {HLL_M - 1} AS INT)").alias("bucket"),
-        F.expr(_hll_rho_sql("(h >> 8)")).alias("rho"),
+        "bucket",
+        "rho",
     )
     daily = binned.groupBy("week", "day", "bucket").agg(F.max("rho").alias("reg"))
     merged = daily.groupBy("week", "bucket").agg(F.max("reg").alias("reg_m"))

@@ -931,6 +931,24 @@ ORACLE_SQL["weighted_price_percentiles"] = _weighted_pct_oracle_sql()
 TRIM_PPM = 100_000  # drop the bottom and top 10% before averaging
 
 
+def _group_ranks(
+    df: DataFrame, group_cols: list[str], value_col: str, order_tiebreak: str
+) -> DataFrame:
+    """(*group_cols, v, rk, n): each row's value ``v``, its 1-based rank
+    ``rk`` within its group by (value, tiebreak) ascending and the group
+    size ``n`` — the one group-key window the order-statistic faces
+    read."""
+    w = Window.partitionBy(*group_cols).orderBy(
+        F.col(value_col).asc(), F.col(order_tiebreak).asc()
+    )
+    return df.select(
+        *group_cols,
+        F.col(value_col).alias("v"),
+        F.row_number().over(w).alias("rk"),
+        F.count(F.lit(1)).over(Window.partitionBy(*group_cols)).alias("n"),
+    )
+
+
 def trimmed_mean(
     df: DataFrame,
     group_cols: list[str],
@@ -948,15 +966,9 @@ def trimmed_mean(
     One shuffle on the group key; ranks ride a window over it with a
     deterministic tiebreak column.
     """
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(value_col).asc(), F.col(order_tiebreak).asc()
+    ranked = _group_ranks(df, group_cols, value_col, order_tiebreak).withColumn(
+        "k", F.expr(f"(n * {trim_ppm}) div 1000000")
     )
-    ranked = df.select(
-        *group_cols,
-        F.col(value_col).alias("v"),
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy(*group_cols)).alias("n"),
-    ).withColumn("k", F.expr(f"(n * {trim_ppm}) div 1000000"))
     return (
         ranked.groupBy(*group_cols)
         .agg(
@@ -975,14 +987,21 @@ def trimmed_mean(
     )
 
 
-def event_value_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10%-trimmed vs raw mean of event value per event type."""
-    ev = load_table(spark, "events", sf_dir).select(
+def _event_value_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, event_id, v_micros): each event's value floored to
+    integer micros, so the order-statistic faces rank exact integers."""
+    return load_table(spark, "events", sf_dir).select(
         "event_type",
         "event_id",
         F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("v_micros"),
     )
-    return trimmed_mean(ev, ["event_type"], "v_micros", "event_id")
+
+
+def event_value_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """10%-trimmed vs raw mean of event value per event type."""
+    return trimmed_mean(
+        _event_value_micros(spark, sf_dir), ["event_type"], "v_micros", "event_id"
+    )
 
 
 def _trimmed_oracle_sql(trim_ppm: int = TRIM_PPM) -> str:
@@ -2107,12 +2126,11 @@ def spearman_corr(
     return g.select("n", "sum_d2", F.round(rho, 6).alias("rho"))
 
 
-def daily_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: Spearman rho of daily click count vs daily
-    purchase revenue (micros) — the nonparametric marketing-to-revenue
-    association readout."""
+def _daily_clicks_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, clicks, rev): click count and purchase revenue in integer
+    micros per calendar day of the events log."""
     ev = load_table(spark, "events", sf_dir)
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
+    return ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.sum(
             F.expr("CASE WHEN event_type = 'click' THEN 1 ELSE 0 END")
         ).alias("clicks"),
@@ -2123,7 +2141,13 @@ def daily_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("rev"),
     )
-    return spearman_corr(daily, "day", "clicks", "rev")
+
+
+def daily_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver query: Spearman rho of daily click count vs daily
+    purchase revenue (micros) — the nonparametric marketing-to-revenue
+    association readout."""
+    return spearman_corr(_daily_clicks_revenue(spark, sf_dir), "day", "clicks", "rev")
 
 
 def _spearman_oracle_sql() -> str:
@@ -2203,19 +2227,7 @@ def daily_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase revenue — the outlier-robust companion to
     ``daily_spearman`` (a single wild day moves rho by whole rank
     positions but each pair only once here)."""
-    ev = load_table(spark, "events", sf_dir)
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(
-            F.expr("CASE WHEN event_type = 'click' THEN 1 ELSE 0 END")
-        ).alias("clicks"),
-        F.sum(
-            F.expr(
-                "CASE WHEN event_type = 'purchase'"
-                " THEN CAST(floor(value * 1000000) AS BIGINT) ELSE 0 END"
-            )
-        ).alias("rev"),
-    )
-    return kendall_tau(daily, "day", "clicks", "rev")
+    return kendall_tau(_daily_clicks_revenue(spark, sf_dir), "day", "clicks", "rev")
 
 
 def _kendall_oracle_sql() -> str:
@@ -2264,18 +2276,12 @@ def winsorized_mean(
     floor(n * trim_ppm / 1e6) — `trimmed_mean`'s companion that keeps
     n constant, so downstream per-row math stays aligned.  Integer
     identity: winsorized sum = mid-rank sum + k*lo + k*hi, all exact
-    DECIMAL until the final divide.  Same single group-key window as
+    DECIMAL until the final divide.  Same ``_group_ranks`` window as
     the trimmed face.
     """
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(value_col).asc(), F.col(order_tiebreak).asc()
+    ranked = _group_ranks(df, group_cols, value_col, order_tiebreak).withColumn(
+        "k", F.expr(f"(n * {trim_ppm}) div 1000000")
     )
-    ranked = df.select(
-        *group_cols,
-        F.col(value_col).alias("v"),
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy(*group_cols)).alias("n"),
-    ).withColumn("k", F.expr(f"(n * {trim_ppm}) div 1000000"))
     return (
         ranked.groupBy(*group_cols)
         .agg(
@@ -2309,12 +2315,9 @@ def event_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10%-winsorized mean of event value per event type — read beside
     `event_value_trimmed`: a big trimmed-vs-winsorized gap means the
     tail mass sits just past the clamp points."""
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type",
-        "event_id",
-        F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("v_micros"),
+    return winsorized_mean(
+        _event_value_micros(spark, sf_dir), ["event_type"], "v_micros", "event_id"
     )
-    return winsorized_mean(ev, ["event_type"], "v_micros", "event_id")
 
 
 def _winsorized_oracle_sql(trim_ppm: int = TRIM_PPM) -> str:
@@ -2370,15 +2373,7 @@ def median_ci(
     Ranks come from one shared float composition over the exact count
     then clamp to [1, n]; endpoint lookup rides the same
     (group)-partitioned rank window as the median itself."""
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(value_col).asc(), F.col(order_tiebreak).asc()
-    )
-    ranked = df.select(
-        *group_cols,
-        F.col(value_col).alias("v"),
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy(*group_cols)).alias("n"),
-    )
+    ranked = _group_ranks(df, group_cols, value_col, order_tiebreak)
     r_med = "CAST(ceil(n / 2.0) AS BIGINT)"
     r_lo = (
         f"GREATEST(CAST(floor((n - {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2.0)"
@@ -2417,12 +2412,9 @@ def event_value_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: median event value per type with its
     distribution-free 95% CI — the robust center with honest
     uncertainty and zero distributional assumptions."""
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type",
-        "event_id",
-        F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("v_micros"),
+    return median_ci(
+        _event_value_micros(spark, sf_dir), ["event_type"], "v_micros", "event_id"
     )
-    return median_ci(ev, ["event_type"], "v_micros", "event_id")
 
 
 def _median_ci_sql() -> str:

@@ -1760,6 +1760,30 @@ ORACLE_SQL["decontaminate_exact_ngrams"] = _decontaminate_exact_sql()
 FUNNEL_RULES = ("too_short", "too_long", "word_len", "low_diversity", "exact_dup")
 
 
+def _funnel_signals() -> list:
+    """The funnel's per-doc signals over a frame with ``text`` and its
+    word array ``wd``: word count ``n_words``, mean word length
+    ``mwl`` and distinct-word ratio ``dr``."""
+    return [
+        F.expr("size(wd)").alias("n_words"),
+        F.expr("CAST(length(replace(text, ' ', '')) AS DOUBLE) / size(wd)").alias("mwl"),
+        F.expr("CAST(size(array_distinct(wd)) AS DOUBLE) / size(wd)").alias("dr"),
+    ]
+
+
+def _funnel_first_fail(dup, dup_rule: str):
+    """The first failing funnel rule of a doc over ``_funnel_signals``,
+    NULL when it passes: the quality rules in FUNNEL_RULES order, then
+    the boolean column ``dup`` as ``dup_rule``."""
+    return (
+        F.when(F.col("n_words") < 10, F.lit("too_short"))
+        .when(F.col("n_words") > 1000, F.lit("too_long"))
+        .when((F.col("mwl") < 2.0) | (F.col("mwl") > 12.0), F.lit("word_len"))
+        .when(F.col("dr") < 0.1, F.lit("low_diversity"))
+        .when(dup, F.lit(dup_rule))
+    )
+
+
 def filter_funnel(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -1785,23 +1809,14 @@ def filter_funnel(
     ).withColumn("wd", F.expr(_SPARK_WORDS))
     sig = docs.select(
         "doc_id",
-        F.expr("size(wd)").alias("n_words"),
-        F.expr("CAST(length(replace(text, ' ', '')) AS DOUBLE) / size(wd)").alias("mwl"),
-        F.expr("CAST(size(array_distinct(wd)) AS DOUBLE) / size(wd)").alias("dr"),
+        *_funnel_signals(),
         (
             F.col("doc_id")
             != F.min("doc_id").over(Window.partitionBy(F.md5("text")))
         ).alias("is_dup"),
     )
-    first_fail = (
-        F.when(F.col("n_words") < 10, F.lit("too_short"))
-        .when(F.col("n_words") > 1000, F.lit("too_long"))
-        .when((F.col("mwl") < 2.0) | (F.col("mwl") > 12.0), F.lit("word_len"))
-        .when(F.col("dr") < 0.1, F.lit("low_diversity"))
-        .when(F.col("is_dup"), F.lit("exact_dup"))
-    )
     drops = (
-        sig.select(first_fail.alias("rule"))
+        sig.select(_funnel_first_fail(F.col("is_dup"), "exact_dup").alias("rule"))
         .where(F.col("rule").isNotNull())
         .groupBy("rule")
         .agg(F.count(F.lit(1)).alias("n_dropped"))
@@ -2339,6 +2354,37 @@ GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
 
 
+def _rule_ledger(flags: DataFrame) -> DataFrame:
+    """The rule-attribution ledger of per-doc boolean rule ``flags``
+    (one column per rule): (rule, n_docs_flagged, share_ppm) for every
+    rule plus a ``pass_all`` row, ordered by rule.  One one-row
+    aggregate unpivoted via stack; a NULL flag counts for no rule and
+    leaves the doc out of ``pass_all``."""
+    rules = list(flags.columns)
+    agg = flags.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        *[F.sum(F.col(r).cast("long")).alias(f"f_{r}") for r in rules],
+        F.sum((~F.expr(" OR ".join(rules))).cast("long")).alias("f_pass_all"),
+    )
+    entries = ", ".join(
+        f"'{r}', CAST(f_{r} AS BIGINT)" for r in rules
+    ) + ", 'pass_all', CAST(f_pass_all AS BIGINT)"
+    return (
+        agg.select(
+            "n_docs",
+            F.expr(f"stack({len(rules) + 1}, {entries}) AS (rule, n_docs_flagged)"),
+        )
+        .select(
+            "rule",
+            "n_docs_flagged",
+            F.expr("CAST(n_docs_flagged * 1000000 DIV n_docs AS BIGINT)").alias(
+                "share_ppm"
+            ),
+        )
+        .orderBy("rule")
+    )
+
+
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule Gopher-filter failure counts over the corpus: for each
     named rule, how many documents fail it and the ppm share — plus a
@@ -2383,36 +2429,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fewer than 2 of the 8 required stopwords present
         F.expr(f"{n_stop} < 2").alias("stopword_hits_low"),
     )
-    rules = list(flags.columns)
-    agg = flags.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        *[
-            F.sum(F.col(r).cast("long")).alias(f"f_{r}")
-            for r in rules
-        ],
-        F.sum(
-            (~F.expr(" OR ".join(rules))).cast("long")
-        ).alias("f_pass_all"),
-    )
-    entries = ", ".join(
-        f"'{r}', CAST(f_{r} AS BIGINT)" for r in rules
-    ) + ", 'pass_all', CAST(f_pass_all AS BIGINT)"
-    return (
-        agg.select(
-            "n_docs",
-            F.expr(
-                f"stack({len(rules) + 1}, {entries}) AS (rule, n_docs_flagged)"
-            ),
-        )
-        .select(
-            "rule",
-            "n_docs_flagged",
-            F.expr(
-                "CAST(n_docs_flagged * 1000000 DIV n_docs AS BIGINT)"
-            ).alias("share_ppm"),
-        )
-        .orderBy("rule")
-    )
+    return _rule_ledger(flags)
 
 
 def _gopher_oracle_sql() -> str:
@@ -2476,8 +2493,9 @@ _C4_POLICY_PHRASES = ("terms of use", "privacy policy", "cookie policy")
 def c4_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule C4-filter failure counts over the corpus — the
     rule-attribution ledger for the C4 (Colossal Clean Crawled Corpus)
-    heuristics, shaped exactly like ``gopher_quality_flags``: for each
-    named rule, documents failing it + ppm share + a ``pass_all`` row.
+    heuristics, the same ``_rule_ledger`` as ``gopher_quality_flags``:
+    for each named rule, documents failing it + ppm share + a
+    ``pass_all`` row.
 
     Doc-level renderings of the published line/page rules:
     too-few-sentences (terminal-punctuation count < 3), a majority of
@@ -2525,29 +2543,7 @@ def c4_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("contains(lower(text), 'javascript')").alias("javascript_mention"),
         F.expr(f"({policy})").alias("policy_phrase"),
     )
-    rules = list(flags.columns)
-    agg = flags.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        *[F.sum(F.col(r).cast("long")).alias(f"f_{r}") for r in rules],
-        F.sum((~F.expr(" OR ".join(rules))).cast("long")).alias("f_pass_all"),
-    )
-    entries = ", ".join(
-        f"'{r}', CAST(f_{r} AS BIGINT)" for r in rules
-    ) + ", 'pass_all', CAST(f_pass_all AS BIGINT)"
-    return (
-        agg.select(
-            "n_docs",
-            F.expr(f"stack({len(rules) + 1}, {entries}) AS (rule, n_docs_flagged)"),
-        )
-        .select(
-            "rule",
-            "n_docs_flagged",
-            F.expr("CAST(n_docs_flagged * 1000000 DIV n_docs AS BIGINT)").alias(
-                "share_ppm"
-            ),
-        )
-        .orderBy("rule")
-    )
+    return _rule_ledger(flags)
 
 
 def _c4_oracle_sql() -> str:

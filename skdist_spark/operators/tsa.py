@@ -164,14 +164,12 @@ def holt_fit(
     ).orderBy(t_col, "kind")
 
 
-def weekly_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt forecast of weekly order revenue, 7 weeks ahead.
-
-    Weekly totals are DECIMAL-exact before the cast to DOUBLE, so the
-    series fed to the recursion is bit-identical across engines.
-    """
+def _weekly_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(week, revenue): order revenue per week since _WEEK_EPOCH, summed
+    in DECIMAL before the cast to DOUBLE, so the series fed to a
+    forecast recursion is bit-identical across engines."""
     orders = load_table(spark, "orders", sf_dir)
-    weekly = orders.groupBy(
+    return orders.groupBy(
         F.floor(
             F.datediff(F.to_date("o_orderdate"), F.lit(_WEEK_EPOCH).cast("date")) / 7
         )
@@ -180,7 +178,12 @@ def weekly_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue")
     )
-    return holt_fit(weekly, "week", "revenue")
+
+
+def weekly_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt forecast of weekly order revenue (``_weekly_order_revenue``),
+    7 weeks ahead."""
+    return holt_fit(_weekly_order_revenue(spark, sf_dir), "week", "revenue")
 
 
 def _holt_oracle_sql(horizon: int = HORIZON) -> str:
@@ -345,6 +348,25 @@ def _welch_oracle_sql() -> str:
 CHURN_GAP_DAYS = 7  # inactive this long before corpus end => churned
 
 
+def _risk_table(spans: DataFrame, duration_col: str, event_col: str) -> DataFrame:
+    """The risk table of (duration, event) spans at event durations:
+    (t, c, d, n_total, n_risk) with c units and d events at duration t
+    (d > 0) and n_risk = the units whose duration is >= t.  Censored
+    spans leave the risk set without adding events.  One tiny
+    aggregate over distinct durations, one running-sum window."""
+    per_t = spans.groupBy(F.col(duration_col).alias("t")).agg(
+        F.count(F.lit(1)).alias("c"),
+        F.sum(event_col).alias("d"),
+    )
+    total = per_t.agg(F.sum("c").alias("n_total"))
+    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        per_t.crossJoin(F.broadcast(total))
+        .withColumn("n_risk", F.col("n_total") - F.coalesce(F.sum("c").over(w), F.lit(0)))
+        .where(F.col("d") > 0)
+    )
+
+
 def km_survival(
     spans: DataFrame,
     duration_col: str = "duration",
@@ -361,26 +383,8 @@ def km_survival(
     Aggregation to distinct durations is one tiny shuffle; the
     cumulative product is a window over that aggregate.
     """
-    per_t = spans.groupBy(F.col(duration_col).alias("t")).agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(event_col).alias("d"),
-    )
-    w = Window.orderBy("t")
-    total = per_t.agg(F.sum("c").alias("n_total"))
-    risk = (
-        per_t.crossJoin(F.broadcast(total))
-        .withColumn(
-            "n_risk",
-            F.col("n_total")
-            - F.coalesce(
-                F.sum("c").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ),
-        )
-        .where(F.col("d") > 0)
-    )
     w2 = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    return risk.select(
+    return _risk_table(spans, duration_col, event_col).select(
         "t",
         "n_risk",
         "d",
@@ -395,14 +399,12 @@ def km_survival(
     ).orderBy("t")
 
 
-def user_churn_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-churn survival curve over the events log.
-
-    A user's lifetime is last - first activity in whole days; users
-    still active within CHURN_GAP_DAYS of the corpus end are censored
-    (their churn day is unobserved).  One user_id shuffle builds the
-    spans; the KM table is an aggregate over <= 30 distinct durations.
-    """
+def _churn_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, duration, event): each user's lifetime, last - first
+    activity in whole days, with event 1 if the user churned (inactive
+    for CHURN_GAP_DAYS before the corpus end) and 0 if censored.  One
+    user_id shuffle builds the spans; the corpus end is one broadcast
+    row."""
     ev = load_table(spark, "events", sf_dir)
     spans = ev.groupBy("user_id").agg(
         F.min(F.unix_micros("ts")).alias("first_us"),
@@ -410,13 +412,23 @@ def user_churn_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = ev.agg(F.max(F.unix_micros("ts")).alias("end_us"))
     gap_us = CHURN_GAP_DAYS * 86_400_000_000
-    spans = spans.crossJoin(F.broadcast(corpus)).select(
+    return spans.crossJoin(F.broadcast(corpus)).select(
+        "user_id",
         F.expr("(last_us - first_us) div 86400000000").alias("duration"),
         F.expr(f"CASE WHEN last_us <= end_us - {gap_us} THEN 1 ELSE 0 END").alias(
             "event"
         ),
     )
-    return km_survival(spans)
+
+
+def user_churn_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-to-churn survival curve over the events log: Kaplan-Meier
+    over the ``_churn_spans`` lifetimes, where users still active within
+    CHURN_GAP_DAYS of the corpus end are censored (their churn day is
+    unobserved).  The KM table is an aggregate over <= 30 distinct
+    durations.
+    """
+    return km_survival(_churn_spans(spark, sf_dir))
 
 
 def _km_oracle_sql() -> str:
@@ -771,17 +783,7 @@ def holt_winters_fit(
 def weekly_revenue_forecast_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters seasonal forecast of weekly order revenue (yearly
     seasonality over the 52-week cycle), 7 weeks ahead."""
-    orders = load_table(spark, "orders", sf_dir)
-    weekly = orders.groupBy(
-        F.floor(
-            F.datediff(F.to_date("o_orderdate"), F.lit(_WEEK_EPOCH).cast("date")) / 7
-        )
-        .cast("int")
-        .alias("week")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue")
-    )
-    return holt_winters_fit(weekly, "week", "revenue")
+    return holt_winters_fit(_weekly_order_revenue(spark, sf_dir), "week", "revenue")
 
 
 def _hw_oracle_sql(period: int = HW_PERIOD, horizon: int = HORIZON) -> str:
@@ -1721,19 +1723,12 @@ def nelson_aalen(
     probability).  Exact integer (d, n_risk) per distinct duration,
     one running-sum window over calendar-bounded rows; the ratio sums
     are double but order-fixed (ordered window), so value-identical
-    across engines.  Censored spans leave the risk set without adding
-    hazard, exactly as in km_survival.
+    across engines.  The (d, n_risk) rows are ``_risk_table``'s, the
+    one risk table km_survival reads too.
     """
-    per_t = spans.groupBy(F.col(t_col).alias("t")).agg(
-        F.count(F.lit(1)).alias("c"), F.sum(event_col).alias("d")
-    )
-    total = per_t.agg(F.sum("c").alias("n_total"))
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     wc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        per_t.crossJoin(F.broadcast(total))
-        .withColumn("n_risk", F.col("n_total") - F.coalesce(F.sum("c").over(w), F.lit(0)))
-        .where(F.col("d") > 0)
+        _risk_table(spans, t_col, event_col)
         .select(
             "t",
             F.col("n_risk").cast("bigint").alias("n_risk"),
@@ -1750,22 +1745,9 @@ def nelson_aalen(
 
 
 def user_churn_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: Nelson-Aalen cumulative churn hazard over the same
-    censored lifetime spans as the KM face."""
-    ev = load_table(spark, "events", sf_dir)
-    spans = ev.groupBy("user_id").agg(
-        F.min(F.unix_micros("ts")).alias("first_us"),
-        F.max(F.unix_micros("ts")).alias("last_us"),
-    )
-    corpus = ev.agg(F.max(F.unix_micros("ts")).alias("end_us"))
-    gap_us = CHURN_GAP_DAYS * 86_400_000_000
-    spans = spans.crossJoin(F.broadcast(corpus)).select(
-        F.expr("(last_us - first_us) div 86400000000").alias("duration"),
-        F.expr(f"CASE WHEN last_us <= end_us - {gap_us} THEN 1 ELSE 0 END").alias(
-            "event"
-        ),
-    )
-    return nelson_aalen(spans)
+    """Driver query: Nelson-Aalen cumulative churn hazard over the
+    ``_churn_spans`` censored lifetimes, the KM face's input."""
+    return nelson_aalen(_churn_spans(spark, sf_dir))
 
 
 def _na_oracle_sql() -> str:
@@ -1810,22 +1792,9 @@ def churn_ab_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded risk table; the O/E/V sums are order-independent
     (plain SUM of per-t doubles), one row out.
     """
-    ev = load_table(spark, "events", sf_dir)
-    spans = ev.groupBy("user_id").agg(
-        F.min(F.unix_micros("ts")).alias("first_us"),
-        F.max(F.unix_micros("ts")).alias("last_us"),
-    )
-    corpus = ev.agg(F.max(F.unix_micros("ts")).alias("end_us"))
-    gap_us = CHURN_GAP_DAYS * 86_400_000_000
     spans = (
-        spans.crossJoin(F.broadcast(corpus))
-        .select(
-            "user_id",
-            F.expr("(last_us - first_us) div 86400000000").alias("t"),
-            F.expr(
-                f"CASE WHEN last_us <= end_us - {gap_us} THEN 1 ELSE 0 END"
-            ).alias("event"),
-        )
+        _churn_spans(spark, sf_dir)
+        .withColumnRenamed("duration", "t")
         .withColumn("arm", _arm(F.col("user_id")))
     )
     per_t = spans.groupBy("t").agg(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import _copurchase_pairs
 from ..sources.catalog import load_table
 
 # decimal cast applied to money/discount columns before aggregation
@@ -897,6 +898,35 @@ BASKET_MIN_COOC = 2
 BASKET_TOP = 50
 
 
+def _basket_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The basket faces' shared input: ``op``, the distinct (l_orderkey,
+    l_partkey) rows, and the co-purchase pairs with n_ab >=
+    BASKET_MIN_COOC joined to each part's order count, as
+    (part_b, part_a, n_ab, n_a, n_b)."""
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
+    # EAGER checkpoint: op feeds both self-join sides plus the part
+    # and total aggregates — without it each reference re-ran the
+    # lineitem scan + distinct shuffle (snapshot: 4-5 FileScans).
+    op = li.distinct().localCheckpoint(eager=True)
+    part_counts = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_part"))
+    pairs = (
+        _copurchase_pairs(op, BASKET_MIN_COOC)
+        .join(
+            part_counts.select(
+                F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a")
+            ),
+            "part_a",
+        )
+        .join(
+            part_counts.select(
+                F.col("l_partkey").alias("part_b"), F.col("n_part").alias("n_b")
+            ),
+            "part_b",
+        )
+    )
+    return op, pairs
+
+
 def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket analysis: part pairs that co-occur in the same
     order more often than chance, ranked by lift = P(a,b)/(P(a)P(b)).
@@ -911,41 +941,10 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broadcast.  Deterministic top-50 by (lift, n_ab, part ids) via
     TakeOrderedAndProject.
     """
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    # EAGER checkpoint: op feeds both self-join sides plus the part
-    # and total aggregates — without it each reference re-ran the
-    # lineitem scan + distinct shuffle (snapshot: 4-5 FileScans).
-    op = li.distinct().localCheckpoint(eager=True)
-    a, b = op.alias("a").hint("merge"), op.alias("b").hint("merge")
-    pair_counts = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= BASKET_MIN_COOC)
-    )
-    part_counts = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_part"))
+    op, pairs = _basket_pairs(spark, sf_dir)
     totals = op.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     return (
-        pair_counts.join(
-            part_counts.select(
-                F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a")
-            ),
-            "part_a",
-        )
-        .join(
-            part_counts.select(
-                F.col("l_partkey").alias("part_b"), F.col("n_part").alias("n_b")
-            ),
-            "part_b",
-        )
-        .crossJoin(F.broadcast(totals))
+        pairs.crossJoin(F.broadcast(totals))
         .select(
             "part_a",
             "part_b",
@@ -1491,46 +1490,16 @@ def part_cf_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts can't dominate the way raw co-counts or even lift's
     rare-pair bias do).
 
-    Same tractable plan as basket_part_affinity (pair fan-out bounded
-    by basket size squared inside one reused order-key exchange);
-    counts are exact integers, the cosine is the single DOUBLE step,
+    Reads the same ``_basket_pairs`` input as basket_part_affinity
+    (pair fan-out bounded by basket size squared inside one reused
+    order-key exchange); counts are exact integers, the cosine is the
+    single DOUBLE step,
     top-50 via TakeOrderedAndProject with full deterministic
     tie-break.
     """
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    # EAGER checkpoint: op feeds both self-join sides plus the part
-    # and total aggregates — without it each reference re-ran the
-    # lineitem scan + distinct shuffle (snapshot: 4-5 FileScans).
-    op = li.distinct().localCheckpoint(eager=True)
-    a, b = op.alias("a").hint("merge"), op.alias("b").hint("merge")
-    pair_counts = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= BASKET_MIN_COOC)
-    )
-    part_counts = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_part"))
+    _, pairs = _basket_pairs(spark, sf_dir)
     return (
-        pair_counts.join(
-            part_counts.select(
-                F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a")
-            ),
-            "part_a",
-        )
-        .join(
-            part_counts.select(
-                F.col("l_partkey").alias("part_b"), F.col("n_part").alias("n_b")
-            ),
-            "part_b",
-        )
-        .select(
+        pairs.select(
             "part_a",
             "part_b",
             "n_ab",
@@ -1751,22 +1720,10 @@ def basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    a, b = op.alias("a").hint("merge"), op.alias("b").hint("merge")
-    fpairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= t)
-    )
+    fpairs = _copurchase_pairs(op, t)
     fparts = (
-        fpairs.select(F.col("pa").alias("p"))
-        .unionAll(fpairs.select(F.col("pb").alias("p")))
+        fpairs.select(F.col("part_a").alias("p"))
+        .unionAll(fpairs.select(F.col("part_b").alias("p")))
         .distinct()
     )
     pruned = op.join(

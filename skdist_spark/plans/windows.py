@@ -518,18 +518,28 @@ def user_event_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markov transition counts between consecutive event types per
-    user timeline (sequence bigrams) — the secondary-sort pattern
-    expressed Spark-first: a lag window over (user_id, ts) instead of
-    repartitionAndSortWithinPartitions + imperative iteration."""
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(from_type, to_type, n): how often each event type follows
+    another on one user's timeline — the sequence bigrams, from a lag
+    window over (user_id, ts, event_id)."""
     ev = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         ev.withColumn("prev_type", F.lag("event_type").over(w))
         .where(F.col("prev_type").isNotNull())
         .groupBy(F.col("prev_type").alias("from_type"), F.col("event_type").alias("to_type"))
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Markov transition counts between consecutive event types per
+    user timeline (sequence bigrams) — the secondary-sort pattern
+    expressed Spark-first: a lag window over (user_id, ts) instead of
+    repartitionAndSortWithinPartitions + imperative iteration."""
+    return (
+        _transition_counts(spark, sf_dir)
+        .withColumnRenamed("n", "n_transitions")
         .orderBy("from_type", "to_type")
     )
 
@@ -539,17 +549,10 @@ def transition_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bigram transition counts — event_transitions normalized into a
     usable next-event predictor.  The row-sum denominator is a window
     over the 25-row aggregated matrix, not a second scan."""
-    ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    counts = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .where(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type").alias("from_type"), F.col("event_type").alias("to_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     w_from = Window.partitionBy("from_type")
     return (
-        counts.withColumn("row_total", F.sum("n").over(w_from))
+        _transition_counts(spark, sf_dir)
+        .withColumn("row_total", F.sum("n").over(w_from))
         .select(
             "from_type",
             "to_type",
@@ -1519,20 +1522,10 @@ def markov_predict_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores high; the overall row is the weighted average a monitoring
     alert would track).  One transition aggregation + a 25-row window.
     """
-    ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    counts = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .where(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     w_from = Window.partitionBy("from_type").orderBy(F.desc("n"), F.asc("to_type"))
     per_state = (
-        counts.withColumn("rn", F.row_number().over(w_from))
+        _transition_counts(spark, sf_dir)
+        .withColumn("rn", F.row_number().over(w_from))
         .groupBy("from_type")
         .agg(
             F.sum("n").alias("n_transitions"),

@@ -1458,8 +1458,9 @@ QUERIES["stream_psi_drift"] = stream_psi_drift
 
 def ingest_funnel_counts(docs: DataFrame, corpus_hashes: DataFrame) -> DataFrame:
     """Rule-drop counts for one batch of INCOMING documents: the
-    map-only quality rules of ``operators.text.filter_funnel`` plus a
-    dedup gate against the ALREADY-INGESTED corpus (md5 semi-join on
+    map-only quality rules of ``operators.text.filter_funnel`` (its
+    ``_funnel_signals`` and ``_funnel_first_fail``, so the two funnels
+    share one rule definition) plus a dedup gate against the ALREADY-INGESTED corpus (md5 semi-join on
     ``corpus_hashes``'s one ``text_hash`` column, the
     ``incremental_dedup`` posture — never new-vs-new).  First failing
     rule wins.  Returns (rule, n_dropped) for failing docs only — the
@@ -1467,19 +1468,12 @@ def ingest_funnel_counts(docs: DataFrame, corpus_hashes: DataFrame) -> DataFrame
     monitor, so streaming sums are bit-equal to one batch run by
     construction.
     """
-    from ..operators.text import _SPARK_WORDS
+    from ..operators.text import _SPARK_WORDS, _funnel_first_fail, _funnel_signals
 
     sig = (
         docs.select("doc_id", "text")
         .withColumn("wd", F.expr(_SPARK_WORDS))
-        .withColumn("n_words", F.expr("size(wd)"))
-        .withColumn(
-            "mwl", F.expr("CAST(length(replace(text, ' ', '')) AS DOUBLE) / size(wd)")
-        )
-        .withColumn(
-            "dr", F.expr("CAST(size(array_distinct(wd)) AS DOUBLE) / size(wd)")
-        )
-        .withColumn("text_hash", F.md5("text"))
+        .select("doc_id", *_funnel_signals(), F.md5("text").alias("text_hash"))
     )
     dup_ids = (
         sig.select("doc_id", "text_hash")
@@ -1487,12 +1481,8 @@ def ingest_funnel_counts(docs: DataFrame, corpus_hashes: DataFrame) -> DataFrame
         .select("doc_id")
         .withColumn("is_known", F.lit(True))
     )
-    first_fail = (
-        F.when(F.col("n_words") < 10, F.lit("too_short"))
-        .when(F.col("n_words") > 1000, F.lit("too_long"))
-        .when((F.col("mwl") < 2.0) | (F.col("mwl") > 12.0), F.lit("word_len"))
-        .when(F.col("dr") < 0.1, F.lit("low_diversity"))
-        .when(F.coalesce(F.col("is_known"), F.lit(False)), F.lit("corpus_dup"))
+    first_fail = _funnel_first_fail(
+        F.coalesce(F.col("is_known"), F.lit(False)), "corpus_dup"
     )
     return (
         sig.join(dup_ids, "doc_id", "left")
@@ -1920,7 +1910,8 @@ QUERIES["stream_ann_enrich"] = stream_ann_enrich
 def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming face of ``hll_portable_registers``: maintain the
     per-type portable-HLL register table as a streaming aggregation —
-    groupBy(event_type, bucket) MAX(rho) in complete mode, so each
+    groupBy(event_type, bucket) MAX(rho) over the batch face's own
+    ``_hll_rho`` register stage, in complete mode, so each
     micro-batch folds its rows into at most types x 256 register rows
     of state (the mergeability contract live: MAX is the merge).
 
@@ -1929,18 +1920,10 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     you can keep continuously fresh at 100 TB because state never
     exceeds the register grid no matter the throughput.
     """
-    from ..operators.sketches import HLL_M, _hll_rho_sql, hash_stage_exprs
+    from ..operators.sketches import _hll_rho
 
-    ev = _read_event_stream(spark, sf_dir).where(F.col("user_id").isNotNull())
-    hashed = ev.select("event_type", F.col("user_id").cast("bigint").alias("h"))
-    for expr in hash_stage_exprs("h", "spark"):
-        hashed = hashed.select("event_type", F.expr(expr).alias("h"))
     regs = (
-        hashed.select(
-            "event_type",
-            F.expr(f"CAST(h & {HLL_M - 1} AS INT)").alias("bucket"),
-            F.expr(_hll_rho_sql("(h >> 8)")).alias("rho"),
-        )
+        _hll_rho(_read_event_stream(spark, sf_dir))
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").cast("int").alias("reg"))
     )

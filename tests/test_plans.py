@@ -583,11 +583,29 @@ def test_event_lateness_profile_out_of_order_branch(spark, tmp_path):
         ("user_retention", "skdist_spark.plans.behavior", "cohort_retention"),
         ("user_tier_history", "skdist_spark.plans.behavior", "scd2_history"),
         ("events_funnel", "skdist_spark.plans.behavior", "_funnel_counts"),
+        # shared query inputs: one private builder per definition
+        ("basket_triples", "skdist_spark.plans.tpch", "_copurchase_pairs"),
+        ("part_cf_similarity", "skdist_spark.plans.tpch", "_basket_pairs"),
+        ("churn_ab_logrank", "skdist_spark.operators.tsa", "_churn_spans"),
+        ("user_churn_hazard", "skdist_spark.operators.tsa", "_risk_table"),
+        ("weekly_revenue_forecast_hw", "skdist_spark.operators.tsa", "_weekly_order_revenue"),
+        ("c4_quality_flags", "skdist_spark.operators.text", "_rule_ledger"),
+        ("doc_filter_funnel", "skdist_spark.operators.text", "_funnel_signals"),
+        ("doc_filter_funnel", "skdist_spark.operators.text", "_funnel_first_fail"),
+        ("markov_predict_eval", "skdist_spark.plans.windows", "_transition_counts"),
+        ("customer_ldiversity", "skdist_spark.operators.quality", "_customer_quasi"),
+        ("daily_kendall", "skdist_spark.operators.stats", "_daily_clicks_revenue"),
+        ("event_value_median_ci", "skdist_spark.operators.stats", "_event_value_micros"),
+        ("event_value_winsorized", "skdist_spark.operators.stats", "_group_ranks"),
+        ("doc_triangles", "skdist_spark.operators.graph", "_undirected"),
+        ("hll_portable_rollup", "skdist_spark.operators.sketches", "_hll_rho"),
     ],
 )
 def test_registry_query_computes_through_its_api(spark, sf_dir, monkeypatch, query, module, api):
-    """Each of these registry queries is its generic API plus a column
-    readout, so the DuckDB oracle that checks the query checks the API."""
+    """Each of these registry queries is its generic API, or the one
+    private builder of an input it shares with other faces, plus a
+    column readout, so the DuckDB oracle that checks the query checks
+    the API or builder."""
     import importlib
 
     import __spark_entry__ as entry_mod
@@ -600,5 +618,5 @@ def test_registry_query_computes_through_its_api(spark, sf_dir, monkeypatch, que
         return real(*args, **kwargs)
 
     monkeypatch.setattr(mod, api, spy)
-    entry_mod.queries()[query](spark, sf_dir)  # lazy build, no job
+    entry_mod.queries()[query](spark, sf_dir)  # build only, nothing collected
     assert calls == [api]

@@ -76,6 +76,83 @@ def test_km_survival_textbook(spark):
     assert abs(out[4]["survival"] - round(0.8 * (2 / 3), 6)) < 1e-9
 
 
+def test_nelson_aalen_textbook(spark):
+    # same toy: H(2) = 1/5, H(4) = 1/5 + 1/3
+    spans = spark.createDataFrame(
+        [(2, 1), (3, 0), (4, 1), (5, 0), (6, 0)], "duration INT, event INT"
+    )
+    out = {r["t"]: r for r in tsa.nelson_aalen(spans).collect()}
+    assert set(out) == {2, 4}
+    assert (out[2]["n_risk"], out[2]["d"], out[4]["n_risk"], out[4]["d"]) == (5, 1, 3, 1)
+    assert abs(out[2]["cum_hazard"] - 0.2) < 1e-9
+    assert abs(out[4]["cum_hazard"] - round(0.2 + 1 / 3, 6)) < 1e-9
+
+
+def test_churn_faces_match_oracles_with_churned_users(spark, tmp_path):
+    """The churn faces against their DuckDB oracles on an events table
+    where users do churn: the shipped test tables have none (no user is
+    inactive CHURN_GAP_DAYS before the corpus end), so there the KM and
+    hazard tables are empty and the log-rank and RMST rows read no
+    event.  Here both Knuth arms hold churned and censored users, with
+    tied durations, a last activity exactly on the churn cut-off and
+    durations that floor a fractional day."""
+    import datetime
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import compare_query
+
+    import __spark_entry__ as entry_mod
+
+    t0 = datetime.datetime(2024, 1, 1)
+    # (user_id, first day, last day); the corpus ends on day 60 at
+    # 02:00, so a last activity on day 53 at 02:00 is exactly the
+    # 7-day cut-off (churned) and day 54 is censored
+    users = [
+        (1, 0, 3), (2, 1, 4), (3, 0, 5), (4, 2, 12), (5, 5, 15), (6, 0, 20),
+        (7, 10, 30), (8, 3, 11), (9, 40, 45), (10, 30, 58), (11, 50, 59),
+        (12, 20, 60), (13, 55, 60), (14, 10, 57), (15, 45, 56), (16, 0, 60),
+        (17, 40, 53), (18, 46, 54),
+    ]
+    rows = []
+    for uid, first, last in users:
+        # even users start at 20:00, so their span floors to one day
+        # less than the day difference
+        start = t0 + datetime.timedelta(days=first, hours=20 if uid % 2 == 0 else 1)
+        end = t0 + datetime.timedelta(days=last, hours=2)
+        for ts in (start, start + (end - start) / 2, end):
+            rows.append((len(rows), uid, "click", ts, 1.0, "{}"))
+    pdf = pd.DataFrame(
+        rows, columns=["event_id", "user_id", "event_type", "ts", "value", "props"]
+    )
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    ts_idx = table.schema.get_field_index("ts")
+    table = table.set_column(ts_idx, "ts", table.column("ts").cast(pa.timestamp("us")))
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    sf_dir = str(tmp_path)
+
+    spans = {r["user_id"]: r for r in tsa._churn_spans(spark, sf_dir).collect()}
+    arms = {0: set(), 1: set()}
+    for uid, r in spans.items():
+        arms[((uid * tsa._KNUTH) % tsa._MOD32) % 2].add(r["event"])
+    assert arms == {0: {0, 1}, 1: {0, 1}}, arms
+    assert spans[17]["event"] == 1 and spans[18]["event"] == 0
+    assert (spans[4]["duration"], spans[5]["duration"]) == (9, 10)
+
+    oracle = entry_mod.oracle_sql()
+    faces = entry_mod.queries()
+    for name in ("user_churn_survival", "user_churn_hazard", "churn_ab_logrank", "user_churn_rmst"):
+        compare_query(spark, faces[name], oracle[name], sf_dir, f"{name}[churned]")
+    assert len(faces["user_churn_survival"](spark, sf_dir).collect()) > 1
+    assert len(faces["user_churn_hazard"](spark, sf_dir).collect()) > 1
+    (lr,) = faces["churn_ab_logrank"](spark, sf_dir).collect()
+    assert lr["o_a"] > 0 and lr["chi2"] is not None
+    (rmst,) = faces["user_churn_rmst"](spark, sf_dir).collect()
+    assert rmst["n_event_times"] > 1
+
+
 def test_km_risk_decreases_with_censoring(spark):
     spans = spark.createDataFrame(
         [(1, 1), (1, 0), (2, 1), (3, 1)], "duration INT, event INT"
